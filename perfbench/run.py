@@ -37,10 +37,8 @@ WORKLOADS = ("transit_stream", "batch_suite")
 # Workload sizes. "full" is the benchmark; "tiny" is for the benchmark's
 # own smoke tests.
 SCALES = {
-    "full": {"backlog_trips": 500, "chunk_trips": 3, "interval": 0.06,
-             "sf": 0.01, "slice_every": 48},
-    "tiny": {"backlog_trips": 300, "chunk_trips": 3, "interval": 0.06,
-             "sf": 0.001, "slice_every": 48},
+    "full": {"backlog_trips": 500, "sf": 0.01},
+    "tiny": {"backlog_trips": 300, "sf": 0.001},
 }
 
 JVM_OPTS = [
@@ -180,16 +178,11 @@ def transit_stream(a, scale, classpath, work):
     live = f"{work}/live"
     os.makedirs(live, exist_ok=True)
     gen = subprocess.Popen(
-        [sys.executable, os.path.join(BENCH_DIR, "transit_gen.py"),
-         "--topics", f"{live}/topics", "--staging", f"{live}/gen-staging",
-         "--ready", f"{live}/ready.json", "--go", f"{live}/go",
-         "--log", f"{live}/gen.jsonl", "--done", f"{live}/done.json",
+        [sys.executable, os.path.join(BENCH_DIR, "transit_gen.py"), "--dir", live,
          "--seed", str(a.seed), "--backlog-trips", str(scale["backlog_trips"]),
-         "--chunk-trips", str(scale["chunk_trips"]), "--interval", str(scale["interval"]),
          "--seconds", str(a.seconds)])
     try:
-        r = run_jvm(classpath, work, jvm_args(a, work) + [
-            "--live-dir", live, "--drain-ms", "60000"], timeout=160)
+        r = run_jvm(classpath, work, jvm_args(a, work) + ["--live-dir", live], timeout=160)
     finally:
         if wait_proc(gen, 5) is None:
             log("generator did not finish")
@@ -200,11 +193,12 @@ def transit_stream(a, scale, classpath, work):
     ready = json.loads(r["ready"])
     pubs = sorted((p for p in r["publishes"] if p[2] >= 0), key=lambda p: p[1])
 
-    latencies, lag_max = [], 0
+    latencies, hit_publishes, lag_max = [], set(), 0
     for c in chunks:
         hit = next((p for p in pubs if p[2] >= c["cum_trips"] and p[1] >= c["sent_ms"]), None)
         if hit is not None:
             latencies.append((hit[1] - c["due_ms"]) / 1e3)
+            hit_publishes.add(hit[1])
     for p in pubs:
         sent = max((c["cum_trips"] for c in chunks if c["sent_ms"] <= p[1]), default=ready["trips"])
         lag_max = max(lag_max, sent - p[2])
@@ -227,7 +221,8 @@ def transit_stream(a, scale, classpath, work):
         "cold_s": r["catchup_s"],
     }
     extra = {"warm_s": statistics.median(live_triggers) / 1e3 if live_triggers else None,
-             "latency_samples": len(latencies), "live_chunks": len(chunks),
+             "latency_samples": len(latencies), "latency_publishes": len(hit_publishes),
+             "live_chunks": len(chunks),
              "live_triggers": len(live_triggers), "input_lag_trips_max": lag_max,
              "gen_late_ms_max": done["late_max_ms"], "check_s": r["check_s"], "result": r}
     return attempted, failed, e2e, extra
@@ -253,8 +248,7 @@ def batch_suite(a, scale, classpath, work):
     import gen_tables
     data = f"{work}/data"
     gen_tables.generate(data, a.seed, scale["sf"])
-    r = run_jvm(classpath, work, jvm_args(a, work) + [
-        "--data", data, "--slice-every", str(scale["slice_every"])], timeout=160)
+    r = run_jvm(classpath, work, jvm_args(a, work) + ["--data", data], timeout=160)
     names, rows = r["queries"], r["rows"]
     t0 = time.time()
     oracle = duck_counts(data, names, r["oracle_sql"])
@@ -299,7 +293,6 @@ def main():
     ap.add_argument("--scale", choices=sorted(SCALES), default="full")
     ap.add_argument("--inject-wrong", action="store_true",
                     help="perturb one checked result (negative control)")
-    ap.add_argument("--keep", action="store_true", help="keep the work directory")
     a = ap.parse_args()
     t_start = time.time()
     load_start = loadavg()
@@ -319,8 +312,7 @@ def main():
             metrics = {n: {"value": e2e[n], "unit": u} for n, u in layers.END_TO_END_UNITS.items()}
             summary = None
     finally:
-        if not a.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     r = extra.pop("result")
     record = {"run_id": a.run_id, "workload": a.workload, "seed": a.seed,
               "seconds": a.seconds, "trace": a.trace, "nproc": nproc(),

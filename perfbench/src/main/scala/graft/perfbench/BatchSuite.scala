@@ -29,7 +29,7 @@ object BatchSuite {
     val data = args("data")
     val queries = SparkEntry.queries
     val names = new scala.util.Random(args.long("seed"))
-      .shuffle(slice(queries.keys.toSeq, args.int("slice-every"))).toVector
+      .shuffle(slice(queries.keys.toSeq)).toVector
 
     // ---- 1. set-up -------------------------------------------------------
     var spark: SparkSession = null
@@ -118,12 +118,12 @@ object BatchSuite {
     if (n.matches("q[0-9]+_.*") || n.startsWith("latest_")) "transit"
     else n.takeWhile(_ != '_')
 
-  /** Every transit query, plus every `every`-th query in name order within
-    * each other family. */
-  def slice(all: Seq[String], every: Int): Seq[String] =
+  /** Every transit query, plus the first query in name order of each other
+    * family. */
+  def slice(all: Seq[String]): Seq[String] =
     all.sorted.groupBy(family).toSeq.sortBy(_._1).flatMap {
       case ("transit", ns) => ns
-      case (_, ns) => ns.zipWithIndex.collect { case (n, i) if i % every == 0 => n }
+      case (_, ns) => ns.take(1)
     }
 
   /** Single-thread direct calls of the public per-row kernels of

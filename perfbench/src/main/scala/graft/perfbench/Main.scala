@@ -30,9 +30,12 @@ object Main {
     Args(a.grouped(2).map(p => p(0).drop(2) -> p(1)).toMap)
   }
 
-  /** A local session configured like the program's own entry points
-    * (`Bench`): UTC, the graft extensions, engine shuffle defaults, with
-    * every temporary directory inside the run's work directory. */
+  /** A local session configured like `graft.Bench`'s: UTC, the graft
+    * extensions and the engine's shuffle defaults, with every temporary
+    * directory inside the run's work directory. Both workloads use it.
+    * `MainApp.main` does not set the shuffle defaults and so keeps Spark's
+    * 200 shuffle (and state-store) partitions; with those, a transit_stream
+    * run on four cores does not finish within its time limit. */
   def session(args: Args, artifactsDir: String): SparkSession = {
     val work = args("work")
     val cores = args.int("cores")

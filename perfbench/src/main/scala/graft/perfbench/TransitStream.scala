@@ -1,9 +1,11 @@
 package graft.perfbench
 
 import java.io.File
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -24,16 +26,21 @@ import graft.streaming.ResultPublisher
   *      the job for real, drain it, publish;
   *   3. live: signal the generator, then publish after every completed
   *      `union_runner` trigger until every chunk is published;
-  *   4. a final drain and publish;
+  *   4. a final drain and publish. The generator's last chunk carries a
+  *      far-future sentinel trip, so by now the watermark has closed every
+  *      window. One sentinel is enough: once the watermark passes a
+  *      window's end, the windowed query runs a batch without new data that
+  *      emits the window, and `processAllAvailable` returns only after it;
   *   5. check: decode the final publish of every `projeto3_*` topic with
   *      `Envelope.unwrap` and compare it with the batch `TransitQueries`
-  *      over the same topic files. The windowed queries (q11, q12) are
-  *      compared on the windows the watermark has closed, as in
-  *      `StreamingParitySpec`.
+  *      over the same topic files, as `StreamingParitySpec` does.
   */
 object TransitStream {
 
   private val TotalTopic = "projeto3_total_passengers"
+  /** How long the live loop waits, after the live phase, for the last chunk
+    * to be published. */
+  private val DrainMs = 60000L
   // the payload sits JSON-escaped inside the envelope's value string
   private val TotalRe = "payload[^0-9]*totalPassengers[^0-9]*([0-9]+)".r
 
@@ -135,16 +142,19 @@ object TransitStream {
     val catchupS = (System.nanoTime() - t0) / 1e9
 
     // ---- 3. live ---------------------------------------------------------------
-    Files.writeString(Paths.get(s"$live/go"), "go")
     val union = queries.find(_.name == "union_runner").get
-    val catchupBatch = Option(union.lastProgress).map(_.batchId).getOrElse(-1L)
+    // the last union trigger that read input (an idle trigger's progress
+    // carries the id of the next batch)
+    def lastDataBatch(): Long =
+      union.recentProgress.filter(_.numInputRows > 0).map(_.batchId).maxOption.getOrElse(-1L)
+    val catchupBatch = lastDataBatch()
+    Files.writeString(Paths.get(s"$live/go"), "go")
     var seenBatch = catchupBatch
     val publishes = mutable.ArrayBuffer.empty[(Double, Double, Long)]
     val liveStart = System.currentTimeMillis()
-    val hardStop = liveStart + (seconds * 1000).toLong + args.long("drain-ms")
+    val hardStop = liveStart + (seconds * 1000).toLong + DrainMs
     var doneTrips = -1L
     var lastTotal = catchup._3
-    var lastPublishEnd = System.currentTimeMillis()
     var finished = false
     while (!finished && System.currentTimeMillis() < hardStop) {
       queries.find(_.exception.isDefined).foreach(q => throw q.exception.get)
@@ -152,18 +162,13 @@ object TransitStream {
         doneTrips = "\"trips\": ([0-9]+)".r
           .findFirstMatchIn(scala.io.Source.fromFile(s"$live/done.json").mkString)
           .map(_.group(1).toLong).get
-      val lp = union.lastProgress
-      val triggered = lp != null && lp.batchId > seenBatch
-      // after the last chunk, a native query (q9) may finish after the
-      // union runner's last trigger: publish on a short timer as well
-      val settle = doneTrips >= 0 && System.currentTimeMillis() - lastPublishEnd > 250
-      if (triggered || settle) {
-        if (triggered) seenBatch = lp.batchId
+      val b = lastDataBatch()
+      if (b > seenBatch) {
+        seenBatch = b
         val p = publishOnce("live")
-        lastPublishEnd = p._2.toLong
         if (p._3 >= 0) { publishes += p; lastTotal = p._3 }
-        finished = doneTrips >= 0 && lastTotal >= doneTrips
       } else Thread.sleep(5)
+      finished = doneTrips >= 0 && lastTotal >= doneTrips
     }
 
     val liveTriggerMs = union.recentProgress.toSeq
@@ -226,40 +231,42 @@ object TransitStream {
       "q12_window_least_occupied_type" -> TransitQueries.q12(routes, trips),
       "q13_most_occupied_operator" -> TransitQueries.q13(routes, trips))
     import spark.implicits._
-    ResultPublisher.egress.toSeq.sortBy(_._1).map { case (name, e) =>
-      // windowed answers in window order (toWire drops the window column)
-      val result = if (batch(name).columns.contains("window_start"))
-        batch(name).orderBy("window_start") else batch(name)
-      val expectedWire = ResultPublisher.toWire(name, result)
-      val payload = batch(name).select(e.payload: _*).schema
-      val expected = Envelope.unwrap(expectedWire, payload).drop("declared_fields")
-        .collect().toSeq.map(rowKey)
-      val actualLines = finalFiles.get(e.topic).toSeq.flatten
-        .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
-      val actualRaw = spark.read.schema("key string, value string")
-        .json(actualLines.toDS())
-      val actual = Envelope.unwrap(actualRaw, payload).drop("declared_fields")
-        .collect().toSeq.map(rowKey)
-      val exp0 = if (injectWrong && name == "q9_total_passengers")
-        expected.map(r => r.replaceAll("[0-9]+$", "-1")) else expected
-      // q11/q12 publish one record per window the watermark has closed,
-      // under a constant key; windows close in time order, so the stream's
-      // n records are the batch answer's first n windows (the last, still
-      // open window is not emitted yet)
-      val windowed = name == "q11_window_top_type" || name == "q12_window_least_occupied_type"
-      val exp = if (windowed) exp0.take(actual.size) else exp0
-      val msg =
-        if (windowed && actual.size < exp0.size - 2)
-          s"${actual.size} closed windows published, batch has ${exp0.size} windows"
-        // a q12 window closed during the live phase used the capacity
-        // folded so far (TransitStreamingJob.processWindowBatch), so only
-        // its window count is comparable
-        else if (name == "q12_window_least_occupied_type") ""
-        else if (sameRows(exp, actual)) ""
-        else s"${actual.size} records differ from the batch's ${exp.size}: " +
-          s"${actual.sorted.take(3).mkString(";")} vs ${exp.sorted.take(3).mkString(";")}"
-      e.topic -> msg
-    }.toMap
+    // the comparisons are independent and each is a few small jobs: run
+    // them on as many threads as the session has cores
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      spark.sparkContext.defaultParallelism)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(ResultPublisher.egress.toSeq.sortBy(_._1)) {
+      case (name, e) => Future {
+        // windowed answers in window order (toWire drops the window column)
+        val result = if (batch(name).columns.contains("window_start"))
+          batch(name).orderBy("window_start") else batch(name)
+        val expectedWire = ResultPublisher.toWire(name, result)
+        val payload = batch(name).select(e.payload: _*).schema
+        val expected = Envelope.unwrap(expectedWire, payload).drop("declared_fields")
+          .collect().toSeq.map(rowKey)
+        val actualLines = finalFiles.get(e.topic).toSeq.flatten
+          .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
+        val actualRaw = spark.read.schema("key string, value string")
+          .json(actualLines.toDS())
+        val actual = Envelope.unwrap(actualRaw, payload).drop("declared_fields")
+          .collect().toSeq.map(rowKey)
+        val exp = if (injectWrong && name == "q9_total_passengers")
+          expected.map(r => r.replaceAll("[0-9]+$", "-1")) else expected
+        // the sentinel has closed every window, so q11 and q12 publish one
+        // record per window of the batch answer. A q12 window closed before
+        // the last route arrived used the capacity folded so far
+        // (TransitStreamingJob.processWindowBatch), so only its window count
+        // is comparable
+        val msg =
+          if (name == "q12_window_least_occupied_type" && actual.size == exp.size) ""
+          else if (name != "q12_window_least_occupied_type" && sameRows(exp, actual)) ""
+          else s"${actual.size} records differ from the batch's ${exp.size}: " +
+            s"${actual.sorted.take(3).mkString(";")} vs ${exp.sorted.take(3).mkString(";")}"
+        e.topic -> msg
+      }
+    }, Duration.Inf).toMap
+    finally pool.shutdown()
   }
 
   /** A record as one string; doubles to nine significant digits, so sums

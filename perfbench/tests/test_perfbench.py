@@ -1,7 +1,7 @@
 """The benchmark's own tests.
 
 Each workload runs at the tiny scale (`--scale tiny`: sf0.001 tables, a
-600-trip backlog and a two-second live phase):
+300-trip backlog and a two-second live phase):
 
   * a traced run must be correct and emit every per-layer metric of
     BENCHMARK.json with its unit;

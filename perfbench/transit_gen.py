@@ -9,17 +9,27 @@ recipe of `sources.ScenarioGenerator`: five routes per two simulated minutes
 `Operator_0..4`), one trip per ten simulated seconds copying a route drawn
 from the latest 100, passengers `Passenger_0..999`.
 
-Phases:
+Every file lives under `--dir`: the topics in `topics/`, and the files
+that pace the run beside them. Phases:
   1. backlog: `--backlog-trips` trips (and their routes) are written at
-     once, then the `--ready` file appears;
-  2. live: after the `--go` file appears, one chunk of `--chunk-trips` trips
-     is due every `--interval` seconds for `--seconds` seconds, whether or
-     not the system keeps up. Each chunk is written to a staging directory
-     and renamed into the topic, so a reader never sees half a file. Its
-     due and send times go to the `--log` file as JSON lines;
-  3. the `--done` file records the totals.
+     once, then `ready.json` appears;
+  2. live: after the benchmark creates `go`, one chunk of CHUNK_TRIPS trips
+     is due every INTERVAL_S seconds for `--seconds` seconds, whether or not
+     the system keeps up. Each chunk is written to a staging directory and
+     renamed into the topic, so a reader never sees half a file. Its due
+     and send times go to `gen.jsonl` as JSON lines; `done.json` then
+     records the totals.
 
-Usage: python3 transit_gen.py --topics DIR --staging DIR --seed N ...
+The last chunk also carries a sentinel (as in `StreamingParitySpec`): a
+trip a day past the last one, with a null transport type. It advances the
+0-second watermark past every real window, so the windowed query emits
+them all and the check can compare every window; the null type keeps it
+out of the windowed counts. It counts toward the passenger totals, and the
+batch side of the check reads it too. It rides in the last chunk rather
+than after the live phase because a trigger of its own would add about
+ten seconds to every run.
+
+Usage: python3 transit_gen.py --dir DIR --seed N --backlog-trips N --seconds S
 """
 import argparse
 import json
@@ -29,6 +39,11 @@ import time
 
 TYPES = ["Bus", "Taxi", "Train", "Metro", "Scooter"]
 BASE_S = 1704096000  # 2024-01-01T08:00:00Z, as in ScenarioGenerator
+CHUNK_TRIPS = 3  # trips per live chunk
+INTERVAL_S = 0.06  # one live chunk is due every INTERVAL_S seconds
+GO_TIMEOUT_S = 300.0  # longest wait for the benchmark's go signal
+SENTINEL = {"tripId": "Trip_sentinel", "routeId": "Route_1", "origin": "z",
+            "destination": "z", "transportType": None, "passengerName": "Passenger_0"}
 
 
 def iso(sim_s):
@@ -87,17 +102,17 @@ def raw_lines(records, key_field):
                    for rec, ts in records)
 
 
-def publish(staging, topics, topic, name, text):
-    tmp = os.path.join(staging, f"{topic}-{name}")
+def publish(d, topic, name, text):
+    tmp = os.path.join(d, "gen-staging", f"{topic}-{name}")
     with open(tmp, "w") as f:
         f.write(text)
-    os.rename(tmp, os.path.join(topics, topic, name))
+    os.rename(tmp, os.path.join(d, "topics", topic, name))
 
 
-def write_chunk(a, name, routes, trips):
+def write_chunk(d, name, routes, trips):
     if routes:
-        publish(a.staging, a.topics, "Routes_topic", name, raw_lines(routes, "routeId"))
-    publish(a.staging, a.topics, "Trips_topic", name, raw_lines(trips, "tripId"))
+        publish(d, "Routes_topic", name, raw_lines(routes, "routeId"))
+    publish(d, "Trips_topic", name, raw_lines(trips, "tripId"))
 
 
 def write_json(path, obj):
@@ -109,41 +124,39 @@ def write_json(path, obj):
 
 def main():
     ap = argparse.ArgumentParser()
-    for flag in ("--topics", "--staging", "--ready", "--go", "--log", "--done"):
-        ap.add_argument(flag, required=True)
+    ap.add_argument("--dir", required=True)
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--backlog-trips", type=int, required=True)
-    ap.add_argument("--chunk-trips", type=int, required=True)
-    ap.add_argument("--interval", type=float, required=True)
     ap.add_argument("--seconds", type=float, required=True)
-    ap.add_argument("--go-timeout", type=float, default=300.0)
     a = ap.parse_args()
-    for t in ("Routes_topic", "Trips_topic"):
-        os.makedirs(os.path.join(a.topics, t), exist_ok=True)
-    os.makedirs(a.staging, exist_ok=True)
+    d = a.dir
+    for sub in ("topics/Routes_topic", "topics/Trips_topic", "gen-staging"):
+        os.makedirs(os.path.join(d, sub), exist_ok=True)
 
     sc = Scenario(a.seed)
     routes, trips = sc.next_trips(a.backlog_trips)
-    write_chunk(a, "backlog.json", routes, trips)
-    write_json(a.ready, {"trips": len(trips), "routes": len(routes)})
+    write_chunk(d, "backlog.json", routes, trips)
+    write_json(os.path.join(d, "ready.json"), {"trips": len(trips), "routes": len(routes)})
     n_routes, n_trips = len(routes), len(trips)
 
-    limit = time.time() + a.go_timeout
-    while not os.path.exists(a.go):
+    limit = time.time() + GO_TIMEOUT_S
+    while not os.path.exists(os.path.join(d, "go")):
         if time.time() > limit:
             raise SystemExit("no go signal from the benchmark")
         time.sleep(0.005)
     t0 = time.time()
-    n_chunks = max(1, int(round(a.seconds / a.interval)))
+    n_chunks = max(1, int(round(a.seconds / INTERVAL_S)))
     late_max = 0.0
-    with open(a.log, "w") as log:
+    with open(os.path.join(d, "gen.jsonl"), "w") as log:
         for k in range(n_chunks):
-            due = t0 + k * a.interval
+            due = t0 + k * INTERVAL_S
             wait = due - time.time()
             if wait > 0:
                 time.sleep(wait)
-            routes, trips = sc.next_trips(a.chunk_trips)
-            write_chunk(a, f"chunk-{k:05d}.json", routes, trips)
+            routes, trips = sc.next_trips(CHUNK_TRIPS)
+            if k == n_chunks - 1:
+                trips.append((SENTINEL, BASE_S + sc.trip_no * 10 + 86400))
+            write_chunk(d, f"chunk-{k:05d}.json", routes, trips)
             sent = time.time()
             n_routes += len(routes)
             n_trips += len(trips)
@@ -152,9 +165,9 @@ def main():
                                   "sent_ms": sent * 1e3, "trips": len(trips),
                                   "routes": len(routes), "cum_trips": n_trips}) + "\n")
             log.flush()
-    write_json(a.done, {"chunks": n_chunks, "trips": n_trips, "routes": n_routes,
-                        "last_sim_s": BASE_S + sc.trip_no * 10,
-                        "late_max_ms": late_max * 1e3})
+    write_json(os.path.join(d, "done.json"),
+               {"chunks": n_chunks, "trips": n_trips, "routes": n_routes,
+                "late_max_ms": late_max * 1e3})
 
 
 if __name__ == "__main__":
