@@ -18,6 +18,7 @@ perfbench/README.md.
 import argparse
 import hashlib
 import json
+import math
 import os
 import shutil
 import statistics
@@ -126,6 +127,13 @@ def loadavg():
         return [float(x) for x in f.read().split()[:3]]
 
 
+def steal_s():
+    """CPU time the hypervisor took from this machine's CPUs since boot."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK") if len(fields) > 8 else 0.0
+
+
 def nproc():
     return len(os.sched_getaffinity(0))
 
@@ -165,13 +173,47 @@ def run_jvm(classpath, work, argv, timeout):
         return json.load(f)
 
 
+def incomplete_beta(a, b, x):
+    """The regularized incomplete beta function I_x(a, b), by its continued
+    fraction (modified Lentz)."""
+    if x <= 0.0 or x >= 1.0:
+        return max(0.0, min(1.0, x))
+    if x > (a + 1.0) / (a + b + 2.0):
+        return 1.0 - incomplete_beta(b, a, 1.0 - x)
+    front = math.exp(math.lgamma(a + b) - math.lgamma(a) - math.lgamma(b)
+                     + a * math.log(x) + b * math.log1p(-x)) / a
+    tiny = 1e-300
+
+    def step(num, c, d):
+        d = 1.0 + num * d
+        d = 1.0 / (d if abs(d) > tiny else tiny)
+        c = 1.0 + num / c
+        return (c if abs(c) > tiny else tiny), d
+
+    c, d = 1.0, 1.0 - (a + b) * x / (a + 1.0)
+    d = 1.0 / (d if abs(d) > tiny else tiny)
+    f = d
+    for m in range(1, 400):
+        c, d = step(m * (b - m) * x / ((a + 2 * m - 1) * (a + 2 * m)), c, d)
+        f *= c * d
+        c, d = step(-(a + m) * (a + b + m) * x / ((a + 2 * m) * (a + 2 * m + 1)), c, d)
+        f *= c * d
+        if abs(c * d - 1.0) < 1e-12:
+            break
+    return front * f
+
+
 def percentile(xs, q):
-    """Linear-interpolated percentile of a non-empty list, q in [0, 100]."""
+    """The Harrell-Davis estimate of the q-th percentile (q in (0, 100)) of a
+    non-empty list: a weighted mean of all order statistics, with weights
+    from the Beta(p(n+1), (1-p)(n+1)) distribution. With few samples (the
+    22 queries of batch_suite) it moves far less with the noise of the
+    samples next to the percentile than a single order statistic does."""
     s = sorted(xs)
-    k = (len(s) - 1) * q / 100.0
-    lo = int(k)
-    hi = min(lo + 1, len(s) - 1)
-    return s[lo] + (s[hi] - s[lo]) * (k - lo)
+    n, p = len(s), q / 100.0
+    a, b = p * (n + 1), (1.0 - p) * (n + 1)
+    cdf = [incomplete_beta(a, b, i / n) for i in range(n + 1)]
+    return sum((cdf[i + 1] - cdf[i]) * x for i, x in enumerate(s))
 
 
 def transit_stream(a, scale, classpath, work):
@@ -273,6 +315,12 @@ def batch_suite(a, scale, classpath, work):
         "cold_s": r["cold_s"],
     }
     extra = {"warm_s": warm_s, "queries": len(names), "warm_passes": len(r["warm_s"]),
+             "query_cold_s": {n: sum(t) for n, t in zip(names, r["cold"])},
+             "query_warm_s": {n: [sum(w[i]) for w in r["warm"]] for i, n in enumerate(names)},
+             "cold_jit_s": r["cold_jit_ms"] / 1e3,
+             "warm_jit_s": [x / 1e3 for x in r["warm_jit_ms"]],
+             "warm_gc_s": [x / 1e3 for x in r["warm_gc_ms"]],
+             "cold_codegens": r["cold_codegens"], "warm_codegens": r["warm_codegens"],
              "no_oracle": sum(1 for n in names if oracle[n] is None),
              "duckdb_s": duck_s, "result": r}
     return len(names), failed, e2e, extra
@@ -295,7 +343,7 @@ def main():
                     help="perturb one checked result (negative control)")
     a = ap.parse_args()
     t_start = time.time()
-    load_start = loadavg()
+    load_start, steal_start = loadavg(), steal_s()
     classpath, stamp = build()
     a.run_id = f"{a.workload}-{a.seed}-{os.getpid()}-{int(time.time())}"
     work = os.path.join(ROOT, ".bench_build", "runs", a.run_id)
@@ -317,6 +365,7 @@ def main():
     record = {"run_id": a.run_id, "workload": a.workload, "seed": a.seed,
               "seconds": a.seconds, "trace": a.trace, "nproc": nproc(),
               "loadavg_start": load_start, "loadavg_end": loadavg(),
+              "steal_s": steal_s() - steal_start,
               "jvm_flags": r["jvm_flags"], "git_commit": git_commit(), "source_stamp": stamp,
               "end_to_end": e2e, "peak_rss_mb": r["peak_rss_kb"] / 1024.0, **extra,
               "wall_s": time.time() - t_start, "trace_summary": summary}

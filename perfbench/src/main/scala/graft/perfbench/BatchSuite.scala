@@ -1,5 +1,9 @@
 package graft.perfbench
 
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,6 +27,19 @@ import graft.sources.Tables
 object BatchSuite {
 
   final case class Timing(constructS: Double, actionS: Double)
+
+  /** Wall seconds of a pass, its queries' timings, the JIT compile and GC
+    * milliseconds the JVM spent during it, and the number of classes Spark
+    * generated and compiled in it (run.py records these so a noisy run can
+    * be told apart from a slow one). */
+  final case class Pass(seconds: Double, timings: Seq[Timing], jitMs: Long, gcMs: Long,
+                        codegens: Long)
+
+  private def jitMs(): Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+  private def codegens(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def gcMs(): Long =
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
   def run(args: Main.Args, trace: Trace): Seq[(String, Any)] = {
     val work = args("work")
@@ -70,23 +87,23 @@ object BatchSuite {
           Timing(Double.NaN, Double.NaN)
       }
 
-    def pass(kind: String): (Double, Seq[Timing]) = {
-      val t0 = System.nanoTime()
+    def pass(kind: String): Pass = {
+      val (j0, g0, c0, t0) = (jitMs(), gcMs(), codegens(), System.nanoTime())
       val ts = trace.span("pass", kind) { names.map(n => timeQuery(kind, n)) }
-      ((System.nanoTime() - t0) / 1e9, ts)
+      Pass((System.nanoTime() - t0) / 1e9, ts, jitMs() - j0, gcMs() - g0, codegens() - c0)
     }
 
     // ---- 2. cold pass --------------------------------------------------------
     val builds0 = graft.engine.Artifacts.buildsRun.get()
-    val (coldS, cold) = pass("cold")
+    val cold = pass("cold")
     val artifactBuilds = graft.engine.Artifacts.buildsRun.get() - builds0
     val artifactBuildS = graft.engine.Artifacts.buildSeconds.values.sum
 
     // ---- 3. warm passes, as many as fit in --seconds (at least one) ------------
     val warmStart = System.nanoTime()
-    val warm = scala.collection.mutable.ArrayBuffer.empty[(Double, Seq[Timing])]
+    val warm = scala.collection.mutable.ArrayBuffer.empty[Pass]
     def elapsed = (System.nanoTime() - warmStart) / 1e9
-    while (warm.isEmpty || elapsed + warm.map(_._1).sum / warm.size <= args.double("seconds"))
+    while (warm.isEmpty || elapsed + warm.map(_.seconds).sum / warm.size <= args.double("seconds"))
       warm += pass("warm")
 
     // ---- 4. kernels (traced runs, untimed) ---------------------------------
@@ -101,10 +118,15 @@ object BatchSuite {
       "queries" -> names,
       "families" -> names.map(family),
       "oracle_sql" -> names.map(n => SparkEntry.oracleSql.getOrElse(n, "")),
-      "cold_s" -> coldS,
-      "cold" -> timings(cold),
-      "warm_s" -> warm.map(_._1),
-      "warm" -> warm.map(w => timings(w._2)),
+      "cold_s" -> cold.seconds,
+      "cold" -> timings(cold.timings),
+      "cold_jit_ms" -> cold.jitMs,
+      "warm_s" -> warm.map(_.seconds),
+      "warm" -> warm.map(w => timings(w.timings)),
+      "warm_jit_ms" -> warm.map(_.jitMs),
+      "warm_gc_ms" -> warm.map(_.gcMs),
+      "cold_codegens" -> cold.codegens,
+      "warm_codegens" -> warm.map(_.codegens),
       "rows" -> rowsOut,
       "errors" -> errors.toMap,
       "artifact_builds" -> artifactBuilds,

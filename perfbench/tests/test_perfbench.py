@@ -72,6 +72,17 @@ class BenchmarkTest(unittest.TestCase):
                 for m in out["metrics"].values():
                     self.assertGreater(m["value"], 0)
 
+    def test_percentile_is_the_harrell_davis_estimate(self):
+        sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+        import run as bench
+        self.assertAlmostEqual(bench.incomplete_beta(2, 3, 0.4), 0.5248)
+        self.assertAlmostEqual(bench.incomplete_beta(0.5, 0.5, 0.9), 0.7951672353)
+        self.assertAlmostEqual(bench.percentile([5, 1, 4, 2, 3], 50), 3.0)
+        self.assertAlmostEqual(bench.percentile([7.0], 90), 7.0)
+        # with many samples the estimate approaches the sample percentile
+        xs = list(range(1001))
+        self.assertAlmostEqual(bench.percentile(xs, 90), 900.0, delta=1.0)
+
     def test_fails_without_the_program(self):
         with tempfile.TemporaryDirectory() as d:
             shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), d)
