@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
@@ -101,8 +103,12 @@ object MainApp {
     val job = TransitStreamingJob.fromTopics(
       spark, ref("Routes_topic"), ref("Trips_topic"), conf.stateDir)
     val queries = job.startAll(conf.checkpoint)
+    // serialised: the periodic publisher and the final flush may overlap,
+    // and two concurrent publishAll runs would append the same generation
+    // twice into topic directories that share one `_temporary` commit dir
+    val lock = new Object
     var publishedAt = -1L
-    val publish = () => {
+    val publish = () => lock.synchronized {
       val m = job.store.mutationCount
       if (m != publishedAt) {
         ResultPublisher.publishAll(job.store, ref)
@@ -123,14 +129,15 @@ object MainApp {
     // wide-start AQE sizing unless the deployment set one (engine.Tuning)
     graft.engine.Tuning.ensureWideStart(spark)
     val (_, queries, publish) = wire(spark, conf)
+    // woken by a latch, not Thread.interrupt: an interrupt landing inside
+    // a publish would abort its Spark write halfway
+    val stop = new CountDownLatch(1)
     val publisher = new Thread(() => {
-      try {
-        while (queries.exists(_.isActive)) {
-          Thread.sleep(conf.publishEverySec * 1000L)
-          try publish()
-          catch { case NonFatal(e) => e.printStackTrace() }
-        }
-      } catch { case _: InterruptedException => Thread.currentThread().interrupt() }
+      while (!stop.await(conf.publishEverySec, TimeUnit.SECONDS) &&
+        queries.exists(_.isActive)) {
+        try publish()
+        catch { case NonFatal(e) => e.printStackTrace() }
+      }
     }, "graft-publisher")
     publisher.setDaemon(true)
     publisher.start()
@@ -138,6 +145,8 @@ object MainApp {
     finally {
       // one query failing must not leave the others running headless
       queries.foreach(q => try q.stop() catch { case NonFatal(_) => () })
+      stop.countDown()
+      publisher.join() // let an in-flight periodic publish finish first
       publish() // final flush of the last maintained state
     }
   }

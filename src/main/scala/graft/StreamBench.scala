@@ -138,8 +138,9 @@ object StreamBench {
     val in = MemoryStream[(Long, String)]
     var n = 0L
     withCkpt("sb-dedup-") { ckpt =>
-      val q = StreamingDedup.run(in.toDF().toDF("doc_id", "text"), index,
-        ckpt) { (_, verdicts) =>
+      val q = StreamingScorer.run("graft_streaming_dedup",
+        in.toDF().toDF("doc_id", "text"), ckpt)(
+        Dedup.probeIndex(index, _)) { (_, verdicts) =>
         n += verdicts.count()
       }
       val (_, sec) = time {
@@ -175,11 +176,12 @@ object StreamBench {
     (index, probe)
   }
 
-  /** BQ ANN serving probe ([[graft.streaming.StreamingHammingProbe]]): a
-    * query-vector stream answered per trigger against a prebuilt
-    * packed-sign index — the online-serving throughput of the
-    * binary-quantization tier. `rows` counts queries SERVED (each
-    * answered with its full exact-reranked top-k inside its trigger). */
+  /** BQ ANN serving probe ([[graft.operators.Similarity.probeHamming]] on
+    * [[graft.streaming.StreamingScorer]]): a query-vector stream answered
+    * per trigger against a prebuilt packed-sign index — the
+    * online-serving throughput of the binary-quantization tier. `rows`
+    * counts queries SERVED (each answered with its full exact-reranked
+    * top-k inside its trigger). */
   private def annProbeLeg(spark: SparkSession,
                           index: graft.operators.Similarity.BqIndex,
                           probe: Seq[(Long, Seq[Double], Double)],
@@ -192,8 +194,9 @@ object StreamBench {
     // query gets exactly TopK rows — a plain count avoids paying an extra
     // distinct shuffle per trigger inside the measured window
     withCkpt("sb-ann-") { ckpt =>
-      val q = StreamingHammingProbe.run(in.toDF().toDF("query_id", "qv", "qn"),
-        index, ckpt) { (_, topk) =>
+      val q = StreamingScorer.run("graft_streaming_bq",
+        in.toDF().toDF("query_id", "qv", "qn"), ckpt)(
+        graft.operators.Similarity.probeHamming(index, _)) { (_, topk) =>
         n += topk.count() / graft.operators.Similarity.TopK
       }
       val (_, sec) = time {

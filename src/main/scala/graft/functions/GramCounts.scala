@@ -76,6 +76,11 @@ object GramCounts {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
+  /** Initial hash-map capacity for `n` distinct-key slots: 2n, capped at
+    * 2^16. Saturates instead of overflowing (`n * 2` is negative past
+    * 2^30), and shared with [[HashEmbed.ofText]]. */
+  private[functions] def capacityHint(n: Int): Int = math.min(n, 1 << 15) * 2
+
   /** Shared by eval and generated code: one byte scan for the space
     * boundaries, one counting pass over the gram slots. Gram strings wrap
     * ranges of this call's own byte copy (`getBytes`), so no per-gram
@@ -97,7 +102,7 @@ object GramCounts {
     starts(nToks) = len + 1
     val slots = nToks - n + 1
     val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]](
-      math.min(slots * 2, 1 << 16))
+      capacityHint(slots))
     var s = 0
     while (s < slots) {
       val from = starts(s)
@@ -155,7 +160,7 @@ object GramCounts {
     ends(nToks - 1) = len
     val slots = nToks - n + 1
     val counts = new java.util.LinkedHashMap[UTF8String, Array[Long]](
-      math.min(slots * 2, 1 << 16))
+      capacityHint(slots))
     var s = 0
     while (s < slots) {
       val from = starts(s)

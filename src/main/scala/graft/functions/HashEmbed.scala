@@ -71,7 +71,7 @@ object HashEmbed {
     starts(nToks) = len + 1
     // distinct-token counts (zero-copy slices over this call's own copy)
     val counts = new java.util.HashMap[UTF8String, Array[Long]](
-      math.min(nToks * 2, 1 << 16))
+      GramCounts.capacityHint(nToks))
     var s = 0
     while (s < nToks) {
       val from = starts(s)

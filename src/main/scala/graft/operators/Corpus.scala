@@ -1084,7 +1084,7 @@ object Corpus {
   }
 
   /** The streaming face's scoring entry: arriving documents against the
-    * frozen model ([[graft.streaming.StreamingKl]] calls this per
+    * frozen model ([[graft.streaming.StreamingScorer]] calls this per
     * micro-batch, so a streamed document scores exactly like the batch
     * probe). Counts the micro-batch as-is — [[Tables.spread]] exists for
     * single-row-group parquet scans, a condition a micro-batch never
@@ -1135,12 +1135,12 @@ object Corpus {
     * against it per source — the monitor that catches a crawl whose
     * token distribution is drifting away from the corpus it is about to
     * join, BEFORE it is admitted. Same output grain as the registered
-    * query; [[graft.streaming.StreamingKl]] runs the identical scoring
-    * per micro-batch. Read BOTH columns: kl_nats alarms on within-vocab
-    * distribution shift; OUT-of-vocabulary drift is invisible to a
-    * vocab-capped KL by construction and alarms as `vocab_tokens`
-    * collapsing against the slice's raw token count (pinned in
-    * `StreamingKlSpec`).
+    * query; [[klScoreAgainst]] on [[graft.streaming.StreamingScorer]] runs
+    * the identical scoring per micro-batch. Read BOTH columns: kl_nats
+    * alarms on within-vocab distribution shift; OUT-of-vocabulary drift
+    * is invisible to a vocab-capped KL by construction and alarms as
+    * `vocab_tokens` collapsing against the slice's raw token count
+    * (pinned in `StreamingKlSpec`).
     *
     * 100 TB shape: the model is a once-built broadcastable V-row
     * artifact; per-probe cost is one map-side-combined count of the
@@ -1270,7 +1270,7 @@ object Corpus {
 
   /** Train the standalone DSIR bucket-model artifact — the offline half
     * of the train-once / score-online split
-    * ([[graft.streaming.StreamingDsir]] is the online half). */
+    * ([[dsirScore]] on [[graft.streaming.StreamingScorer]] is the online half). */
   def dsirModel(documents: DataFrame, isTarget: Column): DataFrame =
     dsirModelFrom(graft.engine.Staging.stage(
       dsirDocBuckets(Tables.spread(documents), isTarget)))

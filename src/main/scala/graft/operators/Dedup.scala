@@ -740,8 +740,8 @@ object Dedup {
   /** The registered incremental-dedup query: split the documents table by
     * [[IncomingMod]], index the corpus side, probe the incoming side —
     * exactly [[buildIndex]] + [[probeIndex]], which is also the streaming
-    * ingestion path ([[graft.streaming.StreamingDedup]] probes the same
-    * index per micro-batch), so the DuckDB oracle checks both. */
+    * ingestion path ([[probeIndex]] on [[graft.streaming.StreamingScorer]]
+    * probes the same index per micro-batch), so the DuckDB oracle checks both. */
   def minhashLshIncremental(documents: DataFrame): DataFrame = {
     val isIncoming = col("doc_id") % IncomingMod === 0
     val docs = Tables.spread(documents)
@@ -751,8 +751,8 @@ object Dedup {
   /** A prebuilt MinHash LSH index over a corpus: checkpointed signatures,
     * banded keys, and the under-cap bucket set — the "100 TB side" of
     * incremental dedup, built ONCE and probed by any number of batch or
-    * streaming ingests ([[probeIndex]],
-    * [[graft.streaming.StreamingDedup]]). At scale these three frames are
+    * streaming ingests ([[probeIndex]], batch or on
+    * [[graft.streaming.StreamingScorer]]). At scale these three frames are
     * persisted tables bucketed by (band, bkey). */
   final case class MinHashIndex(withSig: DataFrame, bands: DataFrame,
                                 okBuckets: DataFrame)
@@ -1330,8 +1330,8 @@ object Dedup {
     *
     * 100 TB shape: O(batch) gram cells joined on the 8-byte hash against
     * the persisted index, then the per-incoming-doc islands window —
-    * the corpus never rescans ([[graft.streaming.StreamingSpanProbe]]
-    * runs the same probe per micro-batch). */
+    * the corpus never rescans ([[graft.streaming.StreamingScorer]] runs the same
+    * probe per micro-batch). */
   def probeSpans(index: DataFrame, incoming: DataFrame): DataFrame =
     islandsOf(spanGrams(incoming).join(index, "gh"))
       .agg(min("pos").as("span_start"),

@@ -1240,13 +1240,23 @@ object Events {
   }
 
   /** Interval-join attribution core — every purchase paired with SAME-user
-    * clicks inside `[purchase_ts − horizon, purchase_ts]`. One
+    * clicks inside `[purchase_ts − horizon, purchase_ts]`, as
+    * (purchase_id, user_id, purchase_ts, click_ts, click_value). One
     * implementation for both execution modes: on batch frames the
     * watermarks are no-ops and the join runs eagerly; on streaming frames
-    * ([[graft.streaming.StreamingAttribution]] passes them through
-    * verbatim) it is Spark's native stream⋈stream inner join with
-    * horizon-bounded state. `clicks` needs (user_id, ts: timestamp,
-    * value); `purchases` needs (event_id, user_id, ts: timestamp).
+    * it is Spark's native stream⋈stream inner join, the streaming
+    * attribution face. `clicks` needs (user_id, ts: timestamp, value);
+    * `purchases` needs (event_id, user_id, ts: timestamp).
+    *
+    * Streaming: both sides carry event-time watermarks and the join
+    * condition carries the time-range bound, so the state store holds
+    * each side only within the horizon — clicks older than `purchase
+    * watermark − horizon` are evicted, state is bounded by in-horizon
+    * traffic, and matched pairs emit exactly once in append mode. Every
+    * in-horizon pair is emitted (unlike [[asofClickValue]], which carries
+    * only the latest click forward); a "latest only" refinement is a
+    * downstream per-purchase argmax. `StreamingAttributionSpec` pins
+    * streamed == batch.
     *
     * 100 TB shape: one hash(user) shuffle per side into a co-located
     * join — no broadcast, no unbounded buffer; streaming state is

@@ -216,8 +216,7 @@ object Multimodal {
     * 100 TB shape: O(batch) block cells joined on the 8-byte hash
     * against the persisted index, one map-side-combined per-record
     * rollup — the store never rescans
-    * ([[graft.streaming.StreamingBlockProbe]] runs the same probe per
-    * micro-batch). */
+    * ([[graft.streaming.StreamingScorer]] runs the same probe per micro-batch). */
   def probeBlocks(index: DataFrame, incoming: DataFrame): DataFrame =
     records(Tables.spread(incoming))
       .select(col("doc_id"), explode(blockHashes(col("payload"))).as("bh"))

@@ -310,8 +310,8 @@ object Similarity {
   /** The LSH probe core: score a (query_id, qv, qn) batch against a
     * banded (vec_id, v, nrm) corpus — shared verbatim by the registered
     * batch query (where the batch is the first [[NumQueryVectors]]
-    * corpus vectors) and [[graft.streaming.StreamingAnnProbe]] (where it
-    * is each micro-batch of a query stream). The query side is the small
+    * corpus vectors) and the streaming face on [[graft.streaming.StreamingScorer]]
+    * (where it is each micro-batch of a query stream). The query side is the small
     * side: its banded signatures broadcast, the corpus never shuffles. */
   def annProbe(corpus: DataFrame, queries: DataFrame): DataFrame = {
     val dim = 64
@@ -1066,10 +1066,10 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"), round(avg("sil"), 6).as("silhouette"))
   }
 
-  /** Frozen-quantizer assignment probe — the batch core
-    * [[graft.streaming.StreamingKmeansAssign]] shares: every vector of
-    * `batch` (vec_id, v) to its nearest trained centroid, same bit-exact
-    * d² argmin as training. (vec_id, cent_id, d2). */
+  /** Frozen-quantizer assignment probe — the batch core the streaming
+    * face on [[graft.streaming.StreamingScorer]] runs per micro-batch: every
+    * vector of `batch` (vec_id, v) to its nearest trained centroid, same
+    * bit-exact d² argmin as training. (vec_id, cent_id, d2). */
   def kmeansProbe(cents: DataFrame, batch: DataFrame): DataFrame =
     kmeansAssign(batch, cents).select("vec_id", "cent_id", "d2")
 
@@ -1209,8 +1209,8 @@ object Similarity {
     * (vec_id, lo, hi) the first-pass Hamming scan reads, `vecs` the float
     * store the bounded rerank joins back into. The BQ twin of
     * [[graft.operators.Dedup.MinHashIndex]] — built once, probed by any
-    * number of batch or streaming query feeds
-    * ([[graft.streaming.StreamingHammingProbe]]). */
+    * number of batch or streaming query feeds ([[probeHamming]] on
+    * [[graft.streaming.StreamingScorer]]). */
   final case class BqIndex(packed: DataFrame, vecs: DataFrame)
 
   /** Build a [[BqIndex]] from a (vec_id, v, nrm) frame ([[annCorpus]]
@@ -1291,8 +1291,8 @@ object Similarity {
     * a deployment builds once), the query block probes it, neighbors come
     * only from the corpus. Exactly [[buildBqIndex]] + [[probeHamming]],
     * which is also the streaming ingestion path
-    * ([[graft.streaming.StreamingHammingProbe]] probes the same index per
-    * micro-batch), so the DuckDB oracle checks both. */
+    * ([[probeHamming]] on [[graft.streaming.StreamingScorer]] probes the same
+    * index per micro-batch), so the DuckDB oracle checks both. */
   def bqProbe(spark: SparkSession, sfDir: String): DataFrame = {
     val vs = Staging.stage(vectors(spark, sfDir)) // see [[hammingTopK]]
     probeHamming(buildBqIndex(vs.where(col("vec_id") >= NumQueryVectors)),
@@ -1787,7 +1787,7 @@ object Similarity {
 
   /** Persist / reload the trained quantizer — the model artifact between
     * [[kmeansCentroids]] (train once, offline) and its consumers
-    * ([[kmeansProbe]], [[graft.streaming.StreamingKmeansAssign]],
+    * ([[kmeansProbe]], batch or on [[graft.streaming.StreamingScorer]],
     * `ivfTrainedTopK`-style searches): K rows of (cent_id, cv) as plain
     * parquet. Deliberately unpartitioned — the whole model is K×dim
     * values, broadcast-sized by construction at any corpus scale (the

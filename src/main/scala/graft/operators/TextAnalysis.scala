@@ -929,7 +929,7 @@ object TextAnalysis {
 
   /** Persist / reload the trained merge table — the tokenizer model
     * artifact between [[bpeMerges]] (train once, offline) and its
-    * consumers ([[bpeApply]], [[graft.streaming.StreamingBpeEncode]]):
+    * consumers ([[bpeApply]], batch or on [[graft.streaming.StreamingScorer]]):
     * ≤[[BpeMergeRounds]] rows of (merge_round, pair, freq, new_token) as
     * plain parquet, deliberately unpartitioned — the whole model is a
     * handful of strings, broadcast-sized at any corpus scale (same
@@ -1418,7 +1418,7 @@ object TextAnalysis {
     * split convention — doc_id ≡ 0 (mod 5) plays the "new batch" (~20%),
     * the rest is the frozen reference corpus. Exactly the
     * [[buildUnigramModel]] + [[probeSurprisal]] path
-    * ([[graft.streaming.StreamingSurprisal]] runs the same probe per
+    * ([[graft.streaming.StreamingScorer]] runs the same probe per
     * micro-batch), so the DuckDB oracle checks both faces. */
   def surprisalProbeSplit(documents: DataFrame): DataFrame = {
     val isIncoming = col("doc_id") % Dedup.IncomingMod === 0
@@ -1531,8 +1531,8 @@ object TextAnalysis {
 
   /** The registered incremental-bigram query — same [[Dedup.IncomingMod]]
     * split as [[surprisalProbeSplit]], scored by the backoff bigram model
-    * ([[graft.streaming.StreamingSurprisal.runBigram]] runs the same
-    * probe per micro-batch). */
+    * ([[graft.streaming.StreamingScorer]] runs [[probeBigramSurprisal]] per
+    * micro-batch). */
   def bigramProbeSplit(documents: DataFrame): DataFrame = {
     val isIncoming = col("doc_id") % Dedup.IncomingMod === 0
     probeBigramSurprisal(buildBigramModel(documents.where(!isIncoming)),
@@ -1850,10 +1850,10 @@ object TextAnalysis {
     gramCells(base).select("gram").distinct()
 
   /** Score a batch against a FROZEN gram index — [[novelty]]'s
-    * probe face (the [[graft.streaming.StreamingNovelty]] core): per
-    * incoming document the fraction of its gram slots NOT already in the
-    * base corpus. A near-zero score on arrival means boilerplate or
-    * near-copy of the corpus — the online admission gate. Output:
+    * probe face (what [[graft.streaming.StreamingScorer]] runs per
+    * micro-batch): per incoming document the fraction of its gram slots
+    * NOT already in the base corpus. A near-zero score on arrival means
+    * boilerplate or near-copy of the corpus — the online admission gate. Output:
     * (doc_id, n_grams, n_seen, novelty).
     *
     * 100 TB shape: O(batch) gram cells left-joined against the persisted

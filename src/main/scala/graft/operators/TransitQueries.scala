@@ -42,7 +42,7 @@ object TransitQueries {
   // Each query is a pure function of the `routes` / `trips` views (schema in
   // graft.sources.Tables / graft.engine.Schemas). The same core serves the
   // batch wrappers below, the Structured Streaming runner
-  // (graft.streaming.StreamingRunner), and hand-written-row unit tests.
+  // (graft.streaming.TransitStreamingJob), and hand-written-row unit tests.
 
   /** Q1 — total capacity per route (`AvailableSeatsPerRoute.java:36-42`;
     * despite the name, passengers are never subtracted). */

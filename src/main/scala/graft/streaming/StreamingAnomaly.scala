@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Events
 
@@ -59,19 +59,13 @@ class StreamingAnomaly(initial: Option[DataFrame] = None) {
     * events-table schema (ts epoch-µs int64, the Tables.events convention); `sink` receives
     * (batchId, scored anomaly frame) per trigger. */
   def run(events: DataFrame, checkpointDir: String,
-          queryName: String = "graft_streaming_anomaly",
-          trigger: Trigger = Trigger.ProcessingTime(0))(
+          queryName: String = "graft_streaming_anomaly")(
           sink: (Long, DataFrame) => Unit): StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // eager iterative staging: truncates lineage (replaced generations
-        // are reclaimed by the ContextCleaner once unreferenced)
-        val next = graft.engine.Staging.stageIterative(merge(Events.dailyCounts(batch)))
-        counters = Some(next)
-        sink(batchId, Events.scoreDaily(next))
-      }
-      .start()
+    StreamingScorer.run(queryName, events, checkpointDir) { batch =>
+      // eager iterative staging: truncates lineage (replaced generations
+      // are reclaimed by the ContextCleaner once unreferenced)
+      val next = graft.engine.Staging.stageIterative(merge(Events.dailyCounts(batch)))
+      counters = Some(next)
+      Events.scoreDaily(next)
+    }(sink)
 }

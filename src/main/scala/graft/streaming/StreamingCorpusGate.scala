@@ -16,7 +16,8 @@ import graft.operators.{Corpus, TextAnalysis}
   * (a self-join of the stream would be a stateful stream-stream join).
   *
   * Deliberately NOT in the gate: the exact-duplicate drop — that is
-  * cross-document state and belongs to [[StreamingDedup]]'s index probe;
+  * cross-document state and belongs to the MinHash index probe
+  * ([[graft.operators.Dedup.probeIndex]] on [[StreamingScorer]]);
   * chaining this gate in front of it is the production ingest topology
   * (cheap stateless gates first, stateful dedup on the survivors).
   *

@@ -10,7 +10,7 @@ import graft.operators.Events
   * per-type keyed state carries the textbook two-sided recurrence
   * s⁺ = max(0, s⁺ + x − μ − k), s⁻ = max(0, s⁻ + μ − k − x) against a
   * FROZEN (μ, σ) model trained offline ([[Events.cusumModel]], the
-  * StreamingDsir train-offline/score-online convention), and an alarm
+  * [[StreamingScorer]] train-offline/score-online convention), and an alarm
   * fires the moment either side crosses 4σ — days, not a nightly batch,
   * after a drift starts.
   *

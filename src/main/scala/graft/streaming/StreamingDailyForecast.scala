@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Events
 
@@ -50,17 +50,11 @@ class StreamingDailyForecast(initial: Option[DataFrame] = None) {
     * events-table schema (ts epoch-µs int64); `sink` receives
     * (batchId, backtest frame) per trigger. */
   def run(events: DataFrame, checkpointDir: String,
-          queryName: String = "graft_streaming_forecast",
-          trigger: Trigger = Trigger.ProcessingTime(0))(
+          queryName: String = "graft_streaming_forecast")(
           sink: (Long, DataFrame) => Unit): StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val next = graft.engine.Staging.stageIterative(merge(Events.dailyCounts(batch)))
-        counters = Some(next)
-        sink(batchId, Events.forecastFromDaily(next))
-      }
-      .start()
+    StreamingScorer.run(queryName, events, checkpointDir) { batch =>
+      val next = graft.engine.Staging.stageIterative(merge(Events.dailyCounts(batch)))
+      counters = Some(next)
+      Events.forecastFromDaily(next)
+    }(sink)
 }

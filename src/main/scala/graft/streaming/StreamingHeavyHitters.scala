@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.MisraGries
 import graft.operators.TextAnalysis
@@ -43,28 +43,21 @@ class StreamingHeavyHitters(capacity: Int = TextAnalysis.MgCapacity,
   /** Start the monitor. `documents` must be a STREAMING frame with a
     * `text` column; `sink` receives (batchId, candidates) per trigger. */
   def run(documents: DataFrame, checkpointDir: String,
-          queryName: String = "graft_streaming_heavy_hitters",
-          trigger: Trigger = Trigger.ProcessingTime(0))(
+          queryName: String = "graft_streaming_heavy_hitters")(
           sink: (Long, DataFrame) => Unit): StreamingQuery =
-    documents.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sp = batch.sparkSession
-        val row = batch
-          .select(explode(TextAnalysis.toks(col("text"))).as("term"))
-          .agg(MisraGries.of(capacity)(col("term")).as("cands"),
-            count(lit(1)).as("n"))
-          .head()
-        val batchSketch = row.getSeq[org.apache.spark.sql.Row](0)
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        sketch = mg.merge(sketch, batchSketch)
-        nTok += row.getLong(1)
-        import sp.implicits._
-        val n = nTok
-        sink(batchId, mg.finish(sketch).map(c => (c.item, c.est, n))
-          .toDF("term", "est", "n_tok"))
-      }
-      .start()
+    StreamingScorer.run(queryName, documents, checkpointDir) { batch =>
+      val sp = batch.sparkSession
+      val row = batch
+        .select(explode(TextAnalysis.toks(col("text"))).as("term"))
+        .agg(MisraGries.of(capacity)(col("term")).as("cands"),
+          count(lit(1)).as("n"))
+        .head()
+      val batchSketch = row.getSeq[org.apache.spark.sql.Row](0)
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      sketch = mg.merge(sketch, batchSketch)
+      nTok += row.getLong(1)
+      import sp.implicits._
+      val n = nTok
+      mg.finish(sketch).map(c => (c.item, c.est, n)).toDF("term", "est", "n_tok")
+    }(sink)
 }

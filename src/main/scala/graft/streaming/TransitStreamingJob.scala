@@ -109,9 +109,13 @@ final class TableStore(spark: SparkSession) {
   *      incremental counter tables''' — the KTable/RocksDB analog: per-key
   *      aggregates only, never raw events, each bounded by its key
   *      cardinality — and derives the query results '''restricted to the
-  *      keys touched by the batch''' (O(batch) work per trigger, not
-  *      O(state)), except the deliberately tiny dimension recomputes (q13's
-  *      per-operator table, #operators rows).
+  *      keys touched by the batch''' (plus the deliberately tiny dimension
+  *      recomputes, e.g. q13's per-operator table, #operators rows). The
+  *      per-trigger cost is nevertheless O(state), not O(batch): every
+  *      counter merge (`mergeSum`, `mergeScalar`, [[TableStore.upsert]])
+  *      re-aggregates `state ∪ batch`, and the touched-key derivations join
+  *      against the full state tables. Keeping the counters in Spark's
+  *      state store instead is ROADMAP open item 2.
   *
   * Upsert semantics: route re-emissions are compacted through
   * [[Upsert.latestPerKey]] (`routesLatest` state — the reference's
@@ -383,7 +387,8 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       Seq("passenger_name"), Seq("cnt")))
     totalTrips = Some(mergeScalar(totalTrips, t.agg(count(lit(1)).as("cnt")), "cnt"))
 
-    // -- touched keys: all derivations below are O(batch keys), not O(state)
+    // -- touched keys: the derivations below emit only touched keys, but
+    // they join against the full state tables, so each is O(state)
     val touchedRoutes = r.select("route_id").unionByName(tR.select("route_id"))
       .where(col("route_id").isNotNull).distinct()
 

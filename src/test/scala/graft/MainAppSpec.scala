@@ -1,6 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.CountDownLatch
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import graft.TransitFixture
 import graft.engine.Encode
@@ -55,7 +60,12 @@ class MainAppSpec extends SparkSpec {
     val (job, queries, publish) = MainApp.wire(spark, conf)
     try {
       queries.foreach(_.processAllAvailable())
-      publish()
+      // the periodic publisher and the final flush can call publish at the
+      // same moment: both must return, and the generation lands once
+      val go = new CountDownLatch(1)
+      val both = Future.sequence(Seq.fill(2)(Future { go.await(); publish() }))
+      go.countDown()
+      Await.result(both, 5.minutes)
       val out = StreamAdapters.readBatchRaw(spark, ref("projeto3_total_passengers"))
         .collect()
       out.length shouldBe 1

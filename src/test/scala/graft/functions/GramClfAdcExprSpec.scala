@@ -253,4 +253,13 @@ class GramClfAdcExprSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(1))
     }
   }
+
+  test("capacity hint saturates at 2^16 instead of overflowing") {
+    // the old min(n * 2, 1 << 16) went negative past 2^30 slots
+    GramCounts.capacityHint(1 << 30) shouldBe (1 << 16)
+    GramCounts.capacityHint(Int.MaxValue) shouldBe (1 << 16)
+    // unchanged wherever 2n did not overflow
+    Seq(0, 1, 7, 1 << 15, (1 << 15) + 1, 1 << 20)
+      .foreach(n => GramCounts.capacityHint(n) shouldBe math.min(n * 2, 1 << 16))
+  }
 }

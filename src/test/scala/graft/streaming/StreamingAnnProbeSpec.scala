@@ -30,8 +30,9 @@ class StreamingAnnProbeSpec extends SparkSpec {
     val in = MemoryStream[(Long, Seq[Double], Double)]
     val queries = in.toDF().toDF("query_id", "qv", "qn")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingAnnProbe.run(queries, corpus,
-      Files.createTempDirectory("graft-sann-").toString) { (id, topk) =>
+    val q = StreamingScorer.run("graft_streaming_ann", queries,
+      Files.createTempDirectory("graft-sann-").toString)(
+      Similarity.annProbe(corpus, _)) { (id, topk) =>
       batches :+= (id -> topk.collect().toSet)
     }
     try {

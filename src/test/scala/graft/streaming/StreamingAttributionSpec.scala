@@ -43,7 +43,7 @@ class StreamingAttributionSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = sp.sqlContext
     val cIn = MemoryStream[Click]
     val pIn = MemoryStream[Purchase]
-    val out = StreamingAttribution.pairs(cIn.toDF(), pIn.toDF())
+    val out = graft.operators.Events.attributionPairs(cIn.toDF(), pIn.toDF())
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("attrib_pairs")
       .option("checkpointLocation", Files.createTempDirectory("attrib-").toString)
@@ -60,7 +60,7 @@ class StreamingAttributionSpec extends SparkSpec {
     } finally q.stop()
 
     // the SAME function over batch frames gives the same rows
-    val batch = StreamingAttribution.pairs(clicks.toDF(), purchases.toDF())
+    val batch = graft.operators.Events.attributionPairs(clicks.toDF(), purchases.toDF())
     asSet(batch.collect()) shouldBe expected
   }
 
@@ -69,7 +69,7 @@ class StreamingAttributionSpec extends SparkSpec {
     implicit val ctx: org.apache.spark.sql.SQLContext = sp.sqlContext
     val cIn = MemoryStream[Click]
     val pIn = MemoryStream[Purchase]
-    val out = StreamingAttribution.pairs(cIn.toDF(), pIn.toDF())
+    val out = graft.operators.Events.attributionPairs(cIn.toDF(), pIn.toDF())
     val q = out.writeStream.outputMode("append").format("memory")
       .queryName("attrib_state")
       .option("checkpointLocation", Files.createTempDirectory("attrib-st-").toString)

@@ -12,8 +12,8 @@ object StreamingBlockProbeSpec {
   case class Doc(doc_id: Long, text: String)
 }
 
-/** The frozen-index binary block gate ([[Multimodal.probeBlocks]] /
-  * [[StreamingBlockProbe]]): a verbatim re-upload scores 1.0, fresh
+/** The frozen-index binary block gate ([[Multimodal.probeBlocks]], batch
+  * and on [[StreamingScorer]]): a verbatim re-upload scores 1.0, fresh
   * content 0.0, a half-resident payload in between, and the streamed
   * answer equals the batch probe over the same rows. Block grain =
   * [[Multimodal.BlockHexChars]] hex chars = 16 payload bytes. */
@@ -54,8 +54,9 @@ class StreamingBlockProbeSpec extends SparkSpec {
     val idx = Multimodal.buildBlockIndex(base)
     val in = MemoryStream[Doc]
     var got = Map.empty[Long, (Long, Long, Double)]
-    val q = StreamingBlockProbe.run(in.toDF(), idx,
-      Files.createTempDirectory("blkp-").toString) { (_, scored) =>
+    val q = StreamingScorer.run("graft_streaming_block_probe", in.toDF(),
+      Files.createTempDirectory("blkp-").toString)(
+      Multimodal.probeBlocks(idx, _)) { (_, scored) =>
       got ++= scored.collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
     }
@@ -97,8 +98,9 @@ class StreamingBlockProbeSpec extends SparkSpec {
       val loaded = Multimodal.loadBlockIndex(spark, s"$db.blockidx")
       val in = MemoryStream[Doc]
       var got = Map.empty[Long, (Long, Long, Double)]
-      val q = StreamingBlockProbe.run(in.toDF(), loaded,
-        Files.createTempDirectory("blkps-").toString) { (_, scored) =>
+      val q = StreamingScorer.run("graft_streaming_block_probe", in.toDF(),
+        Files.createTempDirectory("blkps-").toString)(
+        Multimodal.probeBlocks(loaded, _)) { (_, scored) =>
         got ++= scored.collect()
           .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
       }

@@ -32,8 +32,9 @@ class StreamingBpeEncodeSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)]
     val stream = in.toDF().toDF("doc_id", "text")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingBpeEncode.run(stream, merges,
-      Files.createTempDirectory("graft-sbpe-").toString) { (id, out) =>
+    val q = StreamingScorer.run("graft_streaming_bpe", stream,
+      Files.createTempDirectory("graft-sbpe-").toString)(
+      TextAnalysis.bpeApply(merges, _)) { (id, out) =>
       batches :+= (id -> out.collect().toSet)
     }
     try {

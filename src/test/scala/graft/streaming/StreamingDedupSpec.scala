@@ -39,8 +39,9 @@ class StreamingDedupSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)]
     val incoming = in.toDF().toDF("doc_id", "text")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingDedup.run(incoming, index,
-      Files.createTempDirectory("graft-sdedup-").toString) {
+    val q = StreamingScorer.run("graft_streaming_dedup", incoming,
+      Files.createTempDirectory("graft-sdedup-").toString)(
+      Dedup.probeIndex(index, _)) {
       (id, verdicts) => batches :+= (id -> verdicts.collect().toSet)
     }
     try {

@@ -32,8 +32,9 @@ class StreamingDsirSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)]
     val stream = in.toDF().toDF("doc_id", "text")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingDsir.run(stream, model,
-      Files.createTempDirectory("graft-sdsir-").toString) { (id, out) =>
+    val q = StreamingScorer.run("graft_streaming_dsir", stream,
+      Files.createTempDirectory("graft-sdsir-").toString)(
+      Corpus.dsirScore(model, _)) { (id, out) =>
       batches :+= (id -> out.collect().toSet)
     }
     try {

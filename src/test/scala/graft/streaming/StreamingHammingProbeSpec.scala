@@ -15,8 +15,8 @@ import graft.operators.Similarity
   * the SAME holds when the index side is a [[Similarity.saveBqIndex]]'d
   * table reopened via [[Similarity.loadBqIndex]] (the persisted serving
   * tier), completing the streamed==batch contract every other index
-  * family carries (StreamingDedup / StreamingSpanProbe /
-  * StreamingBlockProbe / StreamingAnnProbe). */
+  * family carries (the MinHash, span, block and ANN probes on
+  * [[StreamingScorer]]). */
 class StreamingHammingProbeSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -39,8 +39,9 @@ class StreamingHammingProbeSpec extends SparkSpec {
     val in = MemoryStream[(Long, Seq[Double], Double)]
     val queries = in.toDF().toDF("query_id", "qv", "qn")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingHammingProbe.run(queries, index,
-      Files.createTempDirectory("graft-sbq-").toString) { (id, topk) =>
+    val q = StreamingScorer.run("graft_streaming_bq", queries,
+      Files.createTempDirectory("graft-sbq-").toString)(
+      Similarity.probeHamming(index, _)) { (id, topk) =>
       batches :+= (id -> topk.collect().toSet)
     }
     try {

@@ -32,8 +32,9 @@ class StreamingIngestSpec extends SparkSpec {
     val in = MemoryStream[(Long, String)]
     val gated = StreamingCorpusGate.gate(in.toDF().toDF("doc_id", "text"))
     var verdicts = Set.empty[Row]
-    val q = StreamingDedup.run(gated, index,
-      Files.createTempDirectory("graft-ingest-").toString) {
+    val q = StreamingScorer.run("graft_streaming_dedup", gated,
+      Files.createTempDirectory("graft-ingest-").toString)(
+      Dedup.probeIndex(index, _)) {
       (_, v) => verdicts ++= v.collect()
     }
     try {

@@ -33,8 +33,9 @@ class StreamingKlSpec extends SparkSpec {
     val in = MemoryStream[(Long, String, String)]
     val stream = in.toDF().toDF("doc_id", "text", "source")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingKl.run(stream, model,
-      Files.createTempDirectory("graft-skl-").toString) { (id, out) =>
+    val q = StreamingScorer.run("graft_streaming_kl", stream,
+      Files.createTempDirectory("graft-skl-").toString)(
+      Corpus.klScoreAgainst(model, _)) { (id, out) =>
       batches :+= (id -> out.collect().toSet)
     }
     try {

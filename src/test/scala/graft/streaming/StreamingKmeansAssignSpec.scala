@@ -34,8 +34,9 @@ class StreamingKmeansAssignSpec extends SparkSpec {
     val in = MemoryStream[(Long, Seq[Double])]
     val stream = in.toDF().toDF("vec_id", "v")
     var batches = Vector.empty[(Long, Set[Row])]
-    val q = StreamingKmeansAssign.run(stream, centroids,
-      Files.createTempDirectory("graft-skm-").toString) { (id, out) =>
+    val q = StreamingScorer.run("graft_streaming_kmeans", stream,
+      Files.createTempDirectory("graft-skm-").toString)(
+      Similarity.kmeansProbe(centroids, _)) { (id, out) =>
       batches :+= (id -> out.collect().toSet)
     }
     try {

@@ -44,8 +44,9 @@ class StreamingNoveltySpec extends SparkSpec {
     val idx = TextAnalysis.buildGramIndex(base)
     val in = MemoryStream[Doc]
     var got = Map.empty[Long, (Long, Long, Double)]
-    val q = StreamingNovelty.run(in.toDF(), idx,
-      Files.createTempDirectory("novl-").toString) { (_, scored) =>
+    val q = StreamingScorer.run("graft_streaming_novelty", in.toDF(),
+      Files.createTempDirectory("novl-").toString)(
+      TextAnalysis.probeNovelty(idx, _)) { (_, scored) =>
       got ++= scored.collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
     }

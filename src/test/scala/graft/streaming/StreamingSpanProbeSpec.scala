@@ -12,8 +12,8 @@ object StreamingSpanProbeSpec {
   case class Doc(doc_id: Long, text: String)
 }
 
-/** The frozen-index span gate ([[Dedup.probeSpans]] /
-  * [[StreamingSpanProbe]]): an incoming document lifting a ≥50-token
+/** The frozen-index span gate ([[Dedup.probeSpans]], batch and on
+  * [[StreamingScorer]]): an incoming document lifting a ≥50-token
   * passage from the RESIDENT corpus is flagged with exact span
   * boundaries; fresh text and within-batch-only repetition are not (the
   * decontamination semantic — closed-corpus self-repeats belong to
@@ -64,8 +64,9 @@ class StreamingSpanProbeSpec extends SparkSpec {
     val fresh = uniq("fresh", 90).mkString(" ")
     val in = MemoryStream[Doc]
     var got = Set.empty[(Long, Long, Long, Long)]
-    val q = StreamingSpanProbe.run(in.toDF(), idx,
-      Files.createTempDirectory("spanp-").toString) { (_, spans) =>
+    val q = StreamingScorer.run("graft_streaming_span_probe", in.toDF(),
+      Files.createTempDirectory("spanp-").toString)(
+      Dedup.probeSpans(idx, _)) { (_, spans) =>
       got ++= spans.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     }
@@ -102,8 +103,9 @@ class StreamingSpanProbeSpec extends SparkSpec {
       val fresh = uniq("fresh", 90).mkString(" ")
       val in = MemoryStream[Doc]
       var got = Set.empty[(Long, Long, Long, Long)]
-      val q = StreamingSpanProbe.run(in.toDF(), loaded,
-        Files.createTempDirectory("spanps-").toString) { (_, spans) =>
+      val q = StreamingScorer.run("graft_streaming_span_probe", in.toDF(),
+        Files.createTempDirectory("spanps-").toString)(
+        Dedup.probeSpans(loaded, _)) { (_, spans) =>
         got ++= spans.collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       }

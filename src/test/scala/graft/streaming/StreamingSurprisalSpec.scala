@@ -72,8 +72,9 @@ class StreamingSurprisalSpec extends SparkSpec {
     val m = bmodel
     val in = MemoryStream[Doc]
     var got = Map.empty[Long, (Long, Double)]
-    val q = StreamingSurprisal.runBigram(in.toDF(), m,
-      Files.createTempDirectory("bisurp-").toString) { (_, scored) =>
+    val q = StreamingScorer.run("graft_streaming_bigram_surprisal", in.toDF(),
+      Files.createTempDirectory("bisurp-").toString)(
+      TextAnalysis.probeBigramSurprisal(m, _)) { (_, scored) =>
       got ++= scored.collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
     }
@@ -94,8 +95,9 @@ class StreamingSurprisalSpec extends SparkSpec {
     val in = MemoryStream[Doc]
     var got = Map.empty[Long, (Long, Double)]
     var batches = 0
-    val q = StreamingSurprisal.run(in.toDF(), m,
-      Files.createTempDirectory("surp-").toString) { (_, scored) =>
+    val q = StreamingScorer.run("graft_streaming_surprisal", in.toDF(),
+      Files.createTempDirectory("surp-").toString)(
+      TextAnalysis.probeSurprisal(m, _)) { (_, scored) =>
       batches += 1
       got ++= scored.collect()
         .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
