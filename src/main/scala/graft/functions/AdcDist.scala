@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+
+import NativeExpression.expr
 
 /** Native ADC distance: a stored PQ code array `codes` (array<int>,
   * codes[m] = nearest codeword of subspace m) against a query's FLATTENED
@@ -22,48 +21,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * lambda frame per element, and boxes every accumulator step. Identical
   * strict left-to-right IEEE addition in subspace order, so the values
   * (and the oracle's sorted-fold mirror) are bit-for-bit unchanged.
+  *
+  * Malformed input fails loudly instead of folding a wrong distance: a
+  * null code or table entry, a code outside [0, k), or a table shorter
+  * than nSub·k throws. `qtab` comes from a `transform(…, x -> x.qdist)`
+  * and is therefore typed `containsNull = true`, so nulls cannot be ruled
+  * out by the input type.
   */
-case class AdcDist(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) if k > 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<int>, array<double>) and k > 0, " +
-          s"got ($l, $r), k=$k")
-    }
-  override def dataType: DataType = DoubleType
+case class AdcDist(left: Expression, right: Expression, k: Int) extends NativeBinary {
   override def prettyName: String = "graft_adc_dist"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val qtab = b.asInstanceOf[ArrayData]
-    var acc = 0.0
-    var m = 0
-    val nSub = codes.numElements()
-    while (m < nSub) {
-      acc += qtab.getDouble(m * k + codes.getInt(m))
-      m += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val acc = ctx.freshName("acc")
-      val m = ctx.freshName("m")
-      val nSub = ctx.freshName("nSub")
-      s"""
-         |double $acc = 0.0;
-         |int $nSub = $a.numElements();
-         |for (int $m = 0; $m < $nSub; $m++) {
-         |  $acc += $b.getDouble($m * $k + $a.getInt($m));
-         |}
-         |${ev.value} = $acc;
-         |""".stripMargin
-    })
+  override def dataType: DataType = DoubleType
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(IntegerType), ArrayType(DoubleType))
+  override protected def paramRule: String = "k > 0"
+  override protected def paramsValid: Boolean = k > 0
+  override protected def kernel: String = "dist"
+  override protected def params: Seq[Any] = Seq(k)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): AdcDist =
@@ -71,7 +44,30 @@ case class AdcDist(left: Expression, right: Expression, k: Int)
 }
 
 object AdcDist {
+  /** The kernel: Σ_m qtab[m·k + codes[m]] in subspace order. */
+  def dist(codes: ArrayData, qtab: ArrayData, k: Int): Double = {
+    val nSub = codes.numElements()
+    if (qtab.numElements().toLong < nSub.toLong * k)
+      malformed(s"qtab holds ${qtab.numElements()} distances, fewer than " +
+        s"nSub·k = ${nSub}·$k")
+    var acc = 0.0
+    var m = 0
+    while (m < nSub) {
+      if (codes.isNullAt(m)) malformed(s"null code at subspace $m")
+      val c = codes.getInt(m)
+      if (c < 0 || c >= k) malformed(s"code $c at subspace $m is outside [0, $k)")
+      val i = m * k + c
+      if (qtab.isNullAt(i)) malformed(s"null qtab entry $i")
+      acc += qtab.getDouble(i)
+      m += 1
+    }
+    acc
+  }
+
+  private def malformed(what: String): Nothing =
+    throw new IllegalArgumentException(s"graft_adc_dist: $what")
+
   /** Column-DSL entry point. */
   def of(codes: Column, qtab: Column, k: Int): Column =
-    bridge.column(AdcDist(bridge.expression(codes), bridge.expression(qtab), k))
+    AdcDist(expr(codes), expr(qtab), k).toColumn
 }

@@ -3,12 +3,11 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
+
+import NativeExpression.expr
 
 /** Native per-record content-block hash set: a binary payload → the
   * SORTED DISTINCT `array<long>` of `h32(hex(block)) mod P` over its
@@ -29,24 +28,14 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * (identical md5 inputs), distinct, sorted ascending — the
   * [[HashedShingles]] contract [[SortedIntersectCount]] relies on — so
   * every DuckDB oracle is unchanged. */
-case class BlockHashes(child: Expression, hexChars: Int, modP: Long)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType if hexChars > 0 && hexChars % 2 == 0 && modP > 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires binary, even hexChars > 0 and modP > 0, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class BlockHashes(child: Expression, hexChars: Int, modP: Long) extends NativeUnary {
   override def prettyName: String = "graft_block_hashes"
-
-  override def nullSafeEval(v: Any): Any =
-    BlockHashes.ofPayload(v.asInstanceOf[Array[Byte]], hexChars, modP)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.BlockHashes.ofPayload($a, $hexChars, ${modP}L);")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(BinaryType)
+  override protected def paramRule: String = "even hexChars > 0 and modP > 0"
+  override protected def paramsValid: Boolean = hexChars > 0 && hexChars % 2 == 0 && modP > 0
+  override protected def kernel: String = "ofPayload"
+  override protected def params: Seq[Any] = Seq[Any](hexChars, modP)
 
   override protected def withNewChildInternal(newChild: Expression): BlockHashes =
     copy(child = newChild)
@@ -56,7 +45,7 @@ object BlockHashes {
 
   private val HexDigits = "0123456789ABCDEF".getBytes
 
-  /** Shared by eval and generated code. */
+  /** The kernel. */
   def ofPayload(payload: Array[Byte], hexChars: Int, modP: Long): ArrayData = {
     val n = payload.length
     if (n == 0)
@@ -104,5 +93,5 @@ object BlockHashes {
 
   /** Column-DSL entry point. */
   def of(payload: Column, hexChars: Int, modP: Long): Column =
-    bridge.column(BlockHashes(bridge.expression(payload), hexChars, modP))
+    BlockHashes(expr(payload), hexChars, modP).toColumn
 }

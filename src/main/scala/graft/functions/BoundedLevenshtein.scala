@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Thresholded edit distance with common-affix stripping — returns the
   * unit-cost Levenshtein distance when it is ≤ k, −1 otherwise
@@ -26,29 +25,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * with ±1-shift sentinels and a whole-band early exit.
   *
   * Same contract as the other native sketches: a per-row pure
-  * function, null-safe, codegen wraps the identical static helper the
-  * interpreted path uses. */
+  * function, null-safe, one kernel for eval and generated code. */
 case class BoundedLevenshtein(left: Expression, right: Expression, k: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (string, string), got $other")
-    }
-  override def dataType: DataType = IntegerType
+    extends NativeBinary {
   override def prettyName: String = "graft_lev_bounded"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    BoundedLevenshtein.of(
-      a.asInstanceOf[UTF8String].getBytes,
-      b.asInstanceOf[UTF8String].getBytes, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.BoundedLevenshtein.of(" +
-        s"$a.getBytes(), $b.getBytes(), $k);")
+  override def dataType: DataType = IntegerType
+  override protected def inputTypes: Seq[DataType] = Seq(StringType, StringType)
+  override protected def kernel: String = "of"
+  override protected def params: Seq[Any] = Seq(k)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BoundedLevenshtein =
@@ -58,16 +42,14 @@ case class BoundedLevenshtein(left: Expression, right: Expression, k: Int)
 object BoundedLevenshtein {
 
   def of(a: Column, b: Column, k: Int): Column =
-    bridge.column(
-      BoundedLevenshtein(bridge.expression(a), bridge.expression(b), k))
+    BoundedLevenshtein(expr(a), expr(b), k).toColumn
 
   /** String entry point (tests / ad-hoc callers): distance over the
-    * UTF-8 encodings — same grain as the byte kernel below. */
+    * UTF-8 encodings — same grain as the kernel below. */
   def of(s: String, t: String, k: Int): Int =
-    of(s.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      t.getBytes(java.nio.charset.StandardCharsets.UTF_8), k)
+    of(UTF8String.fromString(s), UTF8String.fromString(t), k)
 
-  /** Static kernel (callable from generated code). Exact: equals the
+  /** The kernel. Exact: equals the
     * unbounded Levenshtein distance whenever that is ≤ k, else −1.
     *
     * Operates on UTF-8 BYTES, not UTF-16 chars: the documented grain of
@@ -80,7 +62,9 @@ object BoundedLevenshtein {
     * substituted character by its encoded width — acceptable for a
     * near-dup verifier, and it skips the UTF-16 decode entirely
     * (UTF8String.getBytes is the stored representation). */
-  def of(s: Array[Byte], t: Array[Byte], k: Int): Int = {
+  def of(a: UTF8String, b: UTF8String, k: Int): Int = {
+    val s = a.getBytes
+    val t = b.getBytes
     val ls = s.length
     val lt = t.length
     if (math.abs(ls - lt) > k) return -1

@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Per-document character histogram in ONE pass: the multiset of code
   * points of the string (excluding the five Java-regex line terminators,
@@ -25,22 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * that is a pure per-row function of `text`. This loop makes the whole
   * query map-only (zero exchanges at any scale) and touches each byte
   * once. */
-case class CharCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got $t")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class CharCounts(child: Expression) extends NativeUnary {
   override def prettyName: String = "graft_char_counts"
-
-  override def nullSafeEval(a: Any): Any =
-    CharCounts.counts(a.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.CharCounts.counts($v);")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def kernel: String = "counts"
 
   override protected def withNewChildInternal(newChild: Expression): CharCounts =
     copy(child = newChild)
@@ -52,7 +39,7 @@ object CharCounts {
   private def isLineTerminator(cp: Int): Boolean =
     cp == '\n' || cp == '\r' || cp == 0x85 || cp == 0x2028 || cp == 0x2029
 
-  /** Shared by interpreted eval and codegen. */
+  /** The kernel. */
   def counts(s: UTF8String): UnsafeArrayData = {
     val str = s.toString
     val m = new java.util.TreeMap[Integer, Array[Long]]()
@@ -74,5 +61,5 @@ object CharCounts {
   }
 
   /** Column-DSL entry point. */
-  def of(text: Column): Column = bridge.column(CharCounts(bridge.expression(text)))
+  def of(text: Column): Column = CharCounts(expr(text)).toColumn
 }

@@ -4,12 +4,11 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native hashed-bag-of-words classifier statistics: a (lowercased)
   * document string → struct(n_tokens long, sum_twi long) where each
@@ -31,26 +30,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * runs included, and the minimum token count is 1 (the empty string
   * hashes like any other). Values are exact integers, so every DuckDB
   * oracle (explode + GROUP BY mirror) is unchanged.
+  *
+  * `weights` is an immutable sequence, so two expressions over equal
+  * weights are equal and canonicalise alike (an array field would compare
+  * by reference and defeat common-subexpression elimination); the kernel
+  * reads an `int[]` copy, made once when the kernel is bound.
   */
-case class ClfStats(child: Expression, weights: Array[Int])
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if weights.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string and non-empty weights, got $other")
-  }
-  override def dataType: DataType = ClfStats.Out
+case class ClfStats(child: Expression, weights: IndexedSeq[Int]) extends NativeUnary {
   override def prettyName: String = "graft_clf_stats"
-
-  override def nullSafeEval(v: Any): Any =
-    ClfStats.ofText(v.asInstanceOf[UTF8String], weights)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("clfWeights", weights, "int[]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.ClfStats.ofText($a, $w);")
-  }
+  override def dataType: DataType = ClfStats.Out
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def paramRule: String = "non-empty weights"
+  override protected def paramsValid: Boolean = weights.nonEmpty
+  override protected def kernel: String = "ofText"
+  override protected def params: Seq[Any] = Seq(weights.toArray)
 
   override protected def withNewChildInternal(newChild: Expression): ClfStats =
     copy(child = newChild)
@@ -61,7 +54,7 @@ object ClfStats {
     StructField("n_tokens", LongType, nullable = false),
     StructField("sum_twi", LongType, nullable = false)))
 
-  /** Shared by eval and generated code: one byte scan over the document,
+  /** The kernel: one byte scan over the document,
     * md5 per token over its byte range directly (no per-token string). */
   def ofText(text: UTF8String, weights: Array[Int]): InternalRow = {
     val b = text.getBytes
@@ -89,5 +82,5 @@ object ClfStats {
 
   /** Column-DSL entry point. */
   def of(text: Column, weights: Seq[Int]): Column =
-    bridge.column(ClfStats(bridge.expression(text), weights.toArray))
+    ClfStats(expr(text), weights.toIndexedSeq).toColumn
 }

@@ -3,12 +3,11 @@ package graft.functions
 import java.util.zip.Deflater
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native DEFLATE length: string → compressed byte count at a fixed
   * level (raw deflate, BEST_COMPRESSION, no zlib header so the constant
@@ -22,31 +21,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why an Expression and not a UDF: same contract as the other sketches
   * — a per-row pure function planned as a map-only projection (no
   * exchange at any scale), null-safe, and visible to SQL users as
-  * `graft_deflate_len` via [[graft.GraftExtensions]]. The body is a JNI
-  * zlib call, so codegen wraps the same static helper the interpreted
-  * path uses (the loop below is not the hot part — zlib is).
+  * `graft_deflate_len` via [[graft.GraftExtensions]]. The kernel is a
+  * JNI zlib call; its loop is not the hot part, zlib is.
   *
   * NOT oracle-checked: DuckDB ships no compression scalar, so the
   * consumer query ([[graft.operators.TextAnalysis.compressionRatio]])
   * stays an unregistered spec-pinned twin (the `valueQuantilesApprox`
   * convention) rather than weakening the registry's 100% hash-check
   * record. */
-case class DeflateLength(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got $other")
-  }
-  override def dataType: DataType = LongType
+case class DeflateLength(child: Expression) extends NativeUnary {
   override def prettyName: String = "graft_deflate_len"
-
-  override def nullSafeEval(v: Any): Any =
-    DeflateLength.of(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.DeflateLength.of($a);")
+  override def dataType: DataType = LongType
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def kernel: String = "of"
 
   override protected def withNewChildInternal(newChild: Expression): DeflateLength =
     copy(child = newChild)
@@ -54,7 +41,7 @@ case class DeflateLength(child: Expression) extends UnaryExpression {
 
 object DeflateLength {
 
-  /** Deflated byte count (static so generated code can call it). A fresh
+  /** The kernel: the deflated byte count. A fresh
     * Deflater per call: the object is cheap next to the compression
     * itself, and sharing one across rows would need thread confinement
     * codegen cannot promise. */
@@ -73,5 +60,5 @@ object DeflateLength {
 
   /** Column-DSL entry point. */
   def of(text: Column): Column =
-    bridge.column(DeflateLength(bridge.expression(text)))
+    DeflateLength(expr(text)).toColumn
 }

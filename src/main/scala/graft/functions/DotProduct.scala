@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
+import NativeExpression.expr
 
 /** Native Catalyst dot product over two `array<double>` columns — the
   * custom-`Expression`-with-`doGenCode` path for the one piece of vector
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Why not `aggregate(zip_with(a, b, _*_), 0.0, _+_)`: higher-order
   * functions are CodegenFallback — interpreted per element, allocating an
   * intermediate array per call. This expression participates in whole-stage
-  * codegen: the generated Java is the tight multiply-add loop below, no
-  * allocation, no virtual calls per element.
+  * codegen: the generated code calls the [[DotProduct.dot]] multiply-add
+  * loop directly, with no allocation and an unboxed `double` result.
   *
   * Semantics match the higher-order formulation bit-for-bit on well-formed
   * input (strict left-to-right IEEE summation — the order the DuckDB
@@ -26,39 +25,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * equal lengths (embedding columns; enforced upstream); on a length
   * mismatch the shorter prefix is used.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>), got ($l, $r)")
-    }
-  override def dataType: DataType = DoubleType
+case class DotProduct(left: Expression, right: Expression) extends NativeBinary {
   override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |int ${ev.value}_n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ${ev.value}_s = 0.0;
-         |for (int ${ev.value}_i = 0; ${ev.value}_i < ${ev.value}_n; ${ev.value}_i++) {
-         |  ${ev.value}_s += $a.getDouble(${ev.value}_i) * $b.getDouble(${ev.value}_i);
-         |}
-         |${ev.value} = ${ev.value}_s;
-         |""".stripMargin)
+  override def dataType: DataType = DoubleType
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override protected def kernel: String = "dot"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -66,7 +38,15 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
+  /** The kernel: Σ x[i]·y[i] over the shorter length, left to right. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
+  }
+
   /** Column-DSL entry point. */
-  def of(a: Column, b: Column): Column =
-    bridge.column(DotProduct(bridge.expression(a), bridge.expression(b)))
+  def of(a: Column, b: Column): Column = DotProduct(expr(a), expr(b)).toColumn
 }

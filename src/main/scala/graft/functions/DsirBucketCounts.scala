@@ -3,13 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native per-document DSIR feature histogram: a (lowercased) document
   * string → `array<struct<b long, c long>>` — the per-bucket instance
@@ -36,34 +35,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty tokens included, minimum one (empty) token per document; the
   * bigram leg contributes only when the document has ≥ 2 tokens.
   */
-case class DsirBucketCounts(child: Expression, nBuckets: Int)
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if nBuckets > 0 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string and nBuckets > 0, got $other")
-  }
+case class DsirBucketCounts(child: Expression, nBuckets: Int) extends NativeUnary {
+  override def prettyName: String = "graft_dsir_bucket_counts"
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("b", LongType, nullable = false),
     StructField("c", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_dsir_bucket_counts"
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def paramRule: String = "nBuckets > 0"
+  override protected def paramsValid: Boolean = nBuckets > 0
+  override protected def kernel: String = "ofText"
+  override protected def params: Seq[Any] = Seq(nBuckets)
 
-  override def nullSafeEval(v: Any): Any =
-    DsirBucketCounts.ofText(v.asInstanceOf[UTF8String], nBuckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.DsirBucketCounts.ofText($a, $nBuckets);")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): DsirBucketCounts =
+  override protected def withNewChildInternal(newChild: Expression): DsirBucketCounts =
     copy(child = newChild)
 }
 
 object DsirBucketCounts {
 
-  /** Shared by eval and generated code: one space-boundary scan, md5 per
+  /** The kernel: one space-boundary scan, md5 per
     * unigram byte range and per adjacent-bigram byte range, dense bucket
     * histogram, sparse ascending emission. */
   def ofText(text: UTF8String, nBuckets: Int): ArrayData = {
@@ -112,5 +101,5 @@ object DsirBucketCounts {
 
   /** Column-DSL entry point. */
   def of(text: Column, nBuckets: Int): Column =
-    bridge.column(DsirBucketCounts(bridge.expression(text), nBuckets))
+    DsirBucketCounts(expr(text), nBuckets).toColumn
 }

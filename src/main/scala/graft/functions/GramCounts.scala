@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native per-document word n-gram multiplicity: string → `array<struct<
   * gram string, cnt long>>`, one entry per DISTINCT n-gram of the
@@ -37,36 +36,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * cells feed aggregations and joins). The DuckDB oracles keep their
   * relational explode + GROUP BY form — only the VALUES must match.
   */
-case class GramCounts(child: Expression, n: Int, sep: String = " ")
-    extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if n > 0 && sep.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, n > 0 and a non-empty separator, " +
-        s"got $other, n=$n")
-  }
+case class GramCounts(child: Expression, n: Int, sep: String = " ") extends NativeUnary {
+  override def prettyName: String = "graft_gram_counts"
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("gram", StringType, nullable = false),
     StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_gram_counts"
-
-  private lazy val sepBytes: Array[Byte] =
-    sep.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-  override def nullSafeEval(v: Any): Any =
-    if (sep == " ") GramCounts.ofText(v.asInstanceOf[UTF8String], n)
-    else GramCounts.ofTextSep(v.asInstanceOf[UTF8String], n, sepBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    if (sep == " ")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.GramCounts.ofText($a, $n);")
-    else {
-      val sb = ctx.addReferenceObj("gramSep", sepBytes, "byte[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.functions.GramCounts.ofTextSep($a, $n, $sb);")
-    }
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def paramRule: String = "n > 0 and a non-empty separator"
+  override protected def paramsValid: Boolean = n > 0 && sep.nonEmpty
+  override protected def kernel: String = if (sep == " ") "ofText" else "ofTextSep"
+  override protected def params: Seq[Any] =
+    if (sep == " ") Seq(n)
+    else Seq(n, sep.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   override protected def withNewChildInternal(newChild: Expression): GramCounts =
     copy(child = newChild)
@@ -81,8 +62,8 @@ object GramCounts {
     * 2^30), and shared with [[HashEmbed.ofText]]. */
   private[functions] def capacityHint(n: Int): Int = math.min(n, 1 << 15) * 2
 
-  /** Shared by eval and generated code: one byte scan for the space
-    * boundaries, one counting pass over the gram slots. Gram strings wrap
+  /** The kernel for the single-space separator: one byte scan for the
+    * space boundaries, one counting pass over the gram slots. Gram strings wrap
     * ranges of this call's own byte copy (`getBytes`), so no per-gram
     * string building happens at all. */
   def ofText(text: UTF8String, n: Int): ArrayData = {
@@ -122,8 +103,8 @@ object GramCounts {
     new GenericArrayData(out)
   }
 
-  /** General-separator variant ([[GramCounts]] with a multi-byte literal
-    * separator — the BPE merge stream's sentinel boundary): token
+  /** The kernel for any other separator (a multi-byte literal separator
+    * — the BPE merge stream's sentinel boundary): token
     * boundaries are the leftmost non-overlapping occurrences of the
     * separator bytes (≡ Java `split(sepLiteral, -1)` when tokens never
     * contain the separator bytes, which the BPE sentinel contract
@@ -182,9 +163,9 @@ object GramCounts {
 
   /** Column-DSL entry point. */
   def of(text: Column, n: Int): Column =
-    bridge.column(GramCounts(bridge.expression(text), n))
+    GramCounts(expr(text), n).toColumn
 
   /** Column-DSL entry point, explicit separator. */
   def of(text: Column, n: Int, sep: String): Column =
-    bridge.column(GramCounts(bridge.expression(text), n, sep))
+    GramCounts(expr(text), n, sep).toColumn
 }

@@ -3,13 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native hashing-trick document embedding: a document string → its
   * sparse signed bucket counts `array<struct<dim long, raw long>>` —
@@ -28,24 +27,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-hashing). Values are exact integers; every DuckDB oracle (explode
   * + GROUP BY mirror) is unchanged. Tokenization: Java `split(" ", -1)`
   * ≡ Spark `split(text, " ")`. */
-case class HashEmbed(child: Expression, nDims: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if nDims > 0 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string and nDims > 0, got $other")
-  }
+case class HashEmbed(child: Expression, nDims: Int) extends NativeUnary {
+  override def prettyName: String = "graft_hash_embed"
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("dim", LongType, nullable = false),
     StructField("raw", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_hash_embed"
-
-  override def nullSafeEval(v: Any): Any =
-    HashEmbed.ofText(v.asInstanceOf[UTF8String], nDims)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.HashEmbed.ofText($a, $nDims);")
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def paramRule: String = "nDims > 0"
+  override protected def paramsValid: Boolean = nDims > 0
+  override protected def kernel: String = "ofText"
+  override protected def params: Seq[Any] = Seq(nDims)
 
   override protected def withNewChildInternal(newChild: Expression): HashEmbed =
     copy(child = newChild)
@@ -56,7 +47,7 @@ object HashEmbed {
   private val EmbPrefix = "hemb:".getBytes(java.nio.charset.StandardCharsets.UTF_8)
   private val SgnPrefix = "hsgn:".getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Shared by eval and generated code. */
+  /** The kernel. */
   def ofText(text: UTF8String, nDims: Int): ArrayData = {
     val b = text.getBytes
     val len = b.length
@@ -117,5 +108,5 @@ object HashEmbed {
 
   /** Column-DSL entry point. */
   def of(text: Column, nDims: Int): Column =
-    bridge.column(HashEmbed(bridge.expression(text), nDims))
+    HashEmbed(expr(text), nDims).toColumn
 }

@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
+
+import NativeExpression.expr
 
 /** Native map-only PQ assignment: for a vector `v` (array<double>) and a
   * FLATTENED codebook `cf` (the K codewords' vectors concatenated in code
@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * min_by(struct) aggregation — min_by over a struct value has no
   * mutable fixed-width buffer, so it planned as SortAggregate: two full
   * sorts and an exchange of the exploded frame, per PQ consumer. This
-  * expression assigns in one codegen'd pass; the corpus never enters an
+  * expression assigns in one map-side pass; the corpus never enters an
   * Exchange for assignment (the [[graft.operators.Similarity]] Lloyd
   * `kmeansAssign` packed-broadcast discipline, taken to codegen).
   *
@@ -29,26 +29,28 @@ import org.apache.spark.sql.types._
   * ordering incl. NaN-greatest semantics.
   */
 case class PqAssign(left: Expression, right: Expression, subDim: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) if subDim > 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>) and subDim > 0, " +
-          s"got ($l, $r), subDim=$subDim")
-    }
+    extends NativeBinary {
+  override def prettyName: String = "graft_pq_assign"
   override def dataType: DataType = StructType(Seq(
     StructField("codes", ArrayType(IntegerType, containsNull = false),
       nullable = false),
     StructField("dists", ArrayType(DoubleType, containsNull = false),
       nullable = false)))
-  override def prettyName: String = "graft_pq_assign"
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override protected def paramRule: String = "subDim > 0"
+  override protected def paramsValid: Boolean = subDim > 0
+  override protected def kernel: String = "assign"
+  override protected def params: Seq[Any] = Seq(subDim)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cf = b.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqAssign =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqAssign {
+  /** The kernel: per subspace, the first code with the smallest distance. */
+  def assign(v: ArrayData, cf: ArrayData, subDim: Int): InternalRow = {
     val n = v.numElements()
     val k = if (n == 0) 0 else cf.numElements() / n
     val nSub = n / subDim
@@ -77,57 +79,10 @@ case class PqAssign(left: Expression, right: Expression, subDim: Int)
       m += 1
     }
     new GenericInternalRow(Array[Any](
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(codes),
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(dists)))
+      UnsafeArrayData.fromPrimitiveArray(codes), UnsafeArrayData.fromPrimitiveArray(dists)))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val k = ctx.freshName("k")
-      val nSub = ctx.freshName("nSub")
-      val codes = ctx.freshName("codes"); val dists = ctx.freshName("dists")
-      val m = ctx.freshName("m"); val c = ctx.freshName("c")
-      val i = ctx.freshName("i"); val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-      s"""
-         |int $n = $a.numElements();
-         |int $k = ($n == 0) ? 0 : $b.numElements() / $n;
-         |int $nSub = $n / $subDim;
-         |int[] $codes = new int[$nSub];
-         |double[] $dists = new double[$nSub];
-         |for (int $m = 0; $m < $nSub; $m++) {
-         |  int $best = -1;
-         |  double $bestD = 0.0;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $subDim; $i++) {
-         |      double $d = $a.getDouble($m * $subDim + $i)
-         |        - $b.getDouble($c * $n + $m * $subDim + $i);
-         |      $s += $d * $d;
-         |    }
-         |    if ($best < 0 || java.lang.Double.compare($s, $bestD) < 0) {
-         |      $best = $c; $bestD = $s;
-         |    }
-         |  }
-         |  $codes[$m] = $best;
-         |  $dists[$m] = $bestD;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-         |  new Object[]{
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($codes),
-         |    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($dists)});
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAssign =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqAssign {
   /** Column-DSL entry point. */
   def of(v: Column, centsFlat: Column, subDim: Int): Column =
-    bridge.column(PqAssign(bridge.expression(v), bridge.expression(centsFlat),
-      subDim))
+    PqAssign(expr(v), expr(centsFlat), subDim).toColumn
 }

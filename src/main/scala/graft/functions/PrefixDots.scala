@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
+import NativeExpression.expr
 
 /** Native prefix dot products over two `array<double>` columns: element j
   * of the result is the dot product of the first `cuts(j)` elements —
@@ -21,23 +20,25 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * columns in practice).
   */
 case class PrefixDots(left: Expression, right: Expression, cuts: Seq[Int])
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _))
-        if cuts.nonEmpty && cuts == cuts.sorted && cuts.head > 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>) and ascending " +
-          s"positive cuts, got ($l, $r), cuts=$cuts")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    extends NativeBinary {
   override def prettyName: String = "graft_prefix_dots"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override protected def paramRule: String = "ascending positive cuts"
+  override protected def paramsValid: Boolean =
+    cuts.nonEmpty && cuts == cuts.sorted && cuts.head > 0
+  override protected def kernel: String = "dots"
+  override protected def params: Seq[Any] = Seq(cuts.toArray)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PrefixDots =
+    copy(left = newLeft, right = newRight)
+}
+
+object PrefixDots {
+  /** The kernel: the running dot product, emitted at each cut. */
+  def dots(x: ArrayData, y: ArrayData, cuts: Array[Int]): ArrayData = {
     val n = math.min(x.numElements(), y.numElements())
     val out = new Array[Double](cuts.length)
     var s = 0.0
@@ -49,38 +50,10 @@ case class PrefixDots(left: Expression, right: Expression, cuts: Seq[Int])
       out(j) = s
       j += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val out = ctx.freshName("out")
-      val s = ctx.freshName("s"); val i = ctx.freshName("i")
-      val j = ctx.freshName("j"); val end = ctx.freshName("end")
-      val cutsArr = ctx.freshName("cuts")
-      val cutsInit = cuts.mkString(", ")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int[] $cutsArr = new int[]{$cutsInit};
-         |double[] $out = new double[${cuts.length}];
-         |double $s = 0.0;
-         |int $i = 0;
-         |for (int $j = 0; $j < ${cuts.length}; $j++) {
-         |  int $end = java.lang.Math.min($cutsArr[$j], $n);
-         |  for (; $i < $end; $i++) { $s += $a.getDouble($i) * $b.getDouble($i); }
-         |  $out[$j] = $s;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PrefixDots =
-    copy(left = newLeft, right = newRight)
-}
-
-object PrefixDots {
   /** Column-DSL entry point. */
   def of(a: Column, b: Column, cuts: Seq[Int]): Column =
-    bridge.column(PrefixDots(bridge.expression(a), bridge.expression(b), cuts))
+    PrefixDots(expr(a), expr(b), cuts).toColumn
 }

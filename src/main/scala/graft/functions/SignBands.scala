@@ -1,13 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+
+import NativeExpression.expr
 
 /** All sign-LSH band keys of a vector in ONE native expression: project
   * the `array<double>` child onto every row of a static hyperplane
@@ -24,29 +22,33 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * 8000-bytecode `DontCompileHugeMethods` limit, the stage silently
   * runs in the bytecode interpreter, and the 200k-vector sf10 corpus
   * paid 52 s for ~400 MFLOP of work (r17 scratch profile; the identical
-  * plan under the JIT runs in ~1 s). This loop is a few hundred
-  * bytecodes whatever the plane count: always JIT'd, and cheap enough
-  * that the inferred-filter duplication is immaterial.
+  * plan under the JIT runs in ~1 s). Here the generated code is one call
+  * of the [[SignBands.bands]] kernel whatever the plane count, and the
+  * kernel is compiled by the JIT on its own, so the inferred-filter
+  * duplication is immaterial.
   *
-  * The plane matrix rides the expression as a codegen reference object
+  * The plane matrix reaches the kernel as a codegen reference object
   * (2 KB of static doubles), not as literal AST — the tree stays small
   * for the optimizer too. */
 case class SignBands(child: Expression, planes: Array[Array[Double]],
-                     bitsPerBand: Int) extends UnaryExpression {
-
-  require(planes.nonEmpty && planes.length % bitsPerBand == 0,
-    s"plane count ${planes.length} must be a positive multiple of $bitsPerBand")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<double>, got $t")
-  }
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+                     bitsPerBand: Int) extends NativeUnary {
   override def prettyName: String = "graft_sign_bands"
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override protected def paramRule: String =
+    "a plane count that is a positive multiple of bitsPerBand > 0"
+  override protected def paramsValid: Boolean =
+    bitsPerBand > 0 && planes.nonEmpty && planes.length % bitsPerBand == 0
+  override protected def kernel: String = "bands"
+  override protected def params: Seq[Any] = Seq(planes, bitsPerBand)
 
-  override def nullSafeEval(a: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
+  override protected def withNewChildInternal(newChild: Expression): SignBands =
+    copy(child = newChild)
+}
+
+object SignBands {
+  /** The kernel: one sign bit per plane, packed `bitsPerBand` to a band. */
+  def bands(v: ArrayData, planes: Array[Array[Double]], bitsPerBand: Int): ArrayData = {
     val out = new Array[Int](planes.length / bitsPerBand)
     var j = 0
     while (j < planes.length) {
@@ -61,32 +63,7 @@ case class SignBands(child: Expression, planes: Array[Array[Double]],
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mat = ctx.addReferenceObj("planes", planes, "double[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |int[] ${ev.value}_out = new int[${planes.length / bitsPerBand}];
-         |for (int ${ev.value}_j = 0; ${ev.value}_j < ${planes.length}; ${ev.value}_j++) {
-         |  double[] ${ev.value}_p = $mat[${ev.value}_j];
-         |  int ${ev.value}_n = java.lang.Math.min($v.numElements(), ${ev.value}_p.length);
-         |  double ${ev.value}_s = 0.0;
-         |  for (int ${ev.value}_i = 0; ${ev.value}_i < ${ev.value}_n; ${ev.value}_i++) {
-         |    ${ev.value}_s += $v.getDouble(${ev.value}_i) * ${ev.value}_p[${ev.value}_i];
-         |  }
-         |  if (${ev.value}_s >= 0) {
-         |    ${ev.value}_out[${ev.value}_j / $bitsPerBand] |= 1 << (${ev.value}_j % $bitsPerBand);
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(${ev.value}_out);
-         |""".stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SignBands =
-    copy(child = newChild)
-}
-
-object SignBands {
   /** Column-DSL entry point. */
   def of(v: Column, planes: Array[Array[Double]], bitsPerBand: Int): Column =
-    bridge.column(SignBands(bridge.expression(v), planes, bitsPerBand))
+    SignBands(expr(v), planes, bitsPerBand).toColumn
 }

@@ -3,14 +3,13 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** The portable hash family shared by the dedup sketches and their DuckDB
   * oracles — the single source of truth for the universal-hash constants
@@ -65,46 +64,17 @@ object MinHashSeeds {
   * document and burns a hash-aggregate over O(docs × shingles) exploded
   * rows; signatures are per-row pure functions, so the right plan is a
   * map-only projection — no exchange at ANY scale, and whole-stage codegen
-  * keeps the multiply-add-mod-min loop tight (the interpreted higher-order
-  * `transform`/`aggregate` fold this replaced in round 2 was 15× slower).
+  * calls the multiply-add-mod-min kernel directly (the interpreted
+  * higher-order `transform`/`aggregate` fold this replaced in round 2 was
+  * 15× slower).
   * Bit-for-bit the same values, so the DuckDB oracle (unnest + GROUP BY
   * min) is unchanged.
   */
-case class MinHashSignatures(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<long>, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class MinHashSignatures(child: Expression) extends NativeUnary {
   override def prettyName: String = "graft_minhash_sig"
-
-  override def nullSafeEval(v: Any): Any = {
-    val sh = v.asInstanceOf[ArrayData]
-    val out = MinHashSignatures.emptySig()
-    var j = 0
-    val n = sh.numElements()
-    while (j < n) {
-      MinHashSignatures.mix(out, sh.getLong(j))
-      j += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val out = ctx.freshName("sig")
-      val j = ctx.freshName("j")
-      s"""
-         |long[] $out = graft.functions.MinHashSignatures.emptySig();
-         |for (int $j = 0; $j < $a.numElements(); $j++) {
-         |  graft.functions.MinHashSignatures.mix($out, $a.getLong($j));
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |""".stripMargin
-    })
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  override protected def kernel: String = "ofShingles"
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignatures =
     copy(child = newChild)
@@ -116,28 +86,29 @@ object MinHashSignatures {
   private val SA: Array[Long] = Array.tabulate(NumHashes)(MinHashSeeds.a)
   private val SB: Array[Long] = Array.tabulate(NumHashes)(MinHashSeeds.b)
 
-  /** All-MaxValue seed buffer (an empty shingle set keeps it — upstream
-    * guarantees ≥1 shingle per doc). Static so generated code can call it. */
-  def emptySig(): Array[Long] = {
+  /** The kernel: every shingle hash folded into an all-MaxValue seed
+    * buffer (an empty shingle set keeps it — upstream guarantees ≥1
+    * shingle per doc). */
+  def ofShingles(shingles: ArrayData): ArrayData = {
     val out = new Array[Long](NumHashes)
     java.util.Arrays.fill(out, Long.MaxValue)
-    out
-  }
-
-  /** Fold one shingle hash into the signature buffer (called from both the
-    * interpreted eval and the generated code). */
-  def mix(out: Array[Long], h: Long): Unit = {
-    var i = 0
-    while (i < NumHashes) {
-      val x = (SA(i) * h + SB(i)) % MinHashSeeds.P
-      if (x < out(i)) out(i) = x
-      i += 1
+    var j = 0
+    while (j < shingles.numElements()) {
+      val h = shingles.getLong(j)
+      var i = 0
+      while (i < NumHashes) {
+        val x = (SA(i) * h + SB(i)) % MinHashSeeds.P
+        if (x < out(i)) out(i) = x
+        i += 1
+      }
+      j += 1
     }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** Column-DSL entry point. */
   def of(hashedShingles: Column): Column =
-    bridge.column(MinHashSignatures(bridge.expression(hashedShingles)))
+    MinHashSignatures(expr(hashedShingles)).toColumn
 }
 
 /** Native hashed word k-shingles: string → `array<long>` of distinct
@@ -162,22 +133,12 @@ object MinHashSignatures {
   * Docs shorter than k tokens fall back to the whole text as a single
   * shingle (same as the declarative form's `otherwise(array(text))`).
   */
-case class HashedShingles(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class HashedShingles(child: Expression, k: Int) extends NativeUnary {
   override def prettyName: String = "graft_hashed_shingles"
-
-  override def nullSafeEval(v: Any): Any =
-    HashedShingles.ofText(v.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.HashedShingles.ofText($a, $k);")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def kernel: String = "ofText"
+  override protected def params: Seq[Any] = Seq(k)
 
   override protected def withNewChildInternal(newChild: Expression): HashedShingles =
     copy(child = newChild)
@@ -185,7 +146,7 @@ case class HashedShingles(child: Expression, k: Int) extends UnaryExpression {
 
 object HashedShingles {
 
-  /** Shared by eval and generated code: tokenize, shingle, hash, distinct.
+  /** The kernel: tokenize, shingle, hash, distinct.
     * The result is SORTED ascending (round 6): no consumer depends on
     * shingle order (signatures min-fold, set intersections, explodes),
     * and a sorted representation lets [[SortedIntersectCount]] intersect
@@ -221,7 +182,7 @@ object HashedShingles {
 
   /** Column-DSL entry point. */
   def of(text: Column, k: Int): Column =
-    bridge.column(HashedShingles(bridge.expression(text), k))
+    HashedShingles(expr(text), k).toColumn
 }
 
 /** Native within-document repetition statistics: `array<string>` tokens →
@@ -241,22 +202,11 @@ object HashedShingles {
   * sf0.1 bench for 5000 docs). The DuckDB oracle keeps its relational
   * list-ops form — only the VALUES must match, not the algorithm.
   */
-case class RepetitionStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $other")
-  }
-  override def dataType: DataType = RepetitionStats.Out
+case class RepetitionStats(child: Expression) extends NativeUnary {
   override def prettyName: String = "graft_repetition_stats"
-
-  override def nullSafeEval(v: Any): Any =
-    RepetitionStats.ofTokens(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.RepetitionStats.ofTokens($a);")
+  override def dataType: DataType = RepetitionStats.Out
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override protected def kernel: String = "ofTokens"
 
   override protected def withNewChildInternal(newChild: Expression): RepetitionStats =
     copy(child = newChild)
@@ -268,7 +218,7 @@ object RepetitionStats {
     StructField("top_bigram_frac", DoubleType, nullable = false),
     StructField("dup_trigram_frac", DoubleType, nullable = false)))
 
-  /** Shared by eval and generated code. */
+  /** The kernel. */
   def ofTokens(tokens: ArrayData): InternalRow = {
     val n = tokens.numElements()
     val toks = new Array[String](n)
@@ -311,7 +261,7 @@ object RepetitionStats {
 
   /** Column-DSL entry point. */
   def of(tokens: Column): Column =
-    bridge.column(RepetitionStats(bridge.expression(tokens)))
+    RepetitionStats(expr(tokens)).toColumn
 }
 
 /** Native signature-agreement count: two `array<long>` MinHash signatures
@@ -322,25 +272,11 @@ object RepetitionStats {
   * allocated a lambda frame per element per pair. Same values, so every
   * oracle's `len(list_filter(range(n), i -> a[i+1] = b[i+1]))` mirror is
   * unchanged. */
-case class SigAgreement(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<long>, array<long>), got $other")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+case class SigAgreement(left: Expression, right: Expression) extends NativeBinary {
   override def prettyName: String = "graft_sig_agreement"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SigAgreement.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SigAgreement.count($a, $b);")
+  override def dataType: DataType = IntegerType
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override protected def kernel: String = "count"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SigAgreement =
@@ -348,7 +284,7 @@ case class SigAgreement(left: Expression, right: Expression)
 }
 
 object SigAgreement {
-  /** Shared by eval and generated code. */
+  /** The kernel. */
   def count(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
@@ -362,7 +298,7 @@ object SigAgreement {
 
   /** Column-DSL entry point. */
   def of(a: Column, b: Column): Column =
-    bridge.column(SigAgreement(bridge.expression(a), bridge.expression(b)))
+    SigAgreement(expr(a), expr(b)).toColumn
 }
 
 /** Native intersection size of two SORTED distinct `array<long>`s → int,
@@ -384,24 +320,11 @@ object SigAgreement {
   * merge verify the precondition on every pair (debug-only: adds a
   * branch per element). */
 case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<long>, array<long>), got $other")
-    }
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+    extends NativeBinary {
   override def prettyName: String = "graft_sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCount.count(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SortedIntersectCount.count($a, $b);")
+  override def dataType: DataType = IntegerType
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override protected def kernel: String = "count"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
@@ -426,7 +349,7 @@ object SortedIntersectCount {
     }
   }
 
-  /** Shared by eval and generated code. Inputs must be sorted ascending
+  /** The kernel. Inputs must be sorted ascending
     * and distinct (see the class scaladoc contract). */
   def count(a: ArrayData, b: ArrayData): Int = {
     if (checkSorted) { requireSorted(a); requireSorted(b) }
@@ -447,7 +370,7 @@ object SortedIntersectCount {
 
   /** Column-DSL entry point. */
   def of(a: Column, b: Column): Column =
-    bridge.column(SortedIntersectCount(bridge.expression(a), bridge.expression(b)))
+    SortedIntersectCount(expr(a), expr(b)).toColumn
 }
 
 /** Native 60-bit SimHash: `array<string>` tokens → long. Per token,
@@ -471,22 +394,11 @@ object SortedIntersectCount {
   * inherent (it IS the portable hash both engines share); this just stops
   * paying an exchange to fold 32 bits per document.
   */
-case class SimHash60(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string>, got $other")
-  }
-  override def dataType: DataType = LongType
+case class SimHash60(child: Expression) extends NativeUnary {
   override def prettyName: String = "graft_simhash60"
-
-  override def nullSafeEval(v: Any): Any =
-    SimHash60.ofTokens(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SimHash60.ofTokens($a);")
+  override def dataType: DataType = LongType
+  override protected def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
+  override protected def kernel: String = "ofTokens"
 
   override protected def withNewChildInternal(newChild: Expression): SimHash60 =
     copy(child = newChild)
@@ -495,7 +407,7 @@ case class SimHash60(child: Expression) extends UnaryExpression {
 object SimHash60 {
   val Bits = 60
 
-  /** Shared by eval and generated code. Bit votes are summed per
+  /** The kernel. Bit votes are summed per
     * DISTINCT token weighted by its occurrence count — algebraically
     * identical to voting once per occurrence (the sum commutes), but
     * md5 runs once per distinct token: on natural text, where stopword
@@ -533,5 +445,5 @@ object SimHash60 {
 
   /** Column-DSL entry point. */
   def of(tokens: Column): Column =
-    bridge.column(SimHash60(bridge.expression(tokens)))
+    SimHash60(expr(tokens)).toColumn
 }

@@ -3,12 +3,12 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import NativeExpression.expr
 
 /** Native positional word-n-gram hashes: a document string → `array<long>`
   * where element i is `h32` (md5 first 4 bytes, big-endian unsigned — the
@@ -26,22 +26,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * single-space split — the [[GramCounts]] equivalence argument) and md5
   * runs over the range directly. Same values in the same positions, so
   * every DuckDB oracle is unchanged. */
-case class SpanGramHashes(child: Expression, n: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if n > 0 => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string and n > 0, got $other")
-  }
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+case class SpanGramHashes(child: Expression, n: Int) extends NativeUnary {
   override def prettyName: String = "graft_span_gram_hashes"
-
-  override def nullSafeEval(v: Any): Any =
-    SpanGramHashes.ofText(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.SpanGramHashes.ofText($a, $n);")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] = Seq(StringType)
+  override protected def paramRule: String = "n > 0"
+  override protected def paramsValid: Boolean = n > 0
+  override protected def kernel: String = "ofText"
+  override protected def params: Seq[Any] = Seq(n)
 
   override protected def withNewChildInternal(newChild: Expression): SpanGramHashes =
     copy(child = newChild)
@@ -49,8 +41,8 @@ case class SpanGramHashes(child: Expression, n: Int) extends UnaryExpression {
 
 object SpanGramHashes {
 
-  /** Shared by eval and generated code. */
-  def ofText(text: org.apache.spark.unsafe.types.UTF8String, n: Int): ArrayData = {
+  /** The kernel. */
+  def ofText(text: UTF8String, n: Int): ArrayData = {
     val b = text.getBytes
     val len = b.length
     var spaces = 0
@@ -81,5 +73,5 @@ object SpanGramHashes {
 
   /** Column-DSL entry point. */
   def of(text: Column, n: Int): Column =
-    bridge.column(SpanGramHashes(bridge.expression(text), n))
+    SpanGramHashes(expr(text), n).toColumn
 }

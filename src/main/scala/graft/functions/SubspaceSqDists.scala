@@ -1,12 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+
+import NativeExpression.expr
 
 /** Native per-subspace squared-L2 distances over two `array<double>`
   * columns cut into `subDim`-wide subspaces — the PQ hot loop
@@ -17,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * `aggregate(zip_with(slice(v,…), slice(cv,…), (x,y) ⇒ (x−y)²), 0.0, _+_)`
   * per subspace: higher-order functions are CodegenFallback (allocating
   * two slices plus a zipped array per subspace per pair), while this
-  * expression participates in whole-stage codegen as one tight loop.
+  * expression participates in whole-stage codegen as one kernel call.
   *
   * Semantics match the higher-order formulation bit-for-bit: element m of
   * the result is the strict left-to-right IEEE fold of (x−y)·(x−y) over
@@ -26,22 +25,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * min(len(a), len(b)) / subDim (equal 64-dim inputs in practice).
   */
 case class SubspaceSqDists(left: Expression, right: Expression, subDim: Int)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) if subDim > 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<double>, array<double>) and subDim > 0, " +
-          s"got ($l, $r), subDim=$subDim")
-    }
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    extends NativeBinary {
   override def prettyName: String = "graft_subspace_sq_dists"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override protected def inputTypes: Seq[DataType] =
+    Seq(ArrayType(DoubleType), ArrayType(DoubleType))
+  override protected def paramRule: String = "subDim > 0"
+  override protected def paramsValid: Boolean = subDim > 0
+  override protected def kernel: String = "dists"
+  override protected def params: Seq[Any] = Seq(subDim)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SubspaceSqDists =
+    copy(left = newLeft, right = newRight)
+}
+
+object SubspaceSqDists {
+  /** The kernel: one squared-L2 fold per whole subspace. */
+  def dists(x: ArrayData, y: ArrayData, subDim: Int): ArrayData = {
     val nSub = math.min(x.numElements(), y.numElements()) / subDim
     val out = new Array[Double](nSub)
     var m = 0
@@ -57,43 +58,10 @@ case class SubspaceSqDists(left: Expression, right: Expression, subDim: Int)
       out(m) = s
       m += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("nSub")
-      val out = ctx.freshName("out")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val end = ctx.freshName("end")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements()) / $subDim;
-         |double[] $out = new double[$n];
-         |for (int $m = 0; $m < $n; $m++) {
-         |  double $s = 0.0;
-         |  int $i = $m * $subDim;
-         |  int $end = $i + $subDim;
-         |  for (; $i < $end; $i++) {
-         |    double $d = $a.getDouble($i) - $b.getDouble($i);
-         |    $s += $d * $d;
-         |  }
-         |  $out[$m] = $s;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SubspaceSqDists =
-    copy(left = newLeft, right = newRight)
-}
-
-object SubspaceSqDists {
   /** Column-DSL entry point. */
   def of(a: Column, b: Column, subDim: Int): Column =
-    bridge.column(SubspaceSqDists(bridge.expression(a), bridge.expression(b),
-      subDim))
+    SubspaceSqDists(expr(a), expr(b), subDim).toColumn
 }

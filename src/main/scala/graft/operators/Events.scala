@@ -463,7 +463,7 @@ object Events {
 
   /** The (event_type, day) count grain of [[dailyAnomaly]] — also the unit
     * the streaming monitor accumulates per micro-batch
-    * ([[graft.streaming.StreamingAnomaly]]), so batch and streaming score
+    * ([[graft.streaming.StreamingDailyMonitor.anomaly]]), so batch and streaming score
     * the same frame. */
   def dailyCounts(events: DataFrame): DataFrame =
     events
@@ -945,7 +945,7 @@ object Events {
 
   /** [[forecastBacktest]] over an already-materialized (event_type, day,
     * n_events) grain — shared verbatim with the continuous monitor
-    * ([[graft.streaming.StreamingDailyForecast]] scores its accumulated
+    * ([[graft.streaming.StreamingDailyMonitor.forecast]] scores its accumulated
     * counter table with THIS function), so batch and streamed backtests
     * cannot drift. Callers pass a staged/compact frame: the lag join
     * consumes it twice. */

@@ -14,7 +14,7 @@ import graft.operators.Events.SessionGapMicros
   * constant as the batch family) or EMITS the (from → to) transition it
   * completes. Crucially this includes transitions whose two events arrive
   * in DIFFERENT micro-batches — the case a per-batch recomputation
-  * (the foreachBatch counter pattern [[StreamingAnomaly]] uses for its
+  * (the foreachBatch counter pattern [[StreamingDailyMonitor]] uses for its
   * additive counts) structurally cannot see, and the reason this family
   * needs real keyed state rather than a merge of per-batch aggregates.
   *

@@ -51,7 +51,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *     batchId (foreachBatch recomputes a replayed batch
   *     deterministically). Pinned in `KeyedStateRestartSpec`.
   *
-  * The stateful monitors ([[StreamingAnomaly]], [[StreamingDailyForecast]],
+  * The stateful monitors ([[StreamingDailyMonitor]] and
   * [[StreamingHeavyHitters]]) run through the same runner; their `score`
   * folds the batch into driver-side state before scoring. */
 object StreamingScorer {

@@ -254,6 +254,39 @@ class GramClfAdcExprSpec extends SparkSpec {
     }
   }
 
+  test("AdcDist throws on a null table entry or code, an out-of-range code and a short table") {
+    val sp = spark; import sp.implicits._
+    val k = 4
+    val qtab = (0 until 2 * k).map(i => Option(i * 0.5))
+    val malformed = Seq(
+      "null qtab entry" -> (Seq(Option(1), Option(2)), qtab.updated(k + 2, None)),
+      "null code" -> (Seq(Option(1), None), qtab),
+      "outside [0, 4)" -> (Seq(Option(0), Option(k)), qtab),
+      "outside [0, 4)" -> (Seq(Option(-1), Option(0)), qtab),
+      "fewer than nSub·k" -> (Seq(Option(0), Option(0)), qtab.take(2 * k - 1)))
+    for ((expected, (codes, table)) <- malformed; codegen <- Seq(false, true)) {
+      val df = Seq((codes, table)).toDF("codes", "qtab")
+      // a repartitioned frame is evaluated by generated code in a task; a
+      // local one by the optimizer's interpreted local-relation folding
+      val in = if (codegen) df.repartition(2) else df
+      val e = intercept[Exception] {
+        in.select(AdcDist.of(col("codes"), col("qtab"), k)).collect()
+      }
+      val messages = Iterator.iterate(e: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      withClue(s"codegen=$codegen: ") { messages should include(expected) }
+    }
+  }
+
+  test("ClfStats over equal copies of the weights are equal and semantically equal") {
+    val w = graft.operators.TextAnalysis.ClfWeightTenths
+    val text = lit("a b")
+    val a = org.apache.spark.sql.graft.bridge.expression(ClfStats.of(text, w.toList))
+    val b = org.apache.spark.sql.graft.bridge.expression(ClfStats.of(text, w.toVector))
+    a shouldBe b
+    a.semanticEquals(b) shouldBe true
+  }
+
   test("capacity hint saturates at 2^16 instead of overflowing") {
     // the old min(n * 2, 1 << 16) went negative past 2^30 slots
     GramCounts.capacityHint(1 << 30) shouldBe (1 << 16)

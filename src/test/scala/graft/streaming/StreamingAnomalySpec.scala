@@ -32,7 +32,7 @@ class StreamingAnomalySpec extends SparkSpec {
     val in = MemoryStream[(Long, Long, Long, String, Double, String)]
     val events = in.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val monitor = new StreamingAnomaly()
+    val monitor = StreamingDailyMonitor.anomaly()
     var emitted = Vector.empty[(Long, Map[(String, Long), (Long, Boolean)])]
     val q = monitor.run(events,
       Files.createTempDirectory("graft-sanomaly-").toString) { (id, scored) =>
@@ -75,7 +75,7 @@ class StreamingAnomalySpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
     val in = MemoryStream[(Long, Long, Long, String, Double, String)]
-    val monitor = new StreamingAnomaly()
+    val monitor = StreamingDailyMonitor.anomaly()
     val q = monitor.run(in.toDF()
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       Files.createTempDirectory("graft-sanomaly-").toString) { (_, _) => () }
@@ -97,7 +97,7 @@ class StreamingAnomalySpec extends SparkSpec {
 
     // first monitor sees the quiet days, then "crashes"
     val in1 = MemoryStream[(Long, Long, Long, String, Double, String)]
-    val m1 = new StreamingAnomaly()
+    val m1 = StreamingDailyMonitor.anomaly()
     val q1 = m1.run(in1.toDF()
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       Files.createTempDirectory("graft-sanomaly-").toString) { (_, _) => () }
@@ -110,7 +110,7 @@ class StreamingAnomalySpec extends SparkSpec {
 
     // second monitor continues from the restored state
     val in2 = MemoryStream[(Long, Long, Long, String, Double, String)]
-    val m2 = new StreamingAnomaly(initial = Some(restored))
+    val m2 = StreamingDailyMonitor.anomaly(initial = Some(restored))
     val q2 = m2.run(in2.toDF()
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
       Files.createTempDirectory("graft-sanomaly-").toString) { (_, _) => () }

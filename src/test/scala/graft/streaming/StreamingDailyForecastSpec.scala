@@ -35,7 +35,7 @@ class StreamingDailyForecastSpec extends SparkSpec {
     val in = MemoryStream[(Long, Long, Long, String, Double, String)]
     val events = in.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val monitor = new StreamingDailyForecast()
+    val monitor = StreamingDailyMonitor.forecast()
     var emitted = Vector.empty[Map[String, (Long, Double, Double)]]
     val q = monitor.run(events,
       Files.createTempDirectory("graft-sforecast-").toString) { (_, bt) =>
@@ -77,7 +77,7 @@ class StreamingDailyForecastSpec extends SparkSpec {
     val sp = spark; import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
     // first monitor sees the first 13 days, then "crashes"
-    val m1 = new StreamingDailyForecast()
+    val m1 = StreamingDailyMonitor.forecast()
     val in1 = MemoryStream[(Long, Long, Long, String, Double, String)]
     val q1 = m1.run(in1.toDF()
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props"),
@@ -85,7 +85,7 @@ class StreamingDailyForecastSpec extends SparkSpec {
     try { in1.addData(rows(0 until 13)); q1.processAllAvailable() }
     finally q1.stop()
     // reseed from its (persistable) counter state, feed only the tail
-    val m2 = new StreamingDailyForecast(m1.state)
+    val m2 = StreamingDailyMonitor.forecast(m1.state)
     val in2 = MemoryStream[(Long, Long, Long, String, Double, String)]
     var last = Map.empty[String, (Long, Double, Double)]
     val q2 = m2.run(in2.toDF()

@@ -6,11 +6,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 
+object StreamingExactDedupSpec {
+  case class Ev(ts: Timestamp, event_id: Long, value: Double)
+}
+
 /** Native within-watermark dedup: first arrival passes, redeliveries
   * inside the horizon drop, state evicts past the watermark. */
 class StreamingExactDedupSpec extends SparkSpec {
-
-  private case class Ev(ts: Timestamp, event_id: Long, value: Double)
+  import StreamingExactDedupSpec.Ev
 
   test("redeliveries drop within the horizon; state evicts after it") {
     val sp = spark; import sp.implicits._

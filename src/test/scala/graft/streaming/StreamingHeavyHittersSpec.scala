@@ -5,12 +5,15 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import graft.operators.TextAnalysis
 
+object StreamingHeavyHittersSpec {
+  case class Doc(text: String)
+}
+
 /** The continuous sketch carries the MG guarantee across triggers and a
   * warm restart, and agrees with the batch family's exact answer after a
   * candidate recount. */
 class StreamingHeavyHittersSpec extends SparkSpec {
-
-  private case class Doc(text: String)
+  import StreamingHeavyHittersSpec.Doc
 
   private def chunk(terms: Seq[String]): Doc = Doc(terms.mkString(" "))
 

@@ -7,11 +7,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import graft.operators.Events
 
+object StreamingHoppingSpec {
+  case class Ev(ts: Timestamp, event_type: String, value: Double)
+}
+
 /** Hopping windows close on the watermark and agree with the batch
   * face's window assignment and aggregates. */
 class StreamingHoppingSpec extends SparkSpec {
-
-  private case class Ev(ts: Timestamp, event_type: String, value: Double)
+  import StreamingHoppingSpec.Ev
 
   test("closed hopping windows match the batch face cell for cell") {
     val sp = spark; import sp.implicits._

@@ -7,11 +7,14 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 import graft.operators.Events
 
+object StreamingSessionsSpec {
+  case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
+}
+
 /** Native session windows: merge within the gap, close at the watermark,
   * emit exactly once, and cover the same events as a batch session. */
 class StreamingSessionsSpec extends SparkSpec {
-
-  private case class Ev(ts: Timestamp, user_id: Long, event_type: String, value: Double)
+  import StreamingSessionsSpec.Ev
 
   test("sessions merge within the gap, close on watermark, and match batch grouping") {
     val sp = spark; import sp.implicits._
