@@ -40,8 +40,7 @@ object MainApp {
       stateDir: Option[String] = None,
       publishEverySec: Long = 10L,
       staging: Option[String] = None,
-      stagingDir: Option[String] = None,
-      stateStore: String = "default")
+      stagingDir: Option[String] = None)
 
   def parse(args: Array[String]): Conf = {
     require(args.length % 2 == 0,
@@ -56,7 +55,6 @@ object MainApp {
       case (c, Array("--publish-every", v)) => c.copy(publishEverySec = v.toLong)
       case (c, Array("--staging", v))       => c.copy(staging = Some(v))
       case (c, Array("--staging-dir", v))   => c.copy(stagingDir = Some(v))
-      case (c, Array("--state-store", v))   => c.copy(stateStore = v)
       case (_, other) =>
         throw new IllegalArgumentException(s"unknown arguments: ${other.mkString(" ")}")
     }
@@ -67,8 +65,6 @@ object MainApp {
         graft.engine.Staging.ReliableCheckpoint, graft.engine.Staging.Persist)(p),
         s"--staging must be local-checkpoint|reliable-checkpoint|persist, got '$p'")
     }
-    require(Set("default", "rocksdb")(conf.stateStore),
-      s"--state-store must be default|rocksdb, got '${conf.stateStore}'")
     conf
   }
 
@@ -77,7 +73,8 @@ object MainApp {
 
   /** Wire the whole app: create the input topics (idempotent, as the
     * reference runner does at startup), subscribe → 13 queries → one
-    * periodic-publish step that skips cycles where nothing changed.
+    * periodic-publish step that writes only the tables changed since the
+    * last publish.
     * Returns the job, its queries, and the publish step (testable without
     * blocking). */
   def wire(spark: SparkSession, conf: Conf): (TransitStreamingJob, Seq[StreamingQuery], () => Unit) = {
@@ -87,11 +84,6 @@ object MainApp {
     // so an executor loss recovers instead of killing the stream
     conf.staging.foreach(spark.conf.set(graft.engine.Staging.PolicyKey, _))
     conf.stagingDir.foreach(spark.conf.set(graft.engine.Staging.DirKey, _))
-    // `--state-store rocksdb`: off-heap keyed state for user/document-
-    // cardinality ledgers (streaming.StateStores) — set BEFORE any
-    // query starts, kept stable across restarts of one checkpoint
-    if (conf.stateStore == "rocksdb")
-      graft.streaming.StateStores.useRocksDb(spark)
     val ckptExists = new java.io.File(conf.checkpoint).exists()
     require(conf.stateDir.nonEmpty || !ckptExists,
       s"checkpoint ${conf.checkpoint} exists but no --state was given: sources " +
@@ -104,16 +96,12 @@ object MainApp {
       spark, ref("Routes_topic"), ref("Trips_topic"), conf.stateDir)
     val queries = job.startAll(conf.checkpoint)
     // serialised: the periodic publisher and the final flush may overlap,
-    // and two concurrent publishAll runs would append the same generation
-    // twice into topic directories that share one `_temporary` commit dir
+    // and two concurrent publishes would append the same generation twice
+    // into topic directories that share one `_temporary` commit dir
     val lock = new Object
-    var publishedAt = -1L
+    var sent = Map.empty[String, Long]
     val publish = () => lock.synchronized {
-      val m = job.store.mutationCount
-      if (m != publishedAt) {
-        ResultPublisher.publishAll(job.store, ref)
-        publishedAt = m
-      }
+      sent = ResultPublisher.publishChanged(job.store, ref, sent)
     }
     (job, queries, publish)
   }

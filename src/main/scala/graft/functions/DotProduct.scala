@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** Native Catalyst dot product over two `array<double>` columns — the
   * custom-`Expression`-with-`doGenCode` path for the one piece of vector
@@ -21,9 +21,8 @@ import NativeExpression.expr
   *
   * Semantics match the higher-order formulation bit-for-bit on well-formed
   * input (strict left-to-right IEEE summation — the order the DuckDB
-  * oracle's `list_dot_product` also uses). Assumes non-null elements and
-  * equal lengths (embedding columns; enforced upstream); on a length
-  * mismatch the shorter prefix is used.
+  * oracle's `list_dot_product` also uses). A null element throws; on a
+  * length mismatch the shorter prefix is used.
   */
 case class DotProduct(left: Expression, right: Expression) extends NativeBinary {
   override def prettyName: String = "graft_dot"
@@ -40,6 +39,8 @@ case class DotProduct(left: Expression, right: Expression) extends NativeBinary 
 object DotProduct {
   /** The kernel: Σ x[i]·y[i] over the shorter length, left to right. */
   def dot(x: ArrayData, y: ArrayData): Double = {
+    requireNoNullElements("graft_dot", "left", x)
+    requireNoNullElements("graft_dot", "right", y)
     val n = math.min(x.numElements(), y.numElements())
     var s = 0.0
     var i = 0

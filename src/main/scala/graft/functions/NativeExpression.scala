@@ -4,11 +4,14 @@ import java.lang.invoke.{MethodHandle, MethodHandles, MethodType}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types.DataType
+import org.apache.spark.unsafe.Platform
 
 /** The shell every native expression shares: the expression names one
   * static kernel on its companion object, and interpreted eval and
@@ -21,7 +24,9 @@ import org.apache.spark.sql.types.DataType
   * (`UTF8String`, `ArrayData`, `byte[]`), then the expression's constant
   * [[params]], and returns the Java type of `dataType`; a primitive
   * result (`long`, `int`, `double`) stays unboxed in generated code. A
-  * null child yields null without calling the kernel. */
+  * null child yields null without calling the kernel. A null ELEMENT of
+  * an array child is malformed input: the kernel fails with
+  * [[NativeExpression.requireNoNullElements]] and never reads it as 0. */
 sealed trait NativeExpression extends Expression {
 
   /** Name of the static kernel on the companion object. */
@@ -88,6 +93,25 @@ sealed trait NativeExpression extends Expression {
 object NativeExpression {
   /** The Catalyst expression of a Column argument. */
   def expr(c: Column): Expression = bridge.expression(c)
+
+  /** The rule for array arguments: every element is non-null. A kernel
+    * calls this on each array before its loop; a null element throws
+    * `IllegalArgumentException("<name>: null element <i> of <what>")` on
+    * both evaluation paths. The unsafe layout's null bits (after its
+    * 8-byte element count) are read 64 at a time, so the loops stay
+    * check-free. */
+  def requireNoNullElements(name: String, what: String, a: ArrayData): Unit = {
+    val n = a.numElements()
+    var i = 0
+    a match {
+      case u: UnsafeArrayData =>
+        while (i < n && Platform.getLong(u.getBaseObject, u.getBaseOffset + 8L + i / 8) == 0L)
+          i += 64
+      case _ =>
+    }
+    while (i < n && !a.isNullAt(i)) i += 1
+    if (i < n) throw new IllegalArgumentException(s"$name: null element $i of $what")
+  }
 }
 
 abstract class NativeUnary extends UnaryExpression with NativeExpression {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** Native map-only PQ assignment: for a vector `v` (array<double>) and a
   * FLATTENED codebook `cf` (the K codewords' vectors concatenated in code
@@ -51,6 +51,8 @@ case class PqAssign(left: Expression, right: Expression, subDim: Int)
 object PqAssign {
   /** The kernel: per subspace, the first code with the smallest distance. */
   def assign(v: ArrayData, cf: ArrayData, subDim: Int): InternalRow = {
+    requireNoNullElements("graft_pq_assign", "vector", v)
+    requireNoNullElements("graft_pq_assign", "codebook", cf)
     val n = v.numElements()
     val k = if (n == 0) 0 else cf.numElements() / n
     val nSub = n / subDim

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** Native prefix dot products over two `array<double>` columns: element j
   * of the result is the dot product of the first `cuts(j)` elements —
@@ -39,6 +39,8 @@ case class PrefixDots(left: Expression, right: Expression, cuts: Seq[Int])
 object PrefixDots {
   /** The kernel: the running dot product, emitted at each cut. */
   def dots(x: ArrayData, y: ArrayData, cuts: Array[Int]): ArrayData = {
+    requireNoNullElements("graft_prefix_dots", "left", x)
+    requireNoNullElements("graft_prefix_dots", "right", y)
     val n = math.min(x.numElements(), y.numElements())
     val out = new Array[Double](cuts.length)
     var s = 0.0

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** All sign-LSH band keys of a vector in ONE native expression: project
   * the `array<double>` child onto every row of a static hyperplane
@@ -29,8 +29,11 @@ import NativeExpression.expr
   *
   * The plane matrix reaches the kernel as a codegen reference object
   * (2 KB of static doubles), not as literal AST — the tree stays small
-  * for the optimizer too. */
-case class SignBands(child: Expression, planes: Array[Array[Double]],
+  * for the optimizer too. `planes` is an immutable sequence, so two
+  * expressions over equal planes are equal and canonicalise alike, as
+  * [[ClfStats]]'s weights do; the kernel reads one `double[][]` copy. A
+  * null vector element throws. */
+case class SignBands(child: Expression, planes: IndexedSeq[IndexedSeq[Double]],
                      bitsPerBand: Int) extends NativeUnary {
   override def prettyName: String = "graft_sign_bands"
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
@@ -40,7 +43,8 @@ case class SignBands(child: Expression, planes: Array[Array[Double]],
   override protected def paramsValid: Boolean =
     bitsPerBand > 0 && planes.nonEmpty && planes.length % bitsPerBand == 0
   override protected def kernel: String = "bands"
-  override protected def params: Seq[Any] = Seq(planes, bitsPerBand)
+  override protected def params: Seq[Any] = Seq(planeArray, bitsPerBand)
+  @transient private lazy val planeArray: Array[Array[Double]] = planes.map(_.toArray).toArray
 
   override protected def withNewChildInternal(newChild: Expression): SignBands =
     copy(child = newChild)
@@ -49,6 +53,7 @@ case class SignBands(child: Expression, planes: Array[Array[Double]],
 object SignBands {
   /** The kernel: one sign bit per plane, packed `bitsPerBand` to a band. */
   def bands(v: ArrayData, planes: Array[Array[Double]], bitsPerBand: Int): ArrayData = {
+    requireNoNullElements("graft_sign_bands", "vector", v)
     val out = new Array[Int](planes.length / bitsPerBand)
     var j = 0
     while (j < planes.length) {
@@ -65,5 +70,5 @@ object SignBands {
 
   /** Column-DSL entry point. */
   def of(v: Column, planes: Array[Array[Double]], bitsPerBand: Int): Column =
-    SignBands(expr(v), planes, bitsPerBand).toColumn
+    SignBands(expr(v), planes.map(_.toIndexedSeq).toIndexedSeq, bitsPerBand).toColumn
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** The portable hash family shared by the dedup sketches and their DuckDB
   * oracles — the single source of truth for the universal-hash constants
@@ -220,6 +220,7 @@ object RepetitionStats {
 
   /** The kernel. */
   def ofTokens(tokens: ArrayData): InternalRow = {
+    requireNoNullElements("graft_repetition_stats", "tokens", tokens)
     val n = tokens.numElements()
     val toks = new Array[String](n)
     var i = 0
@@ -413,6 +414,7 @@ object SimHash60 {
     * md5 runs once per distinct token: on natural text, where stopword
     * repetition dominates, that is most of this expression's cost. */
   def ofTokens(tokens: ArrayData): Long = {
+    requireNoNullElements("graft_simhash60", "tokens", tokens)
     val n = tokens.numElements()
     val counts = new java.util.HashMap[UTF8String, Integer](math.min(n, 64))
     var j = 0

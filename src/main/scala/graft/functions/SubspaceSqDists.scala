@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
-import NativeExpression.expr
+import NativeExpression.{expr, requireNoNullElements}
 
 /** Native per-subspace squared-L2 distances over two `array<double>`
   * columns cut into `subDim`-wide subspaces — the PQ hot loop
@@ -21,7 +21,7 @@ import NativeExpression.expr
   * Semantics match the higher-order formulation bit-for-bit: element m of
   * the result is the strict left-to-right IEEE fold of (x−y)·(x−y) over
   * elements [m·subDim, (m+1)·subDim) — the order the DuckDB oracle's
-  * mirrored fold uses. Assumes non-null elements; subspace count =
+  * mirrored fold uses. A null element throws; subspace count =
   * min(len(a), len(b)) / subDim (equal 64-dim inputs in practice).
   */
 case class SubspaceSqDists(left: Expression, right: Expression, subDim: Int)
@@ -43,6 +43,8 @@ case class SubspaceSqDists(left: Expression, right: Expression, subDim: Int)
 object SubspaceSqDists {
   /** The kernel: one squared-L2 fold per whole subspace. */
   def dists(x: ArrayData, y: ArrayData, subDim: Int): ArrayData = {
+    requireNoNullElements("graft_subspace_sq_dists", "left", x)
+    requireNoNullElements("graft_subspace_sq_dists", "right", y)
     val nSub = math.min(x.numElements(), y.numElements()) / subDim
     val out = new Array[Double](nSub)
     var m = 0

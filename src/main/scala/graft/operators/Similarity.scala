@@ -338,13 +338,6 @@ object Similarity {
   def annCorpus(spark: SparkSession, sfDir: String): DataFrame =
     vectors(spark, sfDir)
 
-  /** The ANN probe's banded corpus explode, exposed for diagnostics
-    * (band-bucket profiling) — identical expression to [[annProbe]]'s. */
-  private[operators] def annBandsDebug(corpus: DataFrame): DataFrame =
-    corpus.withColumn("bands", signatureBands(col("v"), 64))
-      .select(col("vec_id"), posexplode(col("bands")))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bv")
-
   /** Embedding-cosine near-dup clustering — the vector-space member of the
     * dedup family (see [[Dedup]] for the text-space ones). Candidates via
     * sign-LSH banding ([[DedupPlanes]]/[[DedupBands]], bucket-capped), exact

@@ -30,14 +30,4 @@ object Upsert {
         case p => col(s"_latest.$p").as(p)
       }: _*)
   }
-
-  /** Merge a batch of updates into existing latest-per-key state (the
-    * streaming upsert step): union then compact. `ordCols` must be globally
-    * monotone across batches (e.g. event time, or (ts, batch id)). */
-  def upsertLatest(state: Option[DataFrame], updates: DataFrame,
-                   keyCols: Seq[String], ordCols: Seq[String]): DataFrame =
-    state match {
-      case None    => latestPerKey(updates, keyCols, ordCols)
-      case Some(s) => latestPerKey(s.unionByName(updates), keyCols, ordCols)
-    }
 }

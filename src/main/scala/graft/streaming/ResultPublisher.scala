@@ -83,14 +83,40 @@ object ResultPublisher {
   }
 
   /** Publish every maintained result table to its topic (one batch append
-    * per call — invoke per trigger, or once after a batch run). Topics are
+    * per table — invoke per trigger, or once after a batch run). Topics are
     * addressed under `topics`'s transport (Kafka or file fallback). */
-  def publishAll(store: TableStore, topics: String => TopicRef): Unit =
-    egress.keys.toSeq.sorted.foreach { name =>
-      store.get(name).foreach { df =>
-        val ref = topics(egress(name).topic)
-        StreamAdapters.createTopicIfNotExists(ref)
-        StreamAdapters.writeBatchRaw(toWire(name, df), ref)
-      }
+  def publishAll(store: TableStore, topics: String => TopicRef): Unit = {
+    publishChanged(store, topics, Map.empty); ()
+  }
+
+  /** Publish the tables whose version moved since `sent` (table → version
+    * last published), each as a whole table on its topic, writing the
+    * topics concurrently on one thread per core. Returns the versions now
+    * published. The caller serialises calls. */
+  def publishChanged(store: TableStore, topics: String => TopicRef,
+                     sent: Map[String, Long]): Map[String, Long] = {
+    val due = egress.keys.toSeq.sorted.flatMap { name =>
+      // the version is read before the rows: a table changed in between
+      // is sent again next time, never skipped
+      val v = store.version(name)
+      store.get(name).filter(_ => !sent.get(name).contains(v)).map(df => (name, v, df))
     }
+    // threads are made here, so their jobs carry the caller's local properties
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(due.size, Runtime.getRuntime.availableProcessors())))
+    try {
+      val writes = due.map { case (name, _, df) =>
+        pool.submit(new Runnable {
+          def run(): Unit = {
+            val ref = topics(egress(name).topic)
+            StreamAdapters.createTopicIfNotExists(ref)
+            StreamAdapters.writeBatchRaw(toWire(name, df), ref)
+          }
+        })
+      }
+      // every write ends before a failure is thrown: none outlives the call
+      writes.map(w => scala.util.Try(w.get())).foreach(_.get)
+    } finally pool.shutdown()
+    sent ++ due.map { case (name, v, _) => name -> v }
+  }
 }

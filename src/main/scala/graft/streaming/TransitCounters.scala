@@ -1,0 +1,251 @@
+package graft.streaming
+
+import java.sql.Timestamp
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig,
+  TimeMode, TimerValues, ValueState}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** One row of the transit job's tagged union: a route emission
+  * (`kind = "route"`) or a trip (`kind = "trip"`). */
+final case class TransitEvent(kind: String, route_id: String, transport_type: String,
+    capacity: Option[Int], operator: String, trip_id: String, passenger_name: String,
+    ts: Timestamp)
+
+/** One changed row, emitted by [[TransitCounters]] and applied to the
+  * [[TableStore]] by the union runner. `table` says what the row is; the
+  * other fields hold its key (`k1`, `k2`) and values, null where unused:
+  *
+  *   - `routes_latest`: route_id, transport_type, capacity, operator, ts;
+  *   - `route_occupancy`: route_id, transport_type, trips `cnt`, capacity `cap`;
+  *   - `cap_per_type`: transport_type, capacity `cap`;
+  *   - `q2`: transport_type, keyed trips `cnt`, distinct `routes`;
+  *   - `q3`, `q10`: the champion's key and `cnt`;
+  *   - `totals`: all trips `cnt`, keyed-route capacity `cap`;
+  *   - `operator`: operator, trips `cnt`, latest capacity `cap`. Emitted for
+  *     every operator whenever one changed; a null operator stands for "no
+  *     operator has a route".
+  */
+final case class Changed(table: String, k1: String, k2: String = null,
+    cnt: Option[Long] = None, cap: Option[Long] = None, routes: Option[Long] = None,
+    capacity: Option[Int] = None, operator: String = null, ts: Timestamp = null)
+
+// The state values. Per route: its latest emission (`KStream.toTable`),
+// the capacity folded per type (null until a non-null capacity, like
+// `sum`), its trips and the types they carried (q2's distinct routes). Per
+// type: q10's trips, q12's capacity, q2's keyed trips and routes. Per
+// operator, over its routes' latest emissions (q13): `capped` counts the
+// non-null capacities, so a sum over none is null.
+final case class LatestRoute(transport_type: String, capacity: Option[Int], operator: String,
+    ts: Timestamp)
+final case class TypeCap(transport_type: String, cap: Option[Long])
+final case class RouteCounters(latest: Option[LatestRoute], caps: Seq[TypeCap], trips: Long,
+    tripTypes: Seq[String])
+final case class TypeCounters(trips: Long, cap: Option[Long], q2Trips: Long, q2Routes: Long)
+final case class OperatorCounters(routes: Long, trips: Long, cap: Long, capped: Long)
+final case class Champion(key: String, cnt: Long)
+final case class Totals(trips: Long, cap: Long)
+
+/** The union runner's counters on Spark's keyed state store: the Kafka
+  * Streams KTable/RocksDB analog. All state lives under one grouping key,
+  * because the aggregate⋈aggregate queries join counters of different keys.
+  * Each trigger reads and writes only the keys its rows touch, and emits
+  * only the rows that changed ([[Changed]]). Counts and capacities are
+  * emitted raw: the union runner applies `TransitQueries.occupancyPct` to
+  * them in its projection.
+  *
+  * Null keys are dropped as the batch queries drop them: route-keyed
+  * counters need a `route_id`, the per-type capacity only a
+  * `transport_type`; q10 counts trips with no route, q2 needs both keys.
+  * Routes fold capacity on every emission (q4, q7, q12's capacity) but q13 and
+  * `routes_latest` use the latest emission per route: a later trigger wins
+  * on equal `ts`, and within a trigger equal `ts` is broken by content, so
+  * a replayed trigger emits the same rows. q3 and q10 keep the exact
+  * monotone champion: counts only grow, so only a touched key can displace
+  * it. */
+final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed] {
+  import TransitCounters._
+
+  @transient private var routes: MapState[String, RouteCounters] = _
+  @transient private var types: MapState[String, TypeCounters] = _
+  @transient private var passengers: MapState[String, Long] = _
+  @transient private var operators: MapState[String, OperatorCounters] = _
+  @transient private var q3: ValueState[Champion] = _
+  @transient private var q10: ValueState[Champion] = _
+  @transient private var totals: ValueState[Totals] = _
+
+  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+    val h = getHandle
+    def map[V](name: String, enc: Encoder[V]) =
+      h.getMapState(name, Encoders.STRING, enc, TTLConfig.NONE)
+    routes = map("routes", Encoders.product[RouteCounters])
+    types = map("types", Encoders.product[TypeCounters])
+    passengers = map("passengers", Encoders.scalaLong)
+    operators = map("operators", Encoders.product[OperatorCounters])
+    q3 = h.getValueState("q3", Encoders.product[Champion], TTLConfig.NONE)
+    q10 = h.getValueState("q10", Encoders.product[Champion], TTLConfig.NONE)
+    totals = h.getValueState("totals", Encoders.product[Totals], TTLConfig.NONE)
+  }
+
+  override def handleInputRows(key: Int, rows: Iterator[TransitEvent],
+                               timerValues: TimerValues): Iterator[Changed] = {
+    val (rs, ts) = rows.toSeq.partition(_.kind == "route")
+    val out = mutable.ArrayBuffer.empty[Changed]
+    val route = new Touched(routes, RouteCounters(None, Nil, 0L, Nil))
+    val typ = new Touched(types, TypeCounters(0L, None, 0L, 0L))
+    val passenger = new Touched(passengers, 0L)
+    val operator = new Touched(operators, OperatorCounters(0L, 0L, 0L, 0L))
+    val capTypes, q2Types, countedTypes = mutable.LinkedHashSet.empty[String]
+
+    rs.filter(_.transport_type != null).foreach { e =>
+      val t = typ(e.transport_type)
+      typ(e.transport_type) = t.copy(cap = addCap(t.cap, e.capacity))
+      capTypes += e.transport_type
+    }
+    val keyed = rs.filter(_.route_id != null)
+    keyed.groupBy(_.route_id).foreach { case (id, es) =>
+      val r = route(id)
+      val caps = es.foldLeft(r.caps) { (cs, e) =>
+        cs.indexWhere(_.transport_type == e.transport_type) match {
+          case -1 => cs :+ TypeCap(e.transport_type, e.capacity.map(_.toLong))
+          case i  => cs.updated(i, cs(i).copy(cap = addCap(cs(i).cap, e.capacity)))
+        }
+      }
+      val newest = es.map(e => LatestRoute(e.transport_type, e.capacity, e.operator, e.ts))
+        .max(latestOrder)
+      route(id) = r.copy(caps = caps,
+        latest = r.latest.filter(old => tsOrder.lt(newest.ts, old.ts)).orElse(Some(newest)))
+    }
+    ts.foreach { e =>
+      val ty = e.transport_type
+      if (e.route_id != null) {
+        val r = route(e.route_id)
+        val newPair = ty != null && !r.tripTypes.contains(ty)
+        route(e.route_id) = r.copy(trips = r.trips + 1,
+          tripTypes = if (newPair) r.tripTypes :+ ty else r.tripTypes)
+        if (ty != null) {
+          typ(ty) = typ(ty).copy(q2Trips = typ(ty).q2Trips + 1,
+            q2Routes = typ(ty).q2Routes + (if (newPair) 1 else 0))
+          q2Types += ty
+        }
+      }
+      if (ty != null) { typ(ty) = typ(ty).copy(trips = typ(ty).trips + 1); countedTypes += ty }
+      if (e.passenger_name != null) passenger(e.passenger_name) = passenger(e.passenger_name) + 1
+    }
+
+    // q13's per-operator sums follow each touched route's latest emission
+    route.now.foreach { case (id, now) =>
+      val (was, is) = (contribution(route.before(id)), contribution(now))
+      if (was != is) Seq(was -> -1, is -> 1).foreach { case (c, sign) =>
+        c.foreach { case (op, capacity, trips) =>
+          val o = operator(op)
+          operator(op) = OperatorCounters(o.routes + sign, Math.addExact(o.trips, sign * trips),
+            Math.addExact(o.cap, sign * capacity.fold(0L)(_.toLong)),
+            o.capped + capacity.fold(0)(_ => sign))
+        }
+      }
+    }
+
+    route.now.foreach { case (id, now) =>
+      if (now.latest != route.before(id).latest) now.latest.foreach { l =>
+        out += Changed("routes_latest", id, l.transport_type, capacity = l.capacity,
+          operator = l.operator, ts = l.ts)
+      }
+      val trips = Some(now.trips).filter(_ > 0)
+      now.caps.foreach(c =>
+        out += Changed("route_occupancy", id, c.transport_type, cnt = trips, cap = c.cap))
+    }
+    capTypes.foreach(t => out += Changed("cap_per_type", t, cap = typ(t).cap))
+    q2Types.foreach(t =>
+      out += Changed("q2", t, cnt = Some(typ(t).q2Trips), routes = Some(typ(t).q2Routes)))
+    crown(q3, "q3", passenger.now.toSeq, out)
+    crown(q10, "q10", countedTypes.toSeq.map(t => t -> typ(t).trips), out)
+    val was = if (totals.exists()) Some(totals.get()) else None
+    val now = was.getOrElse(Totals(0L, 0L)) match {
+      case Totals(n, c) => Totals(n + ts.size,
+        keyed.flatMap(_.capacity).foldLeft(c)((s, x) => Math.addExact(s, x.toLong)))
+    }
+    if (!was.contains(now)) {
+      totals.update(now)
+      out += Changed("totals", null, cnt = Some(now.trips), cap = Some(now.cap))
+    }
+    Seq(route, typ, passenger).foreach(_.write())
+    if (operator.write()) {
+      val all = operators.iterator().toSeq
+      all.foreach { case (op, v) =>
+        out += Changed("operator", op, cnt = Some(v.trips),
+          cap = Some(v.cap).filter(_ => v.capped > 0))
+      }
+      if (all.isEmpty) out += Changed("operator", null)
+    }
+    out.iterator
+  }
+
+  /** Replace the champion when a touched key's new count beats it: exact,
+    * because counts only grow. Emits the champion when it changed. */
+  private def crown(state: ValueState[Champion], table: String, touched: Seq[(String, Long)],
+                    out: mutable.ArrayBuffer[Changed]): Unit = {
+    val old = if (state.exists()) Some(state.get()) else None
+    val best = (old.toSeq ++ touched.map { case (k, n) => Champion(k, n) })
+      .reduceOption((a, b) => if (beats(b, a)) b else a)
+    if (best != old) best.foreach { c =>
+      state.update(c)
+      out += Changed(table, c.key, cnt = Some(c.cnt))
+    }
+  }
+}
+
+object TransitCounters {
+
+  /** One trigger's view of a map state: each key is read once, and only
+    * the keys whose value changed are written back (a key back at `zero`
+    * is removed). */
+  private final class Touched[V](state: MapState[String, V], zero: V) {
+    val before = mutable.Map.empty[String, V]
+    val now = mutable.LinkedHashMap.empty[String, V]
+    def apply(k: String): V = now.getOrElseUpdate(k, {
+      val v = if (state.containsKey(k)) state.getValue(k) else zero
+      before(k) = v
+      v
+    })
+    def update(k: String, v: V): Unit = { apply(k); now(k) = v }
+    /** Write back; true when any value changed. */
+    def write(): Boolean = now.count { case (k, v) =>
+      if (v == before(k)) false
+      else { if (v == zero) state.removeKey(k) else state.updateValue(k, v); true }
+    } > 0
+  }
+
+  /** `sum`'s fold: nulls are skipped, and a sum over nulls only is null. */
+  private def addCap(acc: Option[Long], x: Option[Int]): Option[Long] = (acc, x) match {
+    case (Some(a), Some(v)) => Some(Math.addExact(a, v.toLong))
+    case (None, v)          => v.map(_.toLong)
+    case (a, None)          => a
+  }
+
+  /** A route's share of its operator's q13 sums: (operator, capacity, trips). */
+  private def contribution(r: RouteCounters): Option[(String, Option[Int], Long)] =
+    r.latest.filter(_.operator != null).map(l => (l.operator, l.capacity, r.trips))
+
+  /** Spark's string order (UTF-8 bytes), for the champions' tie on equal counts. */
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+  private def beats(a: Champion, b: Champion): Boolean =
+    a.cnt > b.cnt || (a.cnt == b.cnt && utf8(a.key).compareTo(utf8(b.key)) < 0)
+
+  /** Nulls first, as Spark orders them. */
+  private def nullsFirst[T](lt: (T, T) => Boolean): Ordering[T] = Ordering.fromLessThan[T] {
+    case (a, b) => if (a == null || b == null) a == null && b != null else lt(a, b)
+  }
+  private val tsOrder = nullsFirst[Timestamp](_ before _)
+  private val strOrder = nullsFirst[String]((a, b) => utf8(a).compareTo(utf8(b)) < 0)
+  /** A total order on emissions: event time, then content, so equal event
+    * times pick the same emission on every replay. */
+  private val latestOrder: Ordering[LatestRoute] =
+    Ordering.by[LatestRoute, Timestamp](_.ts)(tsOrder)
+      .orElseBy(_.transport_type)(strOrder)
+      .orElseBy(_.capacity)
+      .orElseBy(_.operator)(strOrder)
+}

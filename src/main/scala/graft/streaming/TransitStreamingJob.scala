@@ -1,79 +1,87 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicLong
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, TimeMode}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.engine.Staging
-import graft.operators.{TransitQueries, Upsert}
+import graft.operators.TransitQueries
 
 /** Keyed result tables maintained by the streaming job — the Spark analog of
   * the reference's JDBC upsert sink (`config/sink-passangers_per_route.json:13-15`,
   * `pk.mode=record_key`): each query's output is a table upserted on its
-  * result key. In-memory DataFrames here; at cluster scale each table is a
-  * Delta/JDBC MERGE target — the merge step below is exactly the MERGE ON
-  * keys statement.
+  * result key. Each table is held in the application's memory as keyed
+  * rows, bounded by its key cardinality, and read as a local DataFrame; at
+  * cluster scale each is a Delta/JDBC MERGE target and [[upsert]] is the
+  * MERGE ON keys statement. Every table carries a version that moves only when its
+  * content changes, so a publisher can skip the tables it already sent.
   */
 final class TableStore(spark: SparkSession) {
-  private val tables = TrieMap.empty[String, DataFrame]
-  private val gen = new AtomicLong(0L)
-
-  /** Truncate lineage so per-trigger state merges don't grow an unbounded
-    * plan (the micro-batch analog of changelog compaction). Iterative
-    * staging: truncation is mandatory here, whatever the session policy. */
-  private def ckpt(df: DataFrame): DataFrame = Staging.stageIterative(df)
+  /** Rows by key (by position for a table [[put]] whole), and a version
+    * that moves each time the content changes. */
+  private final class Table(val schema: StructType) {
+    var keys: Seq[String] = Nil
+    var rows = mutable.LinkedHashMap.empty[Seq[Any], Row]
+    var version = 0L
+    def key(r: Row, i: Int): Seq[Any] =
+      if (keys.isEmpty) Seq(i) else keys.map(k => r.get(schema.fieldIndex(k)))
+    def load(rs: Iterable[Row]): Unit =
+      rows = mutable.LinkedHashMap.from(rs.zipWithIndex.map { case (r, i) => key(r, i) -> r })
+  }
+  private val tables = mutable.Map.empty[String, Table]
 
   /** Mutation hook (set by the owning job to track dirty tables for the
     * durable-state commits; not fired by [[restore]]). */
   private[streaming] var onMutate: String => Unit = _ => ()
 
-  private val mutations = new AtomicLong(0L)
-  /** Total put/upsert count — lets a periodic publisher skip cycles where
-    * nothing changed. */
-  def mutationCount: Long = mutations.get()
+  /** Run `f` on the named table, made empty when new; `f` says whether
+    * the content moved. */
+  private def change(name: String, schema: StructType)(f: Table => Boolean): Unit = synchronized {
+    val isNew = !tables.contains(name)
+    val t = tables.getOrElseUpdate(name, new Table(schema))
+    if (f(t) || isNew) { t.version += 1; onMutate(name) }
+  }
+
+  /** An empty table, unless one exists. */
+  def ensure(name: String, schema: StructType): Unit = change(name, schema)(_ => false)
 
   /** Replace the whole table (for tiny global results like argmax rows). */
-  def put(name: String, df: DataFrame): Unit = {
-    tables(name) = ckpt(df)
-    mutations.incrementAndGet()
-    onMutate(name)
+  def put(name: String, schema: StructType, rows: Seq[Row]): Unit = change(name, schema) { t =>
+    val moved = t.rows.values.toSeq != rows
+    if (moved) { t.keys = Nil; t.load(rows) }
+    moved
   }
 
   /** MERGE `updates` into the named table on `keys`: new keys insert, known
-    * keys take the update's values (latest generation wins). */
-  def upsert(name: String, updates: DataFrame, keys: Seq[String]): Unit = {
-    val tagged = updates.withColumn("_gen", lit(gen.incrementAndGet()))
-    val merged = tables.get(name) match {
-      case None       => tagged
-      case Some(prev) => Upsert.latestPerKey(prev.unionByName(tagged), keys, Seq("_gen"))
+    * keys take the update's values. */
+  def upsert(name: String, schema: StructType, keys: Seq[String], updates: Iterable[Row]): Unit =
+    change(name, schema) { t =>
+      if (t.keys != keys) { t.keys = keys; t.load(t.rows.values.toSeq) } // restored
+      updates.count(r => !t.rows.put(t.key(r, 0), r).contains(r)) > 0
     }
-    tables(name) = ckpt(merged)
-    mutations.incrementAndGet()
-    onMutate(name)
-  }
 
-  def get(name: String): Option[DataFrame] = tables.get(name).map(_.drop("_gen"))
+  def get(name: String): Option[DataFrame] = synchronized {
+    tables.get(name).map(t => spark.createDataFrame(t.rows.values.toSeq.asJava, t.schema))
+  }
   def apply(name: String): DataFrame = get(name).getOrElse(
     throw new NoSuchElementException(s"no result table '$name' yet"))
-  def names: Seq[String] = tables.keys.toSeq.sorted
+  def names: Seq[String] = synchronized(tables.keys.toSeq.sorted)
+  /** The table's rows now (none before it exists). */
+  def rows(name: String): Seq[Row] = synchronized(tables.get(name).toSeq.flatMap(_.rows.values))
+  /** Moves each time the table's content changes; 0 before it exists. */
+  def version(name: String): Long = synchronized(tables.get(name).fold(0L)(_.version))
 
-  /** Consistent snapshot for persistence (keeps the `_gen` bookkeeping). */
-  private[streaming] def snapshot: Map[String, DataFrame] = tables.toMap
-
-  /** Restore a persisted table, advancing the generation counter past any
-    * persisted `_gen` so post-restart upserts keep winning ties. */
+  /** Restore a persisted table. */
   private[streaming] def restore(name: String, df: DataFrame): Unit = {
-    val d = ckpt(df)
-    tables(name) = d
-    if (d.columns.contains("_gen")) {
-      val m = Option(d.agg(max("_gen")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      gen.updateAndGet(g => math.max(g, m)); ()
-    }
+    val rows = df.collect().toSeq
+    val t = new Table(df.schema)
+    t.load(rows)
+    t.version = 1L
+    synchronized { tables(name) = t }
   }
 }
 
@@ -88,10 +96,9 @@ final class TableStore(spark: SparkSession) {
   *
   * Three execution groups (SURVEY.md §7.3 strategy):
   *
-  *   1. '''Native update-mode aggregations''' (q1, q5, q9): single stateful
+  *   1. '''Native update-mode aggregations''' (q1, q5): single stateful
   *      aggregation per query, incremental Spark state store, update-mode
-  *      output upserted into the [[TableStore]]. The scale path: state is
-  *      per-key, shuffle-partitioned, no recompute.
+  *      output upserted into the [[TableStore]].
   *
   *   2. '''Native watermarked windowed aggregation''' (q11/q12 counts):
   *      `withWatermark(ts, "0 seconds")` + 1h tumbling window in APPEND mode
@@ -102,43 +109,38 @@ final class TableStore(spark: SparkSession) {
   *      for it are dropped by the engine. The append output feeds the
   *      per-window argmax/argmin finishers.
   *
-  *   3. '''foreachBatch over the tagged union stream''' for the
-  *      aggregate⋈aggregate queries (q2, q3, q4, q6, q8, q10, q13), which a
-  *      single Structured Streaming query cannot express (no join of two
-  *      streaming aggregates). The batch handler maintains '''compact
-  *      incremental counter tables''' — the KTable/RocksDB analog: per-key
-  *      aggregates only, never raw events, each bounded by its key
-  *      cardinality — and derives the query results '''restricted to the
-  *      keys touched by the batch''' (plus the deliberately tiny dimension
-  *      recomputes, e.g. q13's per-operator table, #operators rows). The
-  *      per-trigger cost is nevertheless O(state), not O(batch): every
-  *      counter merge (`mergeSum`, `mergeScalar`, [[TableStore.upsert]])
-  *      re-aggregates `state ∪ batch`, and the touched-key derivations join
-  *      against the full state tables. Keeping the counters in Spark's
-  *      state store instead is ROADMAP open item 2.
+  *   3. '''One keyed-state processor over the tagged union''' for the
+  *      aggregate⋈aggregate queries (q2, q3, q4, q6, q7, q8, q9, q10, q13),
+  *      which a single streaming aggregation cannot express (no join of two
+  *      streaming aggregates). [[TransitCounters]] runs under
+  *      `transformWithState` on RocksDB and keeps compact counters — the
+  *      KTable/RocksDB analog: per-key aggregates only, never raw events,
+  *      each bounded by its key cardinality. A trigger reads and writes only
+  *      the keys its rows touch and emits only the rows that changed; the
+  *      runner projects them through `TransitQueries.occupancyPct` and
+  *      applies them to the [[TableStore]] in one pass, so a trigger costs
+  *      one Spark job whatever the size of the state. The non-monotone
+  *      extremes are recomputed locally from the maintained tables:
+  *      q6 over the touched types' routes, q13 over the operators.
   *
-  * Upsert semantics: route re-emissions are compacted through
-  * [[Upsert.latestPerKey]] (`routesLatest` state — the reference's
-  * `KStream.toTable`, `MostOccupiedOperator.java:56-68`) wherever the
-  * reference uses a latest-value table (q13's operator map); stream-fold
-  * aggregates (q1 capacity sums, q12's capacity-per-type,
-  * `LeastOccupiedTransportTypeWindow.java:42-46`) stay folds, faithful to
-  * the reference's adder-only aggregates.
+  * Upsert semantics: `routes_latest` and q13's operator map keep the latest
+  * emission per route (the reference's `KStream.toTable`,
+  * `MostOccupiedOperator.java:56-68`); stream-fold aggregates (q1 capacity
+  * sums, q12's capacity-per-type, `LeastOccupiedTransportTypeWindow.java:42-46`)
+  * stay folds, faithful to the reference's adder-only aggregates.
   *
-  * Monotone running argmax (q3, q10): trip counts only grow, so the current
-  * champion can only be displaced by a key updated in this batch — the
-  * champion merge is `top1(old champion ∪ touched keys' new totals)`,
-  * O(batch) per trigger and *exact* (unlike the reference's non-retractable
-  * fold, which is only correct for monotone metrics — these are). The
-  * non-monotone extremes (q6, q13 over occupancy, which moves both ways) are
-  * recomputed from their maintained per-key aggregate (q6 restricted to
-  * touched types; q13 over the #operators-sized table).
+  * Durability: Spark's checkpoint holds every query's keyed state. A
+  * replayed trigger re-runs from the previous state version and emits the
+  * same rows, and applying them again is idempotent. The result tables are
+  * snapshotted under `stateDir`, because q1, q5 and the window results have
+  * no other durable home.
   *
-  * Threading: each foreachBatch body synchronizes on this job — Spark runs
-  * the three queries' triggers on separate threads; state/table mutation is
-  * serialized. Results are eventually consistent across groups within a
-  * trigger (the reference has the same property: its 13 topologies share no
-  * barrier).
+  * Threading: Spark runs the queries' triggers on separate threads. Each
+  * handler runs its Spark job on its own and applies the rows under this
+  * job's monitor; a window batch also waits for the union runner to catch
+  * up ([[awaitUnion]]). Results are eventually consistent across groups
+  * within a trigger (the reference has the same property: its 13
+  * topologies share no barrier).
   */
 object TransitStreamingJob {
   import graft.engine.Decode
@@ -156,67 +158,71 @@ object TransitStreamingJob {
       Decode.routes(StreamAdapters.readStreamRaw(spark, routesTopic)),
       Decode.trips(StreamAdapters.readStreamRaw(spark, tripsTopic)),
       stateDir)
+
+  private val EventEncoder = Encoders.product[TransitEvent]
+  private val ChangedEncoder = Encoders.product[Changed]
+
+  // the union runner's and the window finishers' tables
+  private def schema(ddl: String) = StructType.fromDDL(ddl)
+  private val RoutesLatest =
+    schema("route_id string, transport_type string, capacity int, operator string, ts timestamp")
+  private val CapPerType = schema("transport_type string, cap bigint")
+  private val RouteOccupancy =
+    schema("route_id string, transport_type string, occupancy_pct double")
+  private val Q2 = schema("transport_type string, average_passengers double")
+  private val Q3 = schema("passenger_name string, trip_count bigint")
+  private val Q4 = schema("route_id string, occupancy_pct double")
+  private val Q6 = schema("transport_type string, route_id string, occupancy_pct double")
+  private val Q7 = schema("total_capacity bigint")
+  private val Q8 = schema("total_occupancy_pct double")
+  private val Q9 = schema("total_passengers bigint")
+  private val Q10 = schema("transport_type string, max_passengers bigint")
+  private val Q11 = schema("window_start timestamp, transport_type string, max_passengers bigint")
+  private val Q12 = schema("window_start timestamp, transport_type string, occupancy_pct double")
+  private val Q13 = schema("operator string, occupancy_pct double")
+  private val WindowCaps =
+    schema("window_start timestamp, transport_type string, cnt bigint, cap bigint")
+
+  /** Spark's sort order, for the argmin/argmax finishers that run locally:
+    * doubles with -0.0 = 0.0 and NaN greatest, strings by UTF-8 bytes. */
+  private val doubles: Ordering[Double] = new Ordering[Double] {
+    def compare(a: Double, b: Double): Int = if (a == b) 0 else java.lang.Double.compare(a, b)
+  }
+  private val strings: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+  }
+  /** Least (metric, key); greatest metric with the least key. */
+  private val leastFirst = Ordering.Tuple2(doubles, strings)
+  private val greatestFirst = Ordering.Tuple2(doubles, strings.reverse)
+  private val mostFirst = Ordering.Tuple2(Ordering.Long, strings.reverse)
 }
 
 final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
                                 trips: DataFrame,
                                 stateDir: Option[String] = None) {
+  import TransitStreamingJob._
 
   val store = new TableStore(spark)
 
-  // ---- incremental counter state (the KTable analog) ----------------------
-  private var routesLatest: Option[DataFrame] = None // toTable: latest route per key
-  private var capPerRouteType: Option[DataFrame] = None // (route_id, transport_type) -> sum cap
-  private var capPerType: Option[DataFrame] = None      // q12 cap side (stream-fold)
-  private var cntPerRoute: Option[DataFrame] = None     // trips per route
-  private var cntPerType: Option[DataFrame] = None      // trips per transport type
-  private var cntPerTypeRoute: Option[DataFrame] = None // q2: (type, route) -> cnt
-  private var cntPerPassenger: Option[DataFrame] = None // q3
-  private var totalCap: Option[DataFrame] = None        // 1 row: q7/q8
-  private var totalTrips: Option[DataFrame] = None      // 1 row: q8/q9
-
-  // per-trigger counter folds build on the previous trigger's frame —
-  // iterative staging (mandatory lineage truncation), not plain stage
-  private def ckpt(df: DataFrame): DataFrame = Staging.stageIterative(df)
-
-  // ---- durable state (the RocksDB + changelog-topic analog) ---------------
+  // ---- durable result tables (the changelog-topic analog) -----------------
   //
-  // With `stateDir` set, every union-runner trigger commits a VERSIONED
-  // parquet snapshot of the counter tables and the result store
-  // (`v<batchId>/{state,results}/<name>` + an atomically-moved `_committed`
-  // marker), and a replayed batch (foreachBatch is at-least-once) is
-  // detected by id and skipped — effectively-once state. The other
-  // handlers (native-agg upserts, finalized-window upserts) are idempotent
-  // by key, so replaying them against a restored snapshot is safe. At
-  // cluster scale the same protocol targets object storage / Delta; the
-  // snapshots are compact aggregates (bounded by key cardinality), never
-  // raw events — exactly what the reference's changelog topics carry.
+  // With `stateDir` set, every handler's trigger commits a VERSIONED parquet
+  // snapshot of the result tables it changed (`v<seq>/results/<name>` + an
+  // atomically-moved `_committed` marker). Every handler upserts absolute
+  // values by key, so replaying a trigger against a restored snapshot is
+  // safe. At cluster scale the same protocol targets object storage /
+  // Delta; the snapshots are compact results (bounded by key cardinality),
+  // never raw events.
 
-  /** (name, read, write) for every piece of incremental counter state. */
-  private def counterSlots: Seq[(String, () => Option[DataFrame], Option[DataFrame] => Unit)] =
-    Seq(
-      ("routesLatest", () => routesLatest, v => routesLatest = v),
-      ("capPerRouteType", () => capPerRouteType, v => capPerRouteType = v),
-      ("capPerType", () => capPerType, v => capPerType = v),
-      ("cntPerRoute", () => cntPerRoute, v => cntPerRoute = v),
-      ("cntPerType", () => cntPerType, v => cntPerType = v),
-      ("cntPerTypeRoute", () => cntPerTypeRoute, v => cntPerTypeRoute = v),
-      ("cntPerPassenger", () => cntPerPassenger, v => cntPerPassenger = v),
-      ("totalCap", () => totalCap, v => totalCap = v),
-      ("totalTrips", () => totalTrips, v => totalTrips = v))
-
-  /** Replay guard for the non-idempotent union runner (restored from the
-    * committed snapshot's metadata). */
-  private var lastUnionBatch: Option[Long] = None
   /** Monotone commit version — every handler's trigger commits one. */
   private var commitSeq: Long = -1L
-  /** path ("state/<n>" | "results/<n>") → version dir holding its latest
-    * data. The per-version `_manifest` persists this map, so a commit only
-    * writes the tables its trigger actually touched — O(batch), not
-    * O(total state) — while restore still sees the full picture. */
-  private val tableVersions = scala.collection.mutable.Map.empty[String, Long]
-  /** paths mutated since the last commit */
-  private val dirty = scala.collection.mutable.Set.empty[String]
+  /** path ("results/<n>") → version dir holding its latest data. The
+    * per-version `_manifest` persists this map, so a commit only writes the
+    * tables its trigger changed, while restore still sees the full picture. */
+  private val tableVersions = mutable.Map.empty[String, Long]
+  /** paths changed since the last commit */
+  private val dirty = mutable.Set.empty[String]
   store.onMutate = n => dirty += s"results/$n"
 
   private def subDirs(p: java.io.File): Seq[java.io.File] =
@@ -229,26 +235,19 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     if (marker.isFile) {
       val v = java.nio.file.Files.readString(marker.toPath).trim.toLong
       commitSeq = v
-      val meta = new java.io.File(s"$d/v$v/_union_batch")
-      if (meta.isFile)
-        lastUnionBatch = Some(java.nio.file.Files.readString(meta.toPath).trim.toLong)
       val mf = new java.io.File(s"$d/v$v/_manifest")
       // a committed version without a manifest would restore NOTHING while
-      // the replay guard still suppresses refolding — silent total state
-      // loss; refuse instead
+      // the sources resume their committed offsets — silent total loss of
+      // the results; refuse instead
       require(mf.isFile,
         s"committed state at $d/v$v has no _manifest — refusing to restore blindly")
-      import scala.jdk.CollectionConverters._
       java.nio.file.Files.readAllLines(mf.toPath).asScala
-        .filter(_.nonEmpty).foreach { line =>
+        .filter(_.startsWith("results/")).foreach { line =>
           val Array(p, ver) = line.split("\t")
           tableVersions(p) = ver.toLong
         }
       tableVersions.foreach { case (p, ver) =>
-        val df = spark.read.parquet(s"$d/v$ver/$p")
-        if (p.startsWith("results/")) store.restore(p.stripPrefix("results/"), df)
-        else counterSlots.find(_._1 == p.stripPrefix("state/"))
-          .foreach(_._3(Some(ckpt(df))))
+        store.restore(p.stripPrefix("results/"), spark.read.parquet(s"$d/v$ver/$p"))
       }
     }
   }
@@ -258,22 +257,19 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     f.delete(); ()
   }
 
-  /** Commit one version: the tables THIS trigger touched under v<seq>, a
-    * full `_manifest` (path → owning version), the union replay guard, then
-    * the marker (atomic move), then GC of versions no manifest entry
-    * references. Called (under the job monitor) at the end of every
-    * handler's trigger. Crash safety: a version dir left behind by a
-    * crashed attempt at this seq (marker never moved) is cleared before
-    * reuse, so stale partial files can never be marker-committed. */
+  /** Commit one version: the tables changed since the last commit under
+    * v<seq>, a full `_manifest` (path → owning version), then the marker
+    * (atomic move), then GC of versions no manifest entry references.
+    * Called (under the job monitor) at the end of every handler's trigger.
+    * Crash safety: a version dir left behind by a crashed attempt at this
+    * seq (marker never moved) is cleared before reuse, so stale partial
+    * files can never be marker-committed. */
   private def commitState(): Unit = stateDir.foreach { d =>
     commitSeq += 1
     val base = s"$d/v$commitSeq"
     deleteRecursively(new java.io.File(base))
     dirty.toSeq.sorted.foreach { p =>
-      val df =
-        if (p.startsWith("results/")) store.snapshot.get(p.stripPrefix("results/"))
-        else counterSlots.find(_._1 == p.stripPrefix("state/")).flatMap(_._2())
-      df.foreach { frame =>
+      store.get(p.stripPrefix("results/")).foreach { frame =>
         frame.write.mode("overwrite").parquet(s"$base/$p")
         tableVersions(p) = commitSeq
       }
@@ -282,8 +278,6 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     new java.io.File(base).mkdirs() // exists even if nothing was dirty
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/_manifest"),
       tableVersions.toSeq.sorted.map { case (p, v) => s"$p\t$v" }.mkString("\n"))
-    lastUnionBatch.foreach(id => java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$base/_union_batch"), id.toString))
     val tmp = java.nio.file.Paths.get(s"$d/_committed.tmp")
     java.nio.file.Files.writeString(tmp, commitSeq.toString)
     java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$d/_committed"),
@@ -299,39 +293,33 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       .foreach(deleteRecursively)
   }
 
-  /** state ∪ per-batch partial aggregate → re-aggregate: the map-side-combine
-    * merge. `sums` are (column, is-count) pairs summed on merge. */
-  private def mergeSum(state: Option[DataFrame], updates: DataFrame,
-                       keys: Seq[String], sumCols: Seq[String]): DataFrame = {
-    val merged = state match {
-      case None    => updates
-      case Some(s) =>
-        s.unionByName(updates).groupBy(keys.map(col): _*)
-          .agg(sumCols.head -> "sum", sumCols.tail.map(_ -> "sum"): _*)
-          .select((keys.map(col) ++ sumCols.map(c => col(s"sum($c)").as(c))): _*)
-    }
-    ckpt(merged)
+  /** A handler's trigger: collect its rows (the trigger's one Spark job),
+    * then, after `await`, apply them and commit under the job monitor. */
+  private def applying(batch: DataFrame, await: () => Unit = () => ())(
+      apply: Seq[Row] => Unit): Unit = {
+    val rows = batch.collect().toSeq
+    await()
+    synchronized { apply(rows); commitState() }
   }
 
-  /** 1-row running total: state ∪ batch-delta → sum. */
-  private def mergeScalar(state: Option[DataFrame], delta: DataFrame, c: String): DataFrame =
-    ckpt(state match {
-      case None    => delta.select(coalesce(col(c), lit(0L)).cast("long").as(c))
-      case Some(s) => s.unionByName(delta.select(coalesce(col(c), lit(0L)).cast("long").as(c)))
-        .agg(sum(col(c)).as(c))
-    })
+  /** The union runner once started, and the triggers it has applied. */
+  @volatile private var unionRunner: Option[StreamingQuery] = None
+  @volatile private var unionApplied = 0L
 
-  /** Exact monotone running argmax: champion can only be displaced by a key
-    * whose total changed this batch. */
-  private def runningTop1(prev: Option[DataFrame], updatedTotals: DataFrame,
-                          metric: String, tiebreak: String): DataFrame = {
-    val all = prev.map(_.unionByName(updatedTotals)).getOrElse(updatedTotals)
-    all.orderBy(col(metric).desc, col(tiebreak).asc).limit(1)
+  /** q12 closes a window against the capacity the union runner applied, so
+    * a window batch waits until the union runner has applied a trigger
+    * that started after this batch read its input, or has no input left.
+    * A trigger in flight may have started before: then the next one. */
+  private def awaitUnion(): Unit = unionRunner.foreach { u =>
+    def idle = { val s = u.status; !s.isDataAvailable && !s.isTriggerActive }
+    val s = u.status
+    val target = unionApplied + (if (s.isTriggerActive) 2 else if (s.isDataAvailable) 1 else 0)
+    while (unionApplied < target && !idle && u.isActive) Thread.sleep(5)
   }
 
-  // ---- group 3: the tagged-union foreachBatch runner ----------------------
+  // ---- group 3: the tagged-union keyed-state runner -----------------------
 
-  /** Routes and trips as one tagged stream, so a single handler sees both
+  /** Routes and trips as one tagged stream, so a single processor sees both
     * sides of every aggregate⋈aggregate query in the same trigger. */
   private def taggedUnion: DataFrame = {
     val r = routes.select(lit("route").as("kind"), col("route_id"),
@@ -345,139 +333,59 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     r.unionByName(t)
   }
 
-  private def processUnionBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
-    // at-least-once replay of an already-committed batch: its effects are
-    // in the restored snapshot — folding it again would double-count
-    if (lastUnionBatch.exists(_ >= batchId)) return
-    val b = Staging.stage(batch)
-    val r = b.filter(col("kind") === "route")
-      .select("route_id", "transport_type", "capacity", "operator", "ts")
-    val t = b.filter(col("kind") === "trip")
-      .select("trip_id", "route_id", "transport_type", "passenger_name", "ts")
+  /** The processor's [[Changed]] rows with the one occupancy formula
+    * (`occupancy_pct`) and q2's average applied. */
+  private def projected(changed: DataFrame): DataFrame =
+    changed.select(col("*"),
+      TransitQueries.occupancyPct(col("cnt"), col("cap")).as("occupancy_pct"),
+      (col("cnt").cast("double") / col("routes")).as("average"))
 
-    // -- route-side state (null keys dropped, matching the reference's
-    // groupBy null-key drop — see the batch queries' filters)
-    val rK = r.filter(col("route_id").isNotNull)
-    routesLatest = Some(ckpt(Upsert.upsertLatest(routesLatest,
-      rK.withColumn("_b", lit(batchId)), Seq("route_id"), Seq("ts", "_b"))))
-    capPerRouteType = Some(mergeSum(capPerRouteType,
-      rK.groupBy("route_id", "transport_type").agg(sum("capacity").as("cap")),
-      Seq("route_id", "transport_type"), Seq("cap")))
-    capPerType = Some(mergeSum(capPerType,
-      r.filter(col("transport_type").isNotNull)
-        .groupBy("transport_type").agg(sum("capacity").as("cap")),
-      Seq("transport_type"), Seq("cap")))
-    totalCap = Some(mergeScalar(totalCap, rK.agg(sum("capacity").as("cap")), "cap"))
+  /** Apply one trigger's projected [[Changed]] rows to the result tables. */
+  private def applyChanged(rows: Seq[Row]): Unit = {
+    val of = rows.groupBy(_.getAs[String]("table")).withDefaultValue(Nil)
+    def v(r: Row, f: String): Any = r.get(r.fieldIndex(f))
 
-    // -- trip-side state (append-only: counts are monotone)
-    val tR = t.filter(col("route_id").isNotNull)
-    cntPerRoute = Some(mergeSum(cntPerRoute,
-      tR.groupBy("route_id").agg(count(lit(1)).as("cnt")), Seq("route_id"), Seq("cnt")))
-    cntPerType = Some(mergeSum(cntPerType,
-      t.filter(col("transport_type").isNotNull)
-        .groupBy("transport_type").agg(count(lit(1)).as("cnt")),
-      Seq("transport_type"), Seq("cnt")))
-    cntPerTypeRoute = Some(mergeSum(cntPerTypeRoute,
-      tR.filter(col("transport_type").isNotNull)
-        .groupBy("transport_type", "route_id").agg(count(lit(1)).as("cnt")),
-      Seq("transport_type", "route_id"), Seq("cnt")))
-    cntPerPassenger = Some(mergeSum(cntPerPassenger,
-      t.filter(col("passenger_name").isNotNull)
-        .groupBy("passenger_name").agg(count(lit(1)).as("cnt")),
-      Seq("passenger_name"), Seq("cnt")))
-    totalTrips = Some(mergeScalar(totalTrips, t.agg(count(lit(1)).as("cnt")), "cnt"))
+    store.upsert("routes_latest", RoutesLatest, Seq("route_id"), of("routes_latest").map(r =>
+      Row(v(r, "k1"), v(r, "k2"), v(r, "capacity"), v(r, "operator"), v(r, "ts"))))
+    store.upsert("cap_per_type", CapPerType, Seq("transport_type"),
+      of("cap_per_type").map(r => Row(v(r, "k1"), v(r, "cap"))))
 
-    // -- touched keys: the derivations below emit only touched keys, but
-    // they join against the full state tables, so each is O(state)
-    val touchedRoutes = r.select("route_id").unionByName(tR.select("route_id"))
-      .where(col("route_id").isNotNull).distinct()
+    // q4 on the batch routeOccupancy grain (route_id, transport_type): a
+    // route re-emitted under a different type keeps BOTH occupancy rows
+    val occ = of("route_occupancy")
+    store.upsert("route_occupancy", RouteOccupancy, Seq("route_id", "transport_type"),
+      occ.map(r => Row(v(r, "k1"), v(r, "k2"), v(r, "occupancy_pct"))))
+    val allOcc = store.rows("route_occupancy")
+    store.put("q4_occupancy_per_route", Q4, allOcc.map(r => Row(r.get(0), r.get(2))))
+    // q6: per-type argmin over the maintained occupancy, touched types only
+    val touchedTypes = occ.map(_.getAs[String]("k2")).toSet
+    store.upsert("q6_least_occupied_route_per_type", Q6, Seq("transport_type"),
+      allOcc.filter(r => touchedTypes(r.getString(1))).groupBy(_.getString(1)).toSeq.map {
+        case (ty, rs) =>
+          val m = rs.minBy(r => (r.getDouble(2), r.getString(0)))(leastFirst)
+          Row(ty, m.getString(0), m.getDouble(2))
+      })
 
-    // q4: occupancy for touched routes only, upserted on (route_id,
-    // transport_type) — the batch routeOccupancy grain (ADVICE r2: a route
-    // re-emitted under a different type keeps BOTH occupancy rows in batch
-    // q4; keying on route_id alone made the winner a nondeterministic
-    // equal-_gen max_by tiebreak)
-    val occUpd = capPerRouteType.get.join(broadcast(touchedRoutes), Seq("route_id"))
-      .join(cntPerRoute.get, Seq("route_id"), "left")
-      .select(col("route_id"), col("transport_type"),
-        TransitQueries.occupancyPct(col("cnt"), col("cap")).as("occupancy_pct"))
-    store.upsert("route_occupancy", occUpd, Seq("route_id", "transport_type"))
-    store.put("q4_occupancy_per_route",
-      store("route_occupancy").select("route_id", "occupancy_pct"))
-
-    // q6: per-type argmin over maintained occupancy, touched types only
-    val touchedTypes = occUpd.select("transport_type").distinct()
-    val q6Upd = store("route_occupancy")
-      .join(broadcast(touchedTypes), Seq("transport_type"))
-      .groupBy("transport_type")
-      .agg(min_by(struct(col("route_id"), col("occupancy_pct")),
-                  struct(col("occupancy_pct"), col("route_id"))).as("m"))
-      .select(col("transport_type"), col("m.route_id").as("route_id"),
-        col("m.occupancy_pct").as("occupancy_pct"))
-    store.upsert("q6_least_occupied_route_per_type", q6Upd, Seq("transport_type"))
-
-    // q2: avg passengers per route per type, touched types only
-    val tTypes = tR.filter(col("transport_type").isNotNull)
-      .select("transport_type").distinct()
-    val q2Upd = cntPerTypeRoute.get.join(broadcast(tTypes), Seq("transport_type"))
-      .groupBy("transport_type")
-      .agg((sum("cnt").cast("double") / count(lit(1))).as("average_passengers"))
-    store.upsert("q2_avg_passengers_per_type", q2Upd, Seq("transport_type"))
-
-    // q3/q10: monotone running argmax (champion ∪ touched keys' new totals)
-    val pTouched = t.filter(col("passenger_name").isNotNull)
-      .select("passenger_name").distinct()
-    val pTotals = cntPerPassenger.get.join(broadcast(pTouched), Seq("passenger_name"))
-      .select(col("passenger_name"), col("cnt").as("trip_count"))
-    store.put("q3_top_passenger",
-      runningTop1(store.get("q3_top_passenger"), pTotals, "trip_count", "passenger_name"))
-
-    // q10 counts ALL non-null-type trips (no route filter — unlike q2), so
-    // its touched set must too
-    val tyTouched = t.filter(col("transport_type").isNotNull)
-      .select("transport_type").distinct()
-    val tyTotals = cntPerType.get.join(broadcast(tyTouched), Seq("transport_type"))
-      .select(col("transport_type"), col("cnt").as("max_passengers"))
-    store.put("q10_top_transport_type",
-      runningTop1(store.get("q10_top_transport_type"), tyTotals,
-        "max_passengers", "transport_type"))
-
-    // q7/q8/q9 from the running totals (1-row frames; q8 mirrors the batch
-    // 1x1 crossJoin shape)
-    store.put("q7_total_capacity", totalCap.get.select(col("cap").as("total_capacity")))
-    store.put("q9_total_passengers", totalTrips.get.select(col("cnt").as("total_passengers")))
-    store.put("q8_total_occupancy_pct",
-      totalCap.get.crossJoin(totalTrips.get)
-        .select(TransitQueries.occupancyPct(col("cnt"), col("cap")).as("total_occupancy_pct")))
-
-    // q13: operator map is the LATEST route table (toTable semantics,
-    // `MostOccupiedOperator.java:56-68`); recompute over the #operators-sized
-    // aggregate — routes are the small dimension
-    val q13 = routesLatest.get.filter(col("operator").isNotNull)
-      .join(cntPerRoute.get, Seq("route_id"), "left")
-      .groupBy("operator")
-      .agg(sum(coalesce(col("cnt"), lit(0L))).as("pas"), sum("capacity").as("cap"))
-      .select(col("operator"),
-        TransitQueries.occupancyPct(col("pas"), col("cap")).as("occupancy_pct"))
-      .orderBy(col("occupancy_pct").desc, col("operator").asc).limit(1)
-    store.put("q13_most_occupied_operator", q13)
-
-    // the toTable state itself, queryable (latest_per_key operator surface)
-    store.put("routes_latest", routesLatest.get.drop("_b"))
-
-    // only the counters whose input slice was non-empty changed content
-    // this batch (an empty-side merge rebuilds an identical table — the
-    // previously committed version stays valid, so skip rewriting it)
-    if (stateDir.nonEmpty) {
-      if (!r.isEmpty)
-        Seq("routesLatest", "capPerRouteType", "capPerType", "totalCap")
-          .foreach(n => dirty += s"state/$n")
-      if (!t.isEmpty)
-        Seq("cntPerRoute", "cntPerType", "cntPerTypeRoute", "cntPerPassenger",
-          "totalTrips").foreach(n => dirty += s"state/$n")
+    store.upsert("q2_avg_passengers_per_type", Q2, Seq("transport_type"),
+      of("q2").map(r => Row(v(r, "k1"), v(r, "average"))))
+    Seq("q3" -> ("q3_top_passenger", Q3), "q10" -> ("q10_top_transport_type", Q10)).foreach {
+      case (t, (name, schema)) =>
+        store.ensure(name, schema)
+        of(t).foreach(r => store.put(name, schema, Seq(Row(v(r, "k1"), v(r, "cnt")))))
     }
-    lastUnionBatch = Some(batchId)
-    commitState()
+    of("totals").foreach { r =>
+      store.put("q7_total_capacity", Q7, Seq(Row(v(r, "cap"))))
+      store.put("q9_total_passengers", Q9, Seq(Row(v(r, "cnt"))))
+      store.put("q8_total_occupancy_pct", Q8, Seq(Row(v(r, "occupancy_pct"))))
+    }
+    // q13: argmax over every operator (the processor sends them all when
+    // one changed); occupancy moves both ways, so no running champion
+    store.ensure("q13_most_occupied_operator", Q13)
+    val ops = of("operator").filter(_.getAs[String]("k1") != null)
+      .map(r => (r.getAs[Double]("occupancy_pct"), r.getAs[String]("k1")))
+    if (of("operator").nonEmpty)
+      store.put("q13_most_occupied_operator", Q13,
+        ops.maxOption(greatestFirst).map { case (o, op) => Row(op, o) }.toSeq)
   }
 
   // ---- group 2: watermarked windowed counts (q11/q12) ---------------------
@@ -500,43 +408,38 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("window_start"), col("transport_type"), col("cnt"))
 
-  private def processWindowBatch(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val b = Staging.stage(
-      batch.filter(col("transport_type").isNotNull && col("window_start").isNotNull))
-    store.upsert("window_type_counts", b, Seq("window_start", "transport_type"))
-    val wTouched = b.select("window_start").distinct()
-    val wc = store("window_type_counts").join(broadcast(wTouched), Seq("window_start"))
+  private def processWindowBatch(batch: DataFrame, batchId: Long): Unit = {
+    val b = batch.filter(col("transport_type").isNotNull && col("window_start").isNotNull)
+    applying(b, () => awaitUnion()) { rows =>
+      store.upsert("window_type_counts", b.schema, Seq("window_start", "transport_type"), rows)
+      // append mode emits a window once, with all its types: the finishers
+      // see whole windows
 
-    // q11: per-window argmax by count (tiebreak smallest type) —
-    // min_by over (-cnt, type) = max by cnt then min type
-    val q11Upd = wc.groupBy("window_start")
-      .agg(min_by(struct(col("transport_type"), col("cnt")),
-                  struct((-col("cnt")).as("neg"), col("transport_type"))).as("m"))
-      .select(col("window_start"), col("m.transport_type").as("transport_type"),
-        col("m.cnt").as("max_passengers"))
-    store.upsert("q11_window_top_type", q11Upd, Seq("window_start"))
+      // q11: per-window argmax by count (tiebreak smallest type)
+      store.upsert("q11_window_top_type", Q11, Seq("window_start"),
+        rows.groupBy(_.getTimestamp(0)).toSeq.map { case (w, rs) =>
+          val m = rs.maxBy(r => (r.getLong(2), r.getString(1)))(mostFirst)
+          Row(w, m.getString(1), m.getLong(2))
+        })
 
-    // q12: per-window least-occupied type (intended min — SURVEY §2.1 quirk
-    // b). Cap side is the maintained per-type fold; a cap update after a
-    // window closed is not retroactively applied (same staleness the
-    // reference has: closed windows never re-emit).
-    val capT = capPerType.getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("transport_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("cap",
-            org.apache.spark.sql.types.LongType)))))
-    val q12Upd = wc.join(broadcast(capT), Seq("transport_type"), "left")
-      .select(col("window_start"), col("transport_type"),
-        TransitQueries.occupancyPct(col("cnt"), col("cap")).as("occupancy_pct"))
-      .groupBy("window_start")
-      .agg(min_by(struct(col("transport_type"), col("occupancy_pct")),
-                  struct(col("occupancy_pct"), col("transport_type"))).as("m"))
-      .select(col("window_start"), col("m.transport_type").as("transport_type"),
-        col("m.occupancy_pct").as("occupancy_pct"))
-    store.upsert("q12_window_least_occupied_type", q12Upd, Seq("window_start"))
-    commitState()
+      // q12: per-window least-occupied type (intended min — SURVEY §2.1
+      // quirk b). Cap side is the maintained per-type fold; a cap update
+      // after a window closed is not retroactively applied (same staleness
+      // the reference has: closed windows never re-emit). The occupancy
+      // projection over local rows runs locally, with no Spark job
+      val cap = store.rows("cap_per_type").map(r => r.getString(0) -> r.get(1)).toMap
+      val occ = spark.createDataFrame(
+          rows.map(r => Row(r.get(0), r.get(1), r.get(2), cap.getOrElse(r.getString(1), null)))
+            .asJava, WindowCaps)
+        .select(col("window_start"), col("transport_type"),
+          TransitQueries.occupancyPct(col("cnt"), col("cap")).as("occupancy_pct"))
+        .collect().toSeq
+      store.upsert("q12_window_least_occupied_type", Q12, Seq("window_start"),
+        occ.groupBy(_.getTimestamp(0)).toSeq.map { case (w, rs) =>
+          val m = rs.minBy(r => (r.getDouble(2), r.getString(1)))(leastFirst)
+          Row(w, m.getString(1), m.getDouble(2))
+        })
+    }
   }
 
   // ---- group 1: native update-mode single aggregations --------------------
@@ -561,7 +464,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
         .option("checkpointLocation", s"$checkpointRoot/$name")
         .queryName(name)
         .foreachBatch((b: DataFrame, _: Long) =>
-          synchronized { store.upsert(name, b, keys); commitState() })
+          applying(b)(store.upsert(name, b.schema, keys, _)))
         .start()
     }
     val windowed = windowedCounts.writeStream.outputMode("append")
@@ -572,15 +475,25 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     // observe() is the reference's peek()/debug-tap analog (SURVEY §2.2):
     // per-trigger input metrics surfaced through StreamingQueryProgress
     // instead of side-effect printlns
-    val union = taggedUnion
+    val changed = taggedUnion
       .observe("graft_input",
         count(lit(1)).as("events"),
         count(col("route_id")).as("keyed_events"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/union")
-      .queryName("union_runner")
-      .foreachBatch(processUnionBatch _)
-      .start()
+      .as(EventEncoder)
+      .groupByKey((_: TransitEvent) => 0)(Encoders.scalaInt)
+      .transformWithState(new TransitCounters, TimeMode.None(), OutputMode.Append())(
+        ChangedEncoder)
+      .toDF()
+    // all counters sit under one grouping key: one state partition
+    val union = StateStores.startOnRocksDb(spark, partitions = 1) {
+      changed.writeStream.outputMode("append")
+        .option("checkpointLocation", s"$checkpointRoot/union")
+        .queryName("union_runner")
+        .foreachBatch((b: DataFrame, _: Long) =>
+          applying(projected(b)) { rows => applyChanged(rows); unionApplied += 1 })
+        .start()
+    }
+    unionRunner = Some(union)
     native :+ windowed :+ union
   }
 }

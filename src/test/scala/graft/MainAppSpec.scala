@@ -18,15 +18,12 @@ class MainAppSpec extends SparkSpec {
   test("parse: full flag set and rejection of malformed command lines") {
     val c = MainApp.parse(Array("--topics", "/t", "--bootstrap", "b:9092",
       "--checkpoint", "/c", "--state", "/s", "--publish-every", "5",
-      "--staging", "reliable-checkpoint", "--staging-dir", "/stg",
-      "--state-store", "rocksdb"))
+      "--staging", "reliable-checkpoint", "--staging-dir", "/stg"))
     c shouldBe MainApp.Conf(Some("/t"), "b:9092", "/c", Some("/s"), 5L,
-      Some("reliable-checkpoint"), Some("/stg"), "rocksdb")
+      Some("reliable-checkpoint"), Some("/stg"))
     intercept[IllegalArgumentException](MainApp.parse(Array("--bogus", "x")))
     intercept[IllegalArgumentException](
       MainApp.parse(Array("--staging", "ramdisk"))) // unknown policy
-    intercept[IllegalArgumentException](
-      MainApp.parse(Array("--state-store", "leveldb"))) // unknown provider
     // a flag missing its value must not swallow the next flag
     intercept[IllegalArgumentException](
       MainApp.parse(Array("--topics", "--checkpoint")))

@@ -2,6 +2,7 @@ package graft.functions
 
 import scala.util.Random
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -276,6 +277,56 @@ class GramClfAdcExprSpec extends SparkSpec {
         .takeWhile(_ != null).map(_.getMessage).mkString("\n")
       withClue(s"codegen=$codegen: ") { messages should include(expected) }
     }
+  }
+
+  test("array kernels throw on a null element instead of reading it as 0") {
+    val sp = spark; import sp.implicits._
+    val v = Seq(Option(1.0), None, Option(0.5), Option(2.0))
+    val ok = Seq(Option(1.0), Option(1.0), Option(1.0), Option(1.0))
+    val planes = Array.tabulate(4, 4)((j, i) => math.sin(j * 4 + i + 1.0))
+    val cases = Seq[(String, (Seq[Option[Double]], Seq[Option[Double]]), Column)](
+      ("graft_dot", (v, ok), DotProduct.of(col("a"), col("b"))),
+      ("graft_dot", (ok, v), DotProduct.of(col("a"), col("b"))),
+      ("graft_subspace_sq_dists", (v, ok), SubspaceSqDists.of(col("a"), col("b"), 2)),
+      ("graft_prefix_dots", (ok, v), PrefixDots.of(col("a"), col("b"), Seq(1, 4))),
+      ("graft_sign_bands", (v, ok), SignBands.of(col("a"), planes, 2)),
+      ("graft_pq_assign", (v, ok ++ ok), PqAssign.of(col("a"), col("b"), 2)),
+      ("graft_pq_assign", (ok, ok ++ v), PqAssign.of(col("a"), col("b"), 2)))
+    val tokens = Seq(Option("a"), None, Option("b"))
+    val tokenCases = Seq[(String, Column)](
+      "graft_repetition_stats" -> RepetitionStats.of(col("t")),
+      "graft_simhash60" -> SimHash60.of(col("t")))
+    for (codegen <- Seq(false, true)) {
+      // a repartitioned frame is evaluated by generated code in a task; a
+      // local one by the optimizer's interpreted local-relation folding
+      def run(df: org.apache.spark.sql.DataFrame, c: Column): Throwable = intercept[Exception] {
+        (if (codegen) df.repartition(2) else df).select(c).collect()
+      }
+      def messages(e: Throwable) = Iterator.iterate(e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      for ((name, (a, b), c) <- cases)
+        withClue(s"$name codegen=$codegen: ") {
+          messages(run(Seq((a, b)).toDF("a", "b"), c)) should include(s"$name: null element")
+        }
+      for ((name, c) <- tokenCases)
+        withClue(s"$name codegen=$codegen: ") {
+          messages(run(Seq(Tuple1(tokens)).toDF("t"), c)) should include(s"$name: null element 1")
+        }
+    }
+  }
+
+  test("SignBands over equal copies of the planes are equal and semantically equal") {
+    val planes = Array.tabulate(8, 4)((j, i) => math.cos(j * 4 + i + 1.0))
+    val v = lit(Array(1.0, 2.0, 3.0, 4.0))
+    val a = org.apache.spark.sql.graft.bridge.expression(SignBands.of(v, planes, 4))
+    val b = org.apache.spark.sql.graft.bridge.expression(SignBands.of(v, planes.map(_.clone), 4))
+    a shouldBe b
+    a.semanticEquals(b) shouldBe true
+    val sp = spark; import sp.implicits._
+    val plan = Seq(Tuple1(Array(1.0, 2.0, 3.0, 4.0))).toDF("v")
+      .select(SignBands.of(col("v"), planes, 4)).queryExecution.toString
+    plan should not include "[[D@"
+    plan should include("graft_sign_bands")
   }
 
   test("ClfStats over equal copies of the weights are equal and semantically equal") {

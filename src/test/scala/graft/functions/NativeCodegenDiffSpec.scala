@@ -19,7 +19,8 @@ import org.scalatest.matchers.should.Matchers
   * on generated adversarial rows: null inputs, null array elements,
   * empty, whitespace-only and invalid UTF-8 text, text carrying the BPE
   * sentinel bytes, and one document of more than 1 MB. An input that
-  * makes a kernel throw must make it throw the same way on both paths.
+  * makes a kernel throw must make it throw the same way on both paths;
+  * an array kernel must throw on a null element.
   * Doubles compare bit for bit, except that all NaNs are one value: Java
   * leaves a NaN's sign and payload unspecified, and JIT-compiled code may
   * propagate a different NaN operand than the bytecode interpreter. */
@@ -115,9 +116,17 @@ class NativeCodegenDiffSpec extends AnyFunSuite with Matchers {
   private def outcome(p: UnsafeProjection, row: InternalRow, t: DataType): Either[String, Any] =
     Try(canon(p(row).get(0, t), t)).toEither.left.map(e => s"${e.getClass.getName}: ${e.getMessage}")
 
+  /** Whether a row holds an array with a null element. */
+  private def nullElement(values: Values): Boolean = !values.contains(null) && values.exists {
+    case a: ArrayData => (0 until a.numElements()).exists(a.isNullAt)
+    case _ => false
+  }
+
   /** Builds `make` over bound references of `types`, checks its input
-    * types, and compares both evaluation paths on every row. */
-  private def check(types: Seq[DataType], rows: Seq[Values])(
+    * types, and compares both evaluation paths on every row. With
+    * `nullElementsThrow`, a row holding a null array element must fail
+    * with the kernel's `IllegalArgumentException` on both paths. */
+  private def check(types: Seq[DataType], rows: Seq[Values], nullElementsThrow: Boolean = false)(
       make: Seq[Expression] => Expression): Unit = {
     val e = make(types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
     e.checkInputDataTypes() shouldBe TypeCheckResult.TypeCheckSuccess
@@ -127,7 +136,11 @@ class NativeCodegenDiffSpec extends AnyFunSuite with Matchers {
     rows.foreach { values =>
       val row = toInput(new GenericInternalRow(values.toArray)).copy()
       withClue(s"${e.prettyName} on ${values.map(v => String.valueOf(v).take(60))}: ") {
-        outcome(codegen, row, e.dataType) shouldBe outcome(interpreted, row, e.dataType)
+        val got = outcome(codegen, row, e.dataType)
+        got shouldBe outcome(interpreted, row, e.dataType)
+        if (nullElementsThrow && nullElement(values))
+          got.left.toOption.getOrElse("") should startWith(
+            s"java.lang.IllegalArgumentException: ${e.prettyName}: null element")
       }
     }
   }
@@ -185,28 +198,30 @@ class NativeCodegenDiffSpec extends AnyFunSuite with Matchers {
   }
 
   test("DotProduct") {
-    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 4))(es => DotProduct(es(0), es(1)))
+    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 4), nullElementsThrow = true)(
+      es => DotProduct(es(0), es(1)))
   }
 
   test("SubspaceSqDists") {
-    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 5))(
+    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 5), nullElementsThrow = true)(
       es => SubspaceSqDists(es(0), es(1), 8))
   }
 
   test("PrefixDots") {
-    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 6))(
+    check(Seq(arrD, arrD), sample(Gen.listOfN(2, doubles), 6), nullElementsThrow = true)(
       es => PrefixDots(es(0), es(1), Seq(1, 3, 8, 32, 64, 100)))
   }
 
   test("SignBands") {
-    val planes = Array.tabulate(16, 64)((j, i) => math.sin(j * 64 + i + 1.0))
-    check(Seq(arrD), sample(doubles, 7).map(Seq(_)))(es => SignBands(es.head, planes, 4))
+    val planes = IndexedSeq.tabulate(16, 64)((j, i) => math.sin(j * 64 + i + 1.0))
+    check(Seq(arrD), sample(doubles, 7).map(Seq(_)), nullElementsThrow = true)(
+      es => SignBands(es.head, planes, 4))
   }
 
   test("PqAssign") {
     val codebook = array(double, Gen.oneOf(0, 64, 16 * 64, 16 * 64 - 3))
-    check(Seq(arrD, arrD), sample(for (v <- doubles; cf <- codebook) yield Seq(v, cf), 8))(
-      es => PqAssign(es(0), es(1), 8))
+    check(Seq(arrD, arrD), sample(for (v <- doubles; cf <- codebook) yield Seq(v, cf), 8),
+      nullElementsThrow = true)(es => PqAssign(es(0), es(1), 8))
   }
 
   test("AdcDist, malformed rows included") {
@@ -232,10 +247,12 @@ class NativeCodegenDiffSpec extends AnyFunSuite with Matchers {
   }
 
   test("RepetitionStats") {
-    check(Seq(arrS), sample(tokens, 13).map(Seq(_)))(es => RepetitionStats(es.head))
+    check(Seq(arrS), sample(tokens, 13).map(Seq(_)), nullElementsThrow = true)(
+      es => RepetitionStats(es.head))
   }
 
   test("SimHash60") {
-    check(Seq(arrS), sample(tokens, 14).map(Seq(_)))(es => SimHash60(es.head))
+    check(Seq(arrS), sample(tokens, 14).map(Seq(_)), nullElementsThrow = true)(
+      es => SimHash60(es.head))
   }
 }

@@ -1,0 +1,116 @@
+package graft.streaming
+
+import java.nio.file.Files
+import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkSpec
+import graft.engine.Encode
+import graft.engine.Schemas.{Route, Trip}
+import graft.sources.StreamAdapters
+import graft.sources.StreamAdapters.TopicRef
+
+/** The union runner's per-trigger cost is bounded by the trigger, not by
+  * the history: after a warm-up, a 3-row trigger runs the same number of
+  * Spark jobs when the state holds ten times more keys, and at most 5.
+  * File topics feed the job, so each query reads its own offsets. The
+  * union runner's state settings do not leak into the session. */
+class UnionRunnerCostSpec extends SparkSpec {
+
+  /** Spark jobs per (streaming query id, batch id), and a marker job that
+    * tells when the listener bus has delivered every earlier event. */
+  private final class JobCounter extends SparkListener {
+    val jobs = TrieMap.empty[(String, String), Int]
+    @volatile var marker = new CountDownLatch(1)
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val p = Option(e.properties)
+      def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+      if (prop(JobCounter.MarkerKey).nonEmpty) marker.countDown()
+      for (q <- prop("sql.streaming.queryId"); b <- prop("streaming.sql.batchId"))
+        jobs.updateWith((q, b))(n => Some(n.getOrElse(0) + 1))
+    }
+  }
+  private object JobCounter { val MarkerKey = "graft.test.marker" }
+
+  private def drain(counter: JobCounter): Unit = {
+    counter.marker = new CountDownLatch(1)
+    val sc = spark.sparkContext
+    sc.setLocalProperty(JobCounter.MarkerKey, "1")
+    try sc.parallelize(Seq(1), 1).count()
+    finally sc.setLocalProperty(JobCounter.MarkerKey, null)
+    counter.marker.await(60, TimeUnit.SECONDS) shouldBe true
+  }
+
+  test("a 3-row trigger runs the same few jobs when the state holds 10x more keys") {
+    val root = Files.createTempDirectory("graft-cost-").toString
+    val Seq(routesT, tripsT) = Seq("Routes_topic", "Trips_topic")
+      .map(t => TopicRef(t, fallbackDir = Some(root)))
+    Seq(routesT, tripsT).foreach(StreamAdapters.createTopicIfNotExists(_))
+    // one file per write, so a trigger never sees half of one
+    def addRoutes(rs: Seq[Route]) =
+      StreamAdapters.writeBatchRaw(Encode.routesRaw(routesDf(rs)).coalesce(1), routesT)
+    def addTrips(ts: Seq[Trip]) =
+      StreamAdapters.writeBatchRaw(Encode.tripsRaw(tripsDf(ts)).coalesce(1), tripsT)
+    val job = TransitStreamingJob.fromTopics(spark, routesT, tripsT)
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    val confKeys = Seq(StateStores.ProviderKey, "spark.sql.shuffle.partitions")
+    val sessionConf = confKeys.map(spark.conf.getOption)
+    val queries = job.startAll(s"$root/ckpt")
+    val union = queries.find(_.name == "union_runner").get
+    def processAll(): Unit = {
+      union.processAllAvailable()
+      queries.filter(_ ne union).foreach(_.processAllAvailable())
+    }
+    val t0 = Timestamp.valueOf("2024-01-01 09:00:00").getTime
+    def ts(s: Int) = new Timestamp(t0 + s * 1000L)
+    def routes(from: Int, n: Int) = (from until from + n).map(i =>
+      Route(s"r$i", "a", "b", Seq("Bus", "Taxi", "Train")(i % 3), 40 + i % 7, s"Op${i % 5}", ts(i)))
+    def trips(from: Int, n: Int, nRoutes: Int) = (from until from + n).map(i =>
+      Trip(s"t$i", s"r${i % nRoutes}", "a", "b", Seq("Bus", "Taxi", "Train")(i % 3),
+        s"P${i % (nRoutes * 2)}", ts(i)))
+
+    /** Jobs of the union runner's trigger over 3 new trips. */
+    def threeRowTrigger(from: Int, nRoutes: Int): Int = {
+      addTrips(trips(from, 3, nRoutes))
+      processAll()
+      // an idle trigger's progress carries the next batch id: skip those
+      val last = union.recentProgress.filter(_.numInputRows > 0).last
+      last.numInputRows shouldBe 3L
+      drain(counter)
+      counter.jobs.getOrElse((union.id.toString, last.batchId.toString), 0)
+    }
+
+    try {
+      // the union runner's RocksDB state and single partition are its own
+      confKeys.map(spark.conf.getOption) shouldBe sessionConf
+      addRoutes(routes(0, 20))
+      addTrips(trips(0, 60, 20))
+      processAll()
+      threeRowTrigger(1000, 20) // warm-up
+      union.recentProgress.filter(_.numInputRows > 0).last
+        .stateOperators.head.customMetrics.keySet.asScala
+        .exists(_.startsWith("rocksdb")) shouldBe true
+      val small = threeRowTrigger(2000, 20)
+
+      addRoutes(routes(20, 180))
+      addTrips(trips(3000, 600, 200))
+      processAll()
+      threeRowTrigger(4000, 200)
+      val large = threeRowTrigger(5000, 200)
+
+      info(s"jobs of a 3-row trigger: $small with 20 routes, $large with 200")
+      small should be >= 1
+      large shouldBe small
+      large should be <= 5
+    } finally {
+      queries.foreach(_.stop())
+      spark.sparkContext.removeSparkListener(counter)
+    }
+  }
+}
