@@ -38,9 +38,7 @@ object MainApp {
       bootstrap: String = "localhost:9092",
       checkpoint: String = "/tmp/graft-ckpt",
       stateDir: Option[String] = None,
-      publishEverySec: Long = 10L,
-      staging: Option[String] = None,
-      stagingDir: Option[String] = None)
+      publishEverySec: Long = 10L)
 
   def parse(args: Array[String]): Conf = {
     require(args.length % 2 == 0,
@@ -53,18 +51,11 @@ object MainApp {
       case (c, Array("--checkpoint", v))    => c.copy(checkpoint = v)
       case (c, Array("--state", v))         => c.copy(stateDir = Some(v))
       case (c, Array("--publish-every", v)) => c.copy(publishEverySec = v.toLong)
-      case (c, Array("--staging", v))       => c.copy(staging = Some(v))
-      case (c, Array("--staging-dir", v))   => c.copy(stagingDir = Some(v))
       case (_, other) =>
         throw new IllegalArgumentException(s"unknown arguments: ${other.mkString(" ")}")
     }
     require(conf.publishEverySec > 0,
       s"--publish-every must be positive, got ${conf.publishEverySec}")
-    conf.staging.foreach { p =>
-      require(Set(graft.engine.Staging.LocalCheckpoint,
-        graft.engine.Staging.ReliableCheckpoint, graft.engine.Staging.Persist)(p),
-        s"--staging must be local-checkpoint|reliable-checkpoint|persist, got '$p'")
-    }
     conf
   }
 
@@ -78,12 +69,6 @@ object MainApp {
     * Returns the job, its queries, and the publish step (testable without
     * blocking). */
   def wire(spark: SparkSession, conf: Conf): (TransitStreamingJob, Seq[StreamingQuery], () => Unit) = {
-    // staging policy for the job's per-trigger state materialization
-    // (engine.Staging): on a real cluster pass
-    // `--staging reliable-checkpoint --staging-dir hdfs://.../stage`
-    // so an executor loss recovers instead of killing the stream
-    conf.staging.foreach(spark.conf.set(graft.engine.Staging.PolicyKey, _))
-    conf.stagingDir.foreach(spark.conf.set(graft.engine.Staging.DirKey, _))
     val ckptExists = new java.io.File(conf.checkpoint).exists()
     require(conf.stateDir.nonEmpty || !ckptExists,
       s"checkpoint ${conf.checkpoint} exists but no --state was given: sources " +

@@ -69,10 +69,6 @@ object StreamBench {
     (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum)
   }
 
-  /** The full 13-query transit job at scenario volume: every native agg,
-    * the windowed handler, and the union runner all fed per trigger —
-    * the rows/s one ingest sustains while keeping all 13 result tables
-    * current. */
   /** Aggregate per-trigger phase durations across a face's queries (the
     * planning-vs-commit decomposition of the sustained floor — VERDICT
     * r16 #4: the quiet-box floor sits where the loaded-box floor sat, so
@@ -92,6 +88,10 @@ object StreamBench {
         .map(k => s""""$k":${mean(k)}""").mkString(",") + "}}"
   }
 
+  /** The full 13-query transit job at scenario volume: both of its
+    * queries (the windowed handler and the union runner) fed per trigger —
+    * the rows/s one ingest sustains while keeping all 13 result tables
+    * current. */
   private def transitLeg(spark: SparkSession, nTrips: Int,
                          chunks: Int): (FaceResult, String) = {
     val sp = spark; import sp.implicits._

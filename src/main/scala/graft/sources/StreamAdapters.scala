@@ -76,12 +76,24 @@ object StreamAdapters {
       col("value").cast("string").as("value"),
       col("timestamp").as("ts"))
 
-  /** Streaming raw (key, value, ts) frame from a topic. */
+  /** The number of paths above which Spark lists files with a Spark job. */
+  private val ListingThresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+  /** Streaming raw (key, value, ts) frame from a topic.
+    *
+    * The file branch raises that threshold on `spark` for good. A file
+    * source's `getBatch` lists its trigger's new files again
+    * (`InMemoryFileIndex`), as a Spark job on every core once they are more
+    * than 32, and reads the threshold from this session at every trigger,
+    * so a set-and-restore around `start()` would not reach it. */
   def readStreamRaw(spark: SparkSession, ref: TopicRef): DataFrame =
     if (kafkaConnectorPresent)
       projectKafka(spark.readStream.format("kafka")
         .options(kafkaSourceOptions(ref)).load())
-    else spark.readStream.schema(rawSchema).json(dirOf(ref))
+    else {
+      spark.conf.set(ListingThresholdKey, Int.MaxValue.toString)
+      spark.readStream.schema(rawSchema).json(dirOf(ref))
+    }
 
   /** Batch raw frame over the same topic (the oracle compares batch runs). */
   def readBatchRaw(spark: SparkSession, ref: TopicRef): DataFrame =

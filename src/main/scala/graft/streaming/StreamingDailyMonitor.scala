@@ -30,8 +30,8 @@ import graft.operators.Events
   * continuous query. The counter merge is O(batch) per trigger; scoring
   * runs over the counter table, whose size is #types × #days — not the
   * stream. The counter is eagerly staged per trigger via
-  * [[graft.engine.Staging.stageIterative]], exactly like the transit
-  * job's counter state, so no unbounded lineage accumulates.
+  * [[graft.engine.Staging.stageIterative]], so no unbounded lineage
+  * accumulates.
   *
   * The counter table after any prefix of the stream equals
   * [[Events.dailyCounts]] of the same rows; counts are additive, so a

@@ -20,6 +20,9 @@ final case class TransitEvent(kind: String, route_id: String, transport_type: St
   * other fields hold its key (`k1`, `k2`) and values, null where unused:
   *
   *   - `routes_latest`: route_id, transport_type, capacity, operator, ts;
+  *   - `q1`: route_id, capacity `cap` summed over every emission (null
+  *     when every capacity is null);
+  *   - `q5`: route_id, trips `cnt`;
   *   - `route_occupancy`: route_id, transport_type, trips `cnt`, capacity `cap`;
   *   - `cap_per_type`: transport_type, capacity `cap`;
   *   - `q2`: transport_type, keyed trips `cnt`, distinct `routes`;
@@ -35,10 +38,11 @@ final case class Changed(table: String, k1: String, k2: String = null,
 
 // The state values. Per route: its latest emission (`KStream.toTable`),
 // the capacity folded per type (null until a non-null capacity, like
-// `sum`), its trips and the types they carried (q2's distinct routes). Per
-// type: q10's trips, q12's capacity, q2's keyed trips and routes. Per
-// operator, over its routes' latest emissions (q13): `capped` counts the
-// non-null capacities, so a sum over none is null.
+// `sum`; q1 sums it over the types), its trips (q5) and the types they
+// carried (q2's distinct routes). Per type: q10's trips, q12's capacity,
+// q2's keyed trips and routes. Per operator, over its routes' latest
+// emissions (q13): `capped` counts the non-null capacities, so a sum over
+// none is null.
 final case class LatestRoute(transport_type: String, capacity: Option[Int], operator: String,
     ts: Timestamp)
 final case class TypeCap(transport_type: String, cap: Option[Long])
@@ -60,7 +64,7 @@ final case class Totals(trips: Long, cap: Long)
   * Null keys are dropped as the batch queries drop them: route-keyed
   * counters need a `route_id`, the per-type capacity only a
   * `transport_type`; q10 counts trips with no route, q2 needs both keys.
-  * Routes fold capacity on every emission (q4, q7, q12's capacity) but q13 and
+  * Routes fold capacity on every emission (q1, q4, q7, q12's capacity) but q13 and
   * `routes_latest` use the latest emission per route: a later trigger wins
   * on equal `ts`, and within a trigger equal `ts` is broken by content, so
   * a replayed trigger emits the same rows. q3 and q10 keep the exact
@@ -150,10 +154,15 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     }
 
     route.now.foreach { case (id, now) =>
-      if (now.latest != route.before(id).latest) now.latest.foreach { l =>
+      val was = route.before(id)
+      if (now.latest != was.latest) now.latest.foreach { l =>
         out += Changed("routes_latest", id, l.transport_type, capacity = l.capacity,
           operator = l.operator, ts = l.ts)
       }
+      // q1 has a row once the route emitted, q5 once it has a trip
+      if (now.caps != was.caps) out += Changed("q1", id,
+        cap = now.caps.flatMap(_.cap).reduceOption(Math.addExact(_: Long, _: Long)))
+      if (now.trips != was.trips) out += Changed("q5", id, cnt = Some(now.trips))
       val trips = Some(now.trips).filter(_ > 0)
       now.caps.foreach(c =>
         out += Changed("route_occupancy", id, c.transport_type, cnt = trips, cap = c.cap))

@@ -94,13 +94,9 @@ final class TableStore(spark: SparkSession) {
   * `MemoryStream` in tests, file/Kafka source in production, decoded via
   * [[graft.engine.Decode]] when the wire format is JSON.
   *
-  * Three execution groups (SURVEY.md §7.3 strategy):
+  * Two execution groups (SURVEY.md §7.3 strategy), two queries:
   *
-  *   1. '''Native update-mode aggregations''' (q1, q5): single stateful
-  *      aggregation per query, incremental Spark state store, update-mode
-  *      output upserted into the [[TableStore]].
-  *
-  *   2. '''Native watermarked windowed aggregation''' (q11/q12 counts):
+  *   1. '''Native watermarked windowed aggregation''' (q11/q12 counts):
   *      `withWatermark(ts, "0 seconds")` + 1h tumbling window in APPEND mode
   *      reproduces the reference's zero-grace late-data drop
   *      (`TransportTypeMaxPassengersWindow.java:32`,
@@ -109,10 +105,13 @@ final class TableStore(spark: SparkSession) {
   *      for it are dropped by the engine. The append output feeds the
   *      per-window argmax/argmin finishers.
   *
-  *   3. '''One keyed-state processor over the tagged union''' for the
-  *      aggregate⋈aggregate queries (q2, q3, q4, q6, q7, q8, q9, q10, q13),
-  *      which a single streaming aggregation cannot express (no join of two
-  *      streaming aggregates). [[TransitCounters]] runs under
+  *   2. '''One keyed-state processor over the tagged union''' for the
+  *      other eleven: the aggregate⋈aggregate queries (q2, q3, q4, q6, q7,
+  *      q8, q9, q10, q13), which a single streaming aggregation cannot
+  *      express (no join of two streaming aggregates), and q1 and q5,
+  *      whose per-route counters it keeps anyway; every query that reads
+  *      the topics pays the source's per-trigger cost (listing, scan,
+  *      state commit) again. [[TransitCounters]] runs under
   *      `transformWithState` on RocksDB and keeps compact counters — the
   *      KTable/RocksDB analog: per-key aggregates only, never raw events,
   *      each bounded by its key cardinality. A trigger reads and writes only
@@ -132,14 +131,15 @@ final class TableStore(spark: SparkSession) {
   * Durability: Spark's checkpoint holds every query's keyed state. A
   * replayed trigger re-runs from the previous state version and emits the
   * same rows, and applying them again is idempotent. The result tables are
-  * snapshotted under `stateDir`, because q1, q5 and the window results have
-  * no other durable home.
+  * snapshotted under `stateDir`: the processor emits only the rows that
+  * changed, so its state cannot rebuild them after a restart, and the
+  * window results have no other durable home.
   *
-  * Threading: Spark runs the queries' triggers on separate threads. Each
-  * handler runs its Spark job on its own and applies the rows under this
-  * job's monitor; a window batch also waits for the union runner to catch
-  * up ([[awaitUnion]]). Results are eventually consistent across groups
-  * within a trigger (the reference has the same property: its 13
+  * Threading: Spark runs the two queries' triggers on separate threads.
+  * Each handler runs its Spark job on its own and applies the rows under
+  * this job's monitor; a window batch also waits for the union runner to
+  * catch up ([[awaitUnion]]). Results are eventually consistent across the
+  * groups within a trigger (the reference has the same property: its 13
   * topologies share no barrier).
   */
 object TransitStreamingJob {
@@ -164,6 +164,8 @@ object TransitStreamingJob {
 
   // the union runner's and the window finishers' tables
   private def schema(ddl: String) = StructType.fromDDL(ddl)
+  private val Q1 = schema("route_id string, total_capacity bigint")
+  private val Q5 = schema("route_id string, passenger_count bigint")
   private val RoutesLatest =
     schema("route_id string, transport_type string, capacity int, operator string, ts timestamp")
   private val CapPerType = schema("transport_type string, cap bigint")
@@ -317,7 +319,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     while (unionApplied < target && !idle && u.isActive) Thread.sleep(5)
   }
 
-  // ---- group 3: the tagged-union keyed-state runner -----------------------
+  // ---- group 2: the tagged-union keyed-state runner -----------------------
 
   /** Routes and trips as one tagged stream, so a single processor sees both
     * sides of every aggregate⋈aggregate query in the same trigger. */
@@ -349,6 +351,10 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       Row(v(r, "k1"), v(r, "k2"), v(r, "capacity"), v(r, "operator"), v(r, "ts"))))
     store.upsert("cap_per_type", CapPerType, Seq("transport_type"),
       of("cap_per_type").map(r => Row(v(r, "k1"), v(r, "cap"))))
+    store.upsert("q1_seats_per_route", Q1, Seq("route_id"),
+      of("q1").map(r => Row(v(r, "k1"), v(r, "cap"))))
+    store.upsert("q5_passengers_per_route", Q5, Seq("route_id"),
+      of("q5").map(r => Row(v(r, "k1"), v(r, "cnt"))))
 
     // q4 on the batch routeOccupancy grain (route_id, transport_type): a
     // route re-emitted under a different type keeps BOTH occupancy rows
@@ -388,7 +394,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
         ops.maxOption(greatestFirst).map { case (o, op) => Row(op, o) }.toSeq)
   }
 
-  // ---- group 2: watermarked windowed counts (q11/q12) ---------------------
+  // ---- group 1: watermarked windowed counts (q11/q12) ---------------------
 
   /** Append-mode finalized (window, type) counts: each row arrives exactly
     * once, when the 0-second watermark passes the window end.
@@ -442,31 +448,11 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     }
   }
 
-  // ---- group 1: native update-mode single aggregations --------------------
-
-  private def nativeAggs: Seq[(String, DataFrame, Seq[String])] = Seq(
-    ("q1_seats_per_route",
-      routes.filter(col("route_id").isNotNull)
-        .groupBy("route_id").agg(sum("capacity").as("total_capacity")),
-      Seq("route_id")),
-    ("q5_passengers_per_route",
-      trips.filter(col("route_id").isNotNull)
-        .groupBy("route_id").agg(count(lit(1)).as("passenger_count")),
-      Seq("route_id")),
-  )
-
   // -------------------------------------------------------------------------
 
-  /** Start every streaming query; caller owns awaiting/stopping them. */
+  /** Start the two streaming queries, `windowed_counts` and
+    * `union_runner`; caller owns awaiting/stopping them. */
   def startAll(checkpointRoot: String): Seq[StreamingQuery] = {
-    val native = nativeAggs.map { case (name, df, keys) =>
-      df.writeStream.outputMode("update")
-        .option("checkpointLocation", s"$checkpointRoot/$name")
-        .queryName(name)
-        .foreachBatch((b: DataFrame, _: Long) =>
-          applying(b)(store.upsert(name, b.schema, keys, _)))
-        .start()
-    }
     val windowed = windowedCounts.writeStream.outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/windowed")
       .queryName("windowed_counts")
@@ -494,6 +480,6 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
         .start()
     }
     unionRunner = Some(union)
-    native :+ windowed :+ union
+    Seq(windowed, union)
   }
 }

@@ -17,13 +17,9 @@ class MainAppSpec extends SparkSpec {
 
   test("parse: full flag set and rejection of malformed command lines") {
     val c = MainApp.parse(Array("--topics", "/t", "--bootstrap", "b:9092",
-      "--checkpoint", "/c", "--state", "/s", "--publish-every", "5",
-      "--staging", "reliable-checkpoint", "--staging-dir", "/stg"))
-    c shouldBe MainApp.Conf(Some("/t"), "b:9092", "/c", Some("/s"), 5L,
-      Some("reliable-checkpoint"), Some("/stg"))
+      "--checkpoint", "/c", "--state", "/s", "--publish-every", "5"))
+    c shouldBe MainApp.Conf(Some("/t"), "b:9092", "/c", Some("/s"), 5L)
     intercept[IllegalArgumentException](MainApp.parse(Array("--bogus", "x")))
-    intercept[IllegalArgumentException](
-      MainApp.parse(Array("--staging", "ramdisk"))) // unknown policy
     // a flag missing its value must not swallow the next flag
     intercept[IllegalArgumentException](
       MainApp.parse(Array("--topics", "--checkpoint")))

@@ -16,7 +16,9 @@ import graft.engine.Schemas.{Route, Trip}
   * kills a real deployment in week one, so the ceilings are pinned here. */
 class LongHorizonSpec extends SparkSpec {
 
-  private val Days = 4
+  // the window query and the union runner commit three times a day in
+  // all: six days make 18 commits
+  private val Days = 6
   private val WindowsPerDay = 4
 
   test("window state evicts closed windows and snapshot GC keeps the state dir flat") {
@@ -58,7 +60,7 @@ class LongHorizonSpec extends SparkSpec {
       job.store("q12_window_least_occupied_type").count() shouldBe closed.toLong
 
       // ---- Spark's windowed-agg state store is BOUNDED --------------------
-      // closed windows are evicted by the watermark: after 16 windows of
+      // closed windows are evicted by the watermark: after 24 windows of
       // history, the store holds only the open window's groups (#types),
       // not one group per window ever seen
       val windowed = queries.find(_.name == "windowed_counts").get

@@ -14,7 +14,7 @@ import graft.operators.{TransitQueries, Upsert}
 /** Final-state parity: feed the edge fixture through MemoryStreams in three
   * chunks, then assert every maintained result table equals the batch answer
   * over the same rows — the KTable-converges-to-the-table property the
-  * reference relies on. */
+  * reference relies on. q1 and q5's own edges are in `RouteCountersSpec`. */
 class StreamingParitySpec extends SparkSpec {
 
   // far-future sentinels: the first advances the 0s watermark past every
@@ -68,7 +68,7 @@ class StreamingParitySpec extends SparkSpec {
   private def checkParity(table: String, batch: DataFrame): Unit =
     assertSameRows(store(table), batch)
 
-  test("native update-mode aggs converge: q1, q5") {
+  test("route counters converge: q1, q5") {
     checkParity("q1_seats_per_route", TransitQueries.q1(allRoutes))
     checkParity("q5_passengers_per_route", TransitQueries.q5(allTrips))
   }

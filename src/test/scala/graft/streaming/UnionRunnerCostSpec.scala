@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -19,7 +19,9 @@ import graft.sources.StreamAdapters.TopicRef
   * the history: after a warm-up, a 3-row trigger runs the same number of
   * Spark jobs when the state holds ten times more keys, and at most 5.
   * File topics feed the job, so each query reads its own offsets. The
-  * union runner's state settings do not leak into the session. */
+  * union runner's state settings do not leak into the session. A trigger
+  * over many new topic files lists them on the driver, with no Spark job,
+  * and the job runs two queries. */
 class UnionRunnerCostSpec extends SparkSpec {
 
   /** Spark jobs per (streaming query id, batch id), and a marker job that
@@ -36,6 +38,14 @@ class UnionRunnerCostSpec extends SparkSpec {
     }
   }
   private object JobCounter { val MarkerKey = "graft.test.marker" }
+
+  /** Every job's description and the task counts of its stages. */
+  private final class JobLog extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[Int])]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse(""), e.stageInfos.map(_.numTasks)))
+  }
 
   private def drain(counter: JobCounter): Unit = {
     counter.marker = new CountDownLatch(1)
@@ -110,6 +120,47 @@ class UnionRunnerCostSpec extends SparkSpec {
       large should be <= 5
     } finally {
       queries.foreach(_.stop())
+      spark.sparkContext.removeSparkListener(counter)
+    }
+  }
+
+  test("a trigger over 48 new topic files runs no file-listing job; the job runs two queries") {
+    val root = Files.createTempDirectory("graft-listing-").toString
+    val Seq(routesT, tripsT) = Seq("Routes_topic", "Trips_topic")
+      .map(t => TopicRef(t, fallbackDir = Some(root)))
+    Seq(routesT, tripsT).foreach(StreamAdapters.createTopicIfNotExists(_))
+    val t0 = Timestamp.valueOf("2024-01-01 09:00:00").getTime
+    val files = 48
+    StreamAdapters.writeBatchRaw(Encode.routesRaw(routesDf((0 until 10).map(i =>
+      Route(s"r$i", "a", "b", "Bus", 40, "Op", new Timestamp(t0 + i))))).coalesce(1), routesT)
+    // every trips file is in place before the queries start: their first
+    // trigger reads them all
+    StreamAdapters.writeBatchRaw(Encode.tripsRaw(tripsDf((0 until 480).map(i =>
+      Trip(s"t$i", s"r${i % 10}", "a", "b", "Bus", s"P$i", new Timestamp(t0 + 1000L * i)))))
+      .repartition(files), tripsT)
+    new java.io.File(s"$root/Trips_topic").list().count(_.startsWith("part-")) shouldBe files
+
+    val job = TransitStreamingJob.fromTopics(spark, routesT, tripsT)
+    val log = new JobLog
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(log)
+    spark.sparkContext.addSparkListener(counter)
+    val queries = job.startAll(s"$root/ckpt")
+    try {
+      queries.map(_.name).sorted shouldBe Seq("union_runner", "windowed_counts")
+      val union = queries.find(_.name == "union_runner").get
+      union.processAllAvailable()
+      queries.foreach(_.processAllAvailable())
+      union.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows) shouldBe Seq(490L)
+      drain(counter)
+      val seen = log.jobs.asScala.toSeq
+      info(s"${seen.size} jobs; stage task counts: ${seen.flatMap(_._2).sorted.mkString(" ")}")
+      seen.map(_._1).filter(_.startsWith("Listing leaf files")) shouldBe empty
+      // a listing job runs one task per file; the scans pack the files
+      seen.flatMap(_._2).filter(_ >= files / 2) shouldBe empty
+    } finally {
+      queries.foreach(_.stop())
+      spark.sparkContext.removeSparkListener(log)
       spark.sparkContext.removeSparkListener(counter)
     }
   }
