@@ -29,7 +29,8 @@ import graft.streaming.{ResultPublisher, TransitStreamingJob}
   * `--state` enables durable restart-safe state; restarting over an
   * existing checkpoint WITHOUT it is refused (sources would resume their
   * committed offsets while every counter restarts empty — silently wrong
-  * results forever).
+  * results forever). A checkpoint written by the earlier two-query job is
+  * not resumable: its open windows live in `windowed/`.
   */
 object MainApp {
 

@@ -88,10 +88,9 @@ object StreamBench {
         .map(k => s""""$k":${mean(k)}""").mkString(",") + "}}"
   }
 
-  /** The full 13-query transit job at scenario volume: both of its
-    * queries (the windowed handler and the union runner) fed per trigger —
-    * the rows/s one ingest sustains while keeping all 13 result tables
-    * current. */
+  /** The full 13-query transit job at scenario volume: its one query (the
+    * union runner) fed per trigger — the rows/s one ingest sustains while
+    * keeping all 13 result tables current. */
   private def transitLeg(spark: SparkSession, nTrips: Int,
                          chunks: Int): (FaceResult, String) = {
     val sp = spark; import sp.implicits._
@@ -103,10 +102,7 @@ object StreamBench {
     val job = new TransitStreamingJob(spark, routesIn.toDF(), tripsIn.toDF())
     withCkpt("sb-transit-") { ckpt =>
       val qs = job.startAll(ckpt)
-      def processAll(): Unit = {
-        qs.find(_.name == "union_runner").foreach(_.processAllAvailable())
-        qs.filter(_.name != "union_runner").foreach(_.processAllAvailable())
-      }
+      def processAll(): Unit = qs.foreach(_.processAllAvailable())
       val (_, sec) = time {
         routesIn.addData(routes)
         trips.grouped(math.max(1, trips.size / chunks)).foreach { c =>

@@ -24,13 +24,14 @@ final case class TransitEvent(kind: String, route_id: String, transport_type: St
   *     when every capacity is null);
   *   - `q5`: route_id, trips `cnt`;
   *   - `route_occupancy`: route_id, transport_type, trips `cnt`, capacity `cap`;
-  *   - `cap_per_type`: transport_type, capacity `cap`;
   *   - `q2`: transport_type, keyed trips `cnt`, distinct `routes`;
   *   - `q3`, `q10`: the champion's key and `cnt`;
   *   - `totals`: all trips `cnt`, keyed-route capacity `cap`;
   *   - `operator`: operator, trips `cnt`, latest capacity `cap`. Emitted for
   *     every operator whenever one changed; a null operator stands for "no
-  *     operator has a route".
+  *     operator has a route";
+  *   - `window`: a closed window's start `ts`, a transport type, its trips
+  *     `cnt` in the window and the type's capacity `cap` when it closed.
   */
 final case class Changed(table: String, k1: String, k2: String = null,
     cnt: Option[Long] = None, cap: Option[Long] = None, routes: Option[Long] = None,
@@ -42,7 +43,7 @@ final case class Changed(table: String, k1: String, k2: String = null,
 // carried (q2's distinct routes). Per type: q10's trips, q12's capacity,
 // q2's keyed trips and routes. Per operator, over its routes' latest
 // emissions (q13): `capped` counts the non-null capacities, so a sum over
-// none is null.
+// none is null. Per open window (q11/q12), its trips per type.
 final case class LatestRoute(transport_type: String, capacity: Option[Int], operator: String,
     ts: Timestamp)
 final case class TypeCap(transport_type: String, cap: Option[Long])
@@ -52,6 +53,7 @@ final case class TypeCounters(trips: Long, cap: Option[Long], q2Trips: Long, q2R
 final case class OperatorCounters(routes: Long, trips: Long, cap: Long, capped: Long)
 final case class Champion(key: String, cnt: Long)
 final case class Totals(trips: Long, cap: Long)
+final case class WindowCounts(types: Map[String, Long])
 
 /** The union runner's counters on Spark's keyed state store: the Kafka
   * Streams KTable/RocksDB analog. All state lives under one grouping key,
@@ -69,7 +71,17 @@ final case class Totals(trips: Long, cap: Long)
   * on equal `ts`, and within a trigger equal `ts` is broken by content, so
   * a replayed trigger emits the same rows. q3 and q10 keep the exact
   * monotone champion: counts only grow, so only a touched key can displace
-  * it. */
+  * it.
+  *
+  * q11/q12's 1-hour tumbling windows follow Spark's append-mode window
+  * aggregation under `withWatermark("ts", "0 seconds")`, the reference's
+  * zero-grace windows (`TransportTypeMaxPassengersWindow.java:32`): the
+  * watermark is the greatest trip `ts` seen; a typed trip is counted unless
+  * its window's end is at or before the watermark held before the trigger;
+  * and a window whose end the raised watermark reaches is emitted whole,
+  * once, with its types' capacities, then dropped. Lateness is judged by
+  * the window's end, not the trip's `ts`. Every open window ends after the
+  * watermark, so at most the watermark's own window stays open. */
 final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed] {
   import TransitCounters._
 
@@ -80,6 +92,8 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
   @transient private var q3: ValueState[Champion] = _
   @transient private var q10: ValueState[Champion] = _
   @transient private var totals: ValueState[Totals] = _
+  @transient private var windows: MapState[Long, WindowCounts] = _
+  @transient private var watermark: ValueState[Long] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     val h = getHandle
@@ -92,6 +106,9 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     q3 = h.getValueState("q3", Encoders.product[Champion], TTLConfig.NONE)
     q10 = h.getValueState("q10", Encoders.product[Champion], TTLConfig.NONE)
     totals = h.getValueState("totals", Encoders.product[Totals], TTLConfig.NONE)
+    windows = h.getMapState("windows", Encoders.scalaLong, Encoders.product[WindowCounts],
+      TTLConfig.NONE)
+    watermark = h.getValueState("watermark", Encoders.scalaLong, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Int, rows: Iterator[TransitEvent],
@@ -102,12 +119,11 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     val typ = new Touched(types, TypeCounters(0L, None, 0L, 0L))
     val passenger = new Touched(passengers, 0L)
     val operator = new Touched(operators, OperatorCounters(0L, 0L, 0L, 0L))
-    val capTypes, q2Types, countedTypes = mutable.LinkedHashSet.empty[String]
+    val q2Types, countedTypes = mutable.LinkedHashSet.empty[String]
 
     rs.filter(_.transport_type != null).foreach { e =>
       val t = typ(e.transport_type)
       typ(e.transport_type) = t.copy(cap = addCap(t.cap, e.capacity))
-      capTypes += e.transport_type
     }
     val keyed = rs.filter(_.route_id != null)
     keyed.groupBy(_.route_id).foreach { case (id, es) =>
@@ -167,7 +183,6 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
       now.caps.foreach(c =>
         out += Changed("route_occupancy", id, c.transport_type, cnt = trips, cap = c.cap))
     }
-    capTypes.foreach(t => out += Changed("cap_per_type", t, cap = typ(t).cap))
     q2Types.foreach(t =>
       out += Changed("q2", t, cnt = Some(typ(t).q2Trips), routes = Some(typ(t).q2Routes)))
     crown(q3, "q3", passenger.now.toSeq, out)
@@ -181,6 +196,7 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
       totals.update(now)
       out += Changed("totals", null, cnt = Some(now.trips), cap = Some(now.cap))
     }
+    advanceWindows(ts, typ, out)
     Seq(route, typ, passenger).foreach(_.write())
     if (operator.write()) {
       val all = operators.iterator().toSeq
@@ -191,6 +207,35 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
       if (all.isEmpty) out += Changed("operator", null)
     }
     out.iterator
+  }
+
+  /** Count the trips into their open windows, raise the watermark, then
+    * emit and drop every window it closed, with the types' capacities after
+    * this trigger's routes. */
+  private def advanceWindows(trips: Seq[TransitEvent], typ: Touched[TypeCounters],
+                             out: mutable.ArrayBuffer[Changed]): Unit = {
+    val before = if (watermark.exists()) watermark.get() else 0L
+    val timed = trips.filter(_.ts != null)
+    val held = windows.iterator().toMap
+    val open = mutable.Map.from(held)
+    timed.filter(_.transport_type != null).foreach { e =>
+      val start = windowStart(e.ts)
+      if (start + HourMs > before) {
+        val w = open.getOrElse(start, WindowCounts(Map.empty)).types
+        open(start) =
+          WindowCounts(w.updated(e.transport_type, w.getOrElse(e.transport_type, 0L) + 1))
+      }
+    }
+    val after = timed.foldLeft(before)((m, e) => math.max(m, e.ts.getTime))
+    if (after != before) watermark.update(after)
+    open.foreach { case (start, w) =>
+      if (start + HourMs <= after) {
+        w.types.foreach { case (t, n) =>
+          out += Changed("window", t, cnt = Some(n), cap = typ(t).cap, ts = new Timestamp(start))
+        }
+        if (held.contains(start)) windows.removeKey(start)
+      } else if (!held.get(start).contains(w)) windows.updateValue(start, w)
+    }
   }
 
   /** Replace the champion when a touched key's new count beats it: exact,
@@ -227,6 +272,10 @@ object TransitCounters {
       else { if (v == zero) state.removeKey(k) else state.updateValue(k, v); true }
     } > 0
   }
+
+  private val HourMs = 3600L * 1000
+  /** The start (epoch ms) of the 1-hour tumbling window holding `ts`. */
+  private def windowStart(ts: Timestamp): Long = ts.getTime - Math.floorMod(ts.getTime, HourMs)
 
   /** `sum`'s fold: nulls are skipped, and a sum over nulls only is null. */
   private def addCap(acc: Option[Long], x: Option[Int]): Option[Long] = (acc, x) match {

@@ -94,33 +94,24 @@ final class TableStore(spark: SparkSession) {
   * `MemoryStream` in tests, file/Kafka source in production, decoded via
   * [[graft.engine.Decode]] when the wire format is JSON.
   *
-  * Two execution groups (SURVEY.md §7.3 strategy), two queries:
-  *
-  *   1. '''Native watermarked windowed aggregation''' (q11/q12 counts):
-  *      `withWatermark(ts, "0 seconds")` + 1h tumbling window in APPEND mode
-  *      reproduces the reference's zero-grace late-data drop
-  *      (`TransportTypeMaxPassengersWindow.java:32`,
-  *      `LeastOccupiedTransportTypeWindow.java:68`): a window's count is
-  *      emitted exactly once, when the watermark passes its end; later events
-  *      for it are dropped by the engine. The append output feeds the
-  *      per-window argmax/argmin finishers.
-  *
-  *   2. '''One keyed-state processor over the tagged union''' for the
-  *      other eleven: the aggregate⋈aggregate queries (q2, q3, q4, q6, q7,
-  *      q8, q9, q10, q13), which a single streaming aggregation cannot
-  *      express (no join of two streaming aggregates), and q1 and q5,
-  *      whose per-route counters it keeps anyway; every query that reads
-  *      the topics pays the source's per-trigger cost (listing, scan,
-  *      state commit) again. [[TransitCounters]] runs under
-  *      `transformWithState` on RocksDB and keeps compact counters — the
-  *      KTable/RocksDB analog: per-key aggregates only, never raw events,
-  *      each bounded by its key cardinality. A trigger reads and writes only
-  *      the keys its rows touch and emits only the rows that changed; the
-  *      runner projects them through `TransitQueries.occupancyPct` and
-  *      applies them to the [[TableStore]] in one pass, so a trigger costs
-  *      one Spark job whatever the size of the state. The non-monotone
-  *      extremes are recomputed locally from the maintained tables:
-  *      q6 over the touched types' routes, q13 over the operators.
+  * One query, `union_runner`, over the tagged union of both topics:
+  * [[TransitCounters]] runs under `transformWithState` on RocksDB and keeps
+  * compact counters for all 13 — the KTable/RocksDB analog: per-key
+  * aggregates only, never raw events, each bounded by its key cardinality.
+  * The aggregate⋈aggregate queries (q2, q3, q4, q6, q7, q8, q9, q10, q13)
+  * need both sides in one trigger, which a single streaming aggregation
+  * cannot express (no join of two streaming aggregates); q1 and q5 read its
+  * per-route counters; q11/q12's zero-grace 1-hour windows
+  * (`TransportTypeMaxPassengersWindow.java:32`,
+  * `LeastOccupiedTransportTypeWindow.java:68`) sit in the same state under
+  * the processor's own 0-second watermark, so a window closes against the
+  * capacity of the routes that came with its trips. A trigger reads and
+  * writes only the keys its rows touch and emits only the rows that
+  * changed; the runner projects them through `TransitQueries.occupancyPct`
+  * and applies them to the [[TableStore]] in one pass, so a trigger costs
+  * one Spark job whatever the size of the state. The non-monotone extremes
+  * are recomputed locally from the maintained tables: q6 over the touched
+  * types' routes, q13 over the operators, q11/q12 over each closed window.
   *
   * Upsert semantics: `routes_latest` and q13's operator map keep the latest
   * emission per route (the reference's `KStream.toTable`,
@@ -128,19 +119,12 @@ final class TableStore(spark: SparkSession) {
   * sums, q12's capacity-per-type, `LeastOccupiedTransportTypeWindow.java:42-46`)
   * stay folds, faithful to the reference's adder-only aggregates.
   *
-  * Durability: Spark's checkpoint holds every query's keyed state. A
-  * replayed trigger re-runs from the previous state version and emits the
-  * same rows, and applying them again is idempotent. The result tables are
-  * snapshotted under `stateDir`: the processor emits only the rows that
-  * changed, so its state cannot rebuild them after a restart, and the
-  * window results have no other durable home.
-  *
-  * Threading: Spark runs the two queries' triggers on separate threads.
-  * Each handler runs its Spark job on its own and applies the rows under
-  * this job's monitor; a window batch also waits for the union runner to
-  * catch up ([[awaitUnion]]). Results are eventually consistent across the
-  * groups within a trigger (the reference has the same property: its 13
-  * topologies share no barrier).
+  * Durability: Spark's checkpoint holds the processor's keyed state, open
+  * windows and watermark included. A replayed trigger re-runs from the
+  * previous state version and emits the same rows, and applying them again
+  * is idempotent. The result tables are snapshotted under `stateDir`: the
+  * processor emits only the rows that changed, so its state cannot rebuild
+  * them after a restart.
   */
 object TransitStreamingJob {
   import graft.engine.Decode
@@ -168,7 +152,6 @@ object TransitStreamingJob {
   private val Q5 = schema("route_id string, passenger_count bigint")
   private val RoutesLatest =
     schema("route_id string, transport_type string, capacity int, operator string, ts timestamp")
-  private val CapPerType = schema("transport_type string, cap bigint")
   private val RouteOccupancy =
     schema("route_id string, transport_type string, occupancy_pct double")
   private val Q2 = schema("transport_type string, average_passengers double")
@@ -182,8 +165,8 @@ object TransitStreamingJob {
   private val Q11 = schema("window_start timestamp, transport_type string, max_passengers bigint")
   private val Q12 = schema("window_start timestamp, transport_type string, occupancy_pct double")
   private val Q13 = schema("operator string, occupancy_pct double")
-  private val WindowCaps =
-    schema("window_start timestamp, transport_type string, cnt bigint, cap bigint")
+  private val WindowTypeCounts =
+    schema("window_start timestamp, transport_type string, cnt bigint")
 
   /** Spark's sort order, for the argmin/argmax finishers that run locally:
     * doubles with -0.0 = 0.0 and NaN greatest, strings by UTF-8 bytes. */
@@ -209,15 +192,15 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
 
   // ---- durable result tables (the changelog-topic analog) -----------------
   //
-  // With `stateDir` set, every handler's trigger commits a VERSIONED parquet
+  // With `stateDir` set, every trigger commits a VERSIONED parquet
   // snapshot of the result tables it changed (`v<seq>/results/<name>` + an
-  // atomically-moved `_committed` marker). Every handler upserts absolute
+  // atomically-moved `_committed` marker). The runner upserts absolute
   // values by key, so replaying a trigger against a restored snapshot is
   // safe. At cluster scale the same protocol targets object storage /
   // Delta; the snapshots are compact results (bounded by key cardinality),
   // never raw events.
 
-  /** Monotone commit version — every handler's trigger commits one. */
+  /** Monotone commit version — every trigger commits one. */
   private var commitSeq: Long = -1L
   /** path ("results/<n>") → version dir holding its latest data. The
     * per-version `_manifest` persists this map, so a commit only writes the
@@ -262,7 +245,7 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
   /** Commit one version: the tables changed since the last commit under
     * v<seq>, a full `_manifest` (path → owning version), then the marker
     * (atomic move), then GC of versions no manifest entry references.
-    * Called (under the job monitor) at the end of every handler's trigger.
+    * Called (under the job monitor) at the end of every trigger.
     * Crash safety: a version dir left behind by a crashed attempt at this
     * seq (marker never moved) is cleared before reuse, so stale partial
     * files can never be marker-committed. */
@@ -295,32 +278,6 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       .foreach(deleteRecursively)
   }
 
-  /** A handler's trigger: collect its rows (the trigger's one Spark job),
-    * then, after `await`, apply them and commit under the job monitor. */
-  private def applying(batch: DataFrame, await: () => Unit = () => ())(
-      apply: Seq[Row] => Unit): Unit = {
-    val rows = batch.collect().toSeq
-    await()
-    synchronized { apply(rows); commitState() }
-  }
-
-  /** The union runner once started, and the triggers it has applied. */
-  @volatile private var unionRunner: Option[StreamingQuery] = None
-  @volatile private var unionApplied = 0L
-
-  /** q12 closes a window against the capacity the union runner applied, so
-    * a window batch waits until the union runner has applied a trigger
-    * that started after this batch read its input, or has no input left.
-    * A trigger in flight may have started before: then the next one. */
-  private def awaitUnion(): Unit = unionRunner.foreach { u =>
-    def idle = { val s = u.status; !s.isDataAvailable && !s.isTriggerActive }
-    val s = u.status
-    val target = unionApplied + (if (s.isTriggerActive) 2 else if (s.isDataAvailable) 1 else 0)
-    while (unionApplied < target && !idle && u.isActive) Thread.sleep(5)
-  }
-
-  // ---- group 2: the tagged-union keyed-state runner -----------------------
-
   /** Routes and trips as one tagged stream, so a single processor sees both
     * sides of every aggregate⋈aggregate query in the same trigger. */
   private def taggedUnion: DataFrame = {
@@ -349,8 +306,6 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
 
     store.upsert("routes_latest", RoutesLatest, Seq("route_id"), of("routes_latest").map(r =>
       Row(v(r, "k1"), v(r, "k2"), v(r, "capacity"), v(r, "operator"), v(r, "ts"))))
-    store.upsert("cap_per_type", CapPerType, Seq("transport_type"),
-      of("cap_per_type").map(r => Row(v(r, "k1"), v(r, "cap"))))
     store.upsert("q1_seats_per_route", Q1, Seq("route_id"),
       of("q1").map(r => Row(v(r, "k1"), v(r, "cap"))))
     store.upsert("q5_passengers_per_route", Q5, Seq("route_id"),
@@ -392,72 +347,31 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     if (of("operator").nonEmpty)
       store.put("q13_most_occupied_operator", Q13,
         ops.maxOption(greatestFirst).map { case (o, op) => Row(op, o) }.toSeq)
+
+    // q11/q12: a window closes once, whole, so its finishers see all its
+    // types. q12's capacity is the per-type fold when the window closed; a
+    // later capacity update is not applied to it (the reference's closed
+    // windows never re-emit either)
+    val closed = of("window").groupBy(_.getAs[java.sql.Timestamp]("ts")).toSeq
+    store.upsert("window_type_counts", WindowTypeCounts, Seq("window_start", "transport_type"),
+      of("window").map(r => Row(v(r, "ts"), v(r, "k1"), v(r, "cnt"))))
+    // q11: per-window argmax by count (tiebreak smallest type)
+    store.upsert("q11_window_top_type", Q11, Seq("window_start"), closed.map { case (w, rs) =>
+      val m = rs.maxBy(r => (r.getAs[Long]("cnt"), r.getAs[String]("k1")))(mostFirst)
+      Row(w, v(m, "k1"), v(m, "cnt"))
+    })
+    // q12: per-window least-occupied type (intended min — SURVEY §2.1 quirk b)
+    store.upsert("q12_window_least_occupied_type", Q12, Seq("window_start"), closed.map {
+      case (w, rs) =>
+        val m = rs.minBy(r => (r.getAs[Double]("occupancy_pct"), r.getAs[String]("k1")))(
+          leastFirst)
+        Row(w, v(m, "k1"), v(m, "occupancy_pct"))
+    })
   }
 
-  // ---- group 1: watermarked windowed counts (q11/q12) ---------------------
-
-  /** Append-mode finalized (window, type) counts: each row arrives exactly
-    * once, when the 0-second watermark passes the window end.
-    *
-    * Deliberately NO predicates in the streaming plan: a filter on the
-    * grouping key (even placed after the aggregate) is pushed below the
-    * `EventTimeWatermark` node by predicate pushdown / constraint
-    * propagation, so null-type records would stop advancing the watermark —
-    * but stream time must advance on *every* record, as it does for the
-    * reference (Kafka stream time is per-record, key or no key). Null-type
-    * groups are dropped batch-side in [[processWindowBatch]]; null-ts rows
-    * land in a null window that never closes, i.e. are dropped by append
-    * mode itself. */
-  private def windowedCounts: DataFrame =
-    trips.withWatermark("ts", "0 seconds")
-      .groupBy(window(col("ts"), "1 hour"), col("transport_type"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("window_start"), col("transport_type"), col("cnt"))
-
-  private def processWindowBatch(batch: DataFrame, batchId: Long): Unit = {
-    val b = batch.filter(col("transport_type").isNotNull && col("window_start").isNotNull)
-    applying(b, () => awaitUnion()) { rows =>
-      store.upsert("window_type_counts", b.schema, Seq("window_start", "transport_type"), rows)
-      // append mode emits a window once, with all its types: the finishers
-      // see whole windows
-
-      // q11: per-window argmax by count (tiebreak smallest type)
-      store.upsert("q11_window_top_type", Q11, Seq("window_start"),
-        rows.groupBy(_.getTimestamp(0)).toSeq.map { case (w, rs) =>
-          val m = rs.maxBy(r => (r.getLong(2), r.getString(1)))(mostFirst)
-          Row(w, m.getString(1), m.getLong(2))
-        })
-
-      // q12: per-window least-occupied type (intended min — SURVEY §2.1
-      // quirk b). Cap side is the maintained per-type fold; a cap update
-      // after a window closed is not retroactively applied (same staleness
-      // the reference has: closed windows never re-emit). The occupancy
-      // projection over local rows runs locally, with no Spark job
-      val cap = store.rows("cap_per_type").map(r => r.getString(0) -> r.get(1)).toMap
-      val occ = spark.createDataFrame(
-          rows.map(r => Row(r.get(0), r.get(1), r.get(2), cap.getOrElse(r.getString(1), null)))
-            .asJava, WindowCaps)
-        .select(col("window_start"), col("transport_type"),
-          TransitQueries.occupancyPct(col("cnt"), col("cap")).as("occupancy_pct"))
-        .collect().toSeq
-      store.upsert("q12_window_least_occupied_type", Q12, Seq("window_start"),
-        occ.groupBy(_.getTimestamp(0)).toSeq.map { case (w, rs) =>
-          val m = rs.minBy(r => (r.getDouble(2), r.getString(1)))(leastFirst)
-          Row(w, m.getString(1), m.getDouble(2))
-        })
-    }
-  }
-
-  // -------------------------------------------------------------------------
-
-  /** Start the two streaming queries, `windowed_counts` and
-    * `union_runner`; caller owns awaiting/stopping them. */
+  /** Start the job's one streaming query, `union_runner`; caller owns
+    * awaiting/stopping it. */
   def startAll(checkpointRoot: String): Seq[StreamingQuery] = {
-    val windowed = windowedCounts.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/windowed")
-      .queryName("windowed_counts")
-      .foreachBatch(processWindowBatch _)
-      .start()
     // observe() is the reference's peek()/debug-tap analog (SURVEY §2.2):
     // per-trigger input metrics surfaced through StreamingQueryProgress
     // instead of side-effect printlns
@@ -475,11 +389,14 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
       changed.writeStream.outputMode("append")
         .option("checkpointLocation", s"$checkpointRoot/union")
         .queryName("union_runner")
-        .foreachBatch((b: DataFrame, _: Long) =>
-          applying(projected(b)) { rows => applyChanged(rows); unionApplied += 1 })
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          // the trigger's one Spark job; its rows are applied and committed
+          // under the job monitor
+          val rows = projected(b).collect().toSeq
+          synchronized { applyChanged(rows); commitState() }
+        }
         .start()
     }
-    unionRunner = Some(union)
-    Seq(windowed, union)
+    Seq(union)
   }
 }

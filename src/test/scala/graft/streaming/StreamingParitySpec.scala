@@ -18,11 +18,9 @@ import graft.operators.{TransitQueries, Upsert}
 class StreamingParitySpec extends SparkSpec {
 
   // far-future sentinels: the first advances the 0s watermark past every
-  // real window; the second is the data batch in which the engine emits the
-  // now-closed windows (watermark updates at batch end, append-mode emission
-  // happens on the next batch). Null type keeps them out of the windowed
-  // counts; they still count toward q9 (batch side sees the same rows, so
-  // parity holds).
+  // real window, which all close in its trigger; the second closes nothing
+  // more. Null type keeps them out of the windowed counts; they still count
+  // toward q9 (batch side sees the same rows, so parity holds).
   private val sentinels = Seq(
     Trip("t_sentinel1", "r1", "z", "z", null, "P1", ts("2024-01-02 09:00:00")),
     Trip("t_sentinel2", "r1", "z", "z", null, "P1", ts("2024-01-03 09:00:00")))
@@ -35,12 +33,7 @@ class StreamingParitySpec extends SparkSpec {
     val job = new TransitStreamingJob(spark, routesIn.toDF(), tripsIn.toDF())
     val ckpt = Files.createTempDirectory("graft-stream-").toString
     val queries = job.startAll(ckpt)
-
-    def processAll(): Unit = {
-      // union runner first so q12's capacity state is fresh when windows close
-      queries.find(_.name == "union_runner").foreach(_.processAllAvailable())
-      queries.filter(_.name != "union_runner").foreach(_.processAllAvailable())
-    }
+    def processAll(): Unit = queries.foreach(_.processAllAvailable())
 
     // chunk 1: first routes + trips; chunk 2: remaining routes + more trips;
     // chunk 3: the rest + sentinel (route re-emission upserts are covered by

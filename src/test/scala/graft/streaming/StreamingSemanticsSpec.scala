@@ -25,10 +25,8 @@ class StreamingSemanticsSpec extends SparkSpec {
     (routesIn, tripsIn, job, queries)
   }
 
-  private def processAll(queries: Seq[StreamingQuery]): Unit = {
-    queries.find(_.name == "union_runner").foreach(_.processAllAvailable())
-    queries.filter(_.name != "union_runner").foreach(_.processAllAvailable())
-  }
+  private def processAll(queries: Seq[StreamingQuery]): Unit =
+    queries.foreach(_.processAllAvailable())
 
   private def trip(id: String, t: String, typ: String = "Bus"): Trip =
     Trip(id, "r1", "a", "b", typ, "P1", ts(t))

@@ -8,6 +8,7 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
 import graft.engine.Encode
@@ -17,11 +18,12 @@ import graft.sources.StreamAdapters.TopicRef
 
 /** The union runner's per-trigger cost is bounded by the trigger, not by
   * the history: after a warm-up, a 3-row trigger runs the same number of
-  * Spark jobs when the state holds ten times more keys, and at most 5.
-  * File topics feed the job, so each query reads its own offsets. The
+  * Spark jobs when the state holds ten times more keys, and at most 5; a
+  * trigger that closes a window runs one. File topics feed the job. The
   * union runner's state settings do not leak into the session. A trigger
-  * over many new topic files lists them on the driver, with no Spark job,
-  * and the job runs two queries. */
+  * over many new topic files lists them on the driver, with no Spark job.
+  * The job runs one query, whose state keeps one partition on a session
+  * sized with Spark's default 200 shuffle partitions. */
 class UnionRunnerCostSpec extends SparkSpec {
 
   /** Spark jobs per (streaming query id, batch id), and a marker job that
@@ -73,10 +75,7 @@ class UnionRunnerCostSpec extends SparkSpec {
     val sessionConf = confKeys.map(spark.conf.getOption)
     val queries = job.startAll(s"$root/ckpt")
     val union = queries.find(_.name == "union_runner").get
-    def processAll(): Unit = {
-      union.processAllAvailable()
-      queries.filter(_ ne union).foreach(_.processAllAvailable())
-    }
+    def processAll(): Unit = queries.foreach(_.processAllAvailable())
     val t0 = Timestamp.valueOf("2024-01-01 09:00:00").getTime
     def ts(s: Int) = new Timestamp(t0 + s * 1000L)
     def routes(from: Int, n: Int) = (from until from + n).map(i =>
@@ -113,18 +112,24 @@ class UnionRunnerCostSpec extends SparkSpec {
       processAll()
       threeRowTrigger(4000, 200)
       val large = threeRowTrigger(5000, 200)
+      // trips at 12:00 close the window [10:00, 11:00) in the same trigger
+      val windowsBefore = job.store.rows("window_type_counts").size
+      val closing = threeRowTrigger(3 * 3600, 200)
 
-      info(s"jobs of a 3-row trigger: $small with 20 routes, $large with 200")
+      info(s"jobs of a 3-row trigger: $small with 20 routes, $large with 200, " +
+        s"$closing when it closes a window")
       small should be >= 1
       large shouldBe small
       large should be <= 5
+      job.store.rows("window_type_counts").size should be > windowsBefore
+      closing shouldBe 1
     } finally {
       queries.foreach(_.stop())
       spark.sparkContext.removeSparkListener(counter)
     }
   }
 
-  test("a trigger over 48 new topic files runs no file-listing job; the job runs two queries") {
+  test("a trigger over 48 new topic files runs no file-listing job; the job runs one query") {
     val root = Files.createTempDirectory("graft-listing-").toString
     val Seq(routesT, tripsT) = Seq("Routes_topic", "Trips_topic")
       .map(t => TopicRef(t, fallbackDir = Some(root)))
@@ -147,10 +152,9 @@ class UnionRunnerCostSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(counter)
     val queries = job.startAll(s"$root/ckpt")
     try {
-      queries.map(_.name).sorted shouldBe Seq("union_runner", "windowed_counts")
-      val union = queries.find(_.name == "union_runner").get
+      queries.map(_.name) shouldBe Seq("union_runner")
+      val union = queries.head
       union.processAllAvailable()
-      queries.foreach(_.processAllAvailable())
       union.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows) shouldBe Seq(490L)
       drain(counter)
       val seen = log.jobs.asScala.toSeq
@@ -163,5 +167,33 @@ class UnionRunnerCostSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(log)
       spark.sparkContext.removeSparkListener(counter)
     }
+  }
+
+  test("on a session with 200 shuffle partitions the job runs one query with one state partition") {
+    val sp = spark; import sp.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = sp.sqlContext
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.getOption(key)
+    val routesIn = MemoryStream[Route]
+    val tripsIn = MemoryStream[Trip]
+    val job = new TransitStreamingJob(spark, routesIn.toDF(), tripsIn.toDF())
+    // the deployed session's width (`MainApp.main` keeps Spark's default)
+    spark.conf.set(key, "200")
+    val queries = try job.startAll(Files.createTempDirectory("graft-width-").toString)
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try {
+      val t0 = Timestamp.valueOf("2024-01-01 10:00:00").getTime
+      routesIn.addData(Route("r1", "a", "b", "Bus", 40, "Op", new Timestamp(t0)))
+      // the second trip closes the first one's window
+      tripsIn.addData(Seq(0L, 2L).map(h =>
+        Trip(s"t$h", "r1", "a", "b", "Bus", "P", new Timestamp(t0 + h * 3600 * 1000))): _*)
+      queries.foreach(_.processAllAvailable())
+      val widths = queries.map(q => q.name -> q.recentProgress.toSeq
+        .flatMap(_.stateOperators).map(_.numShufflePartitions))
+      info(s"state partitions per query: $widths")
+      widths.foreach { case (_, ws) => ws should not be empty; ws.toSet shouldBe Set(1L) }
+      queries.map(_.name) shouldBe Seq("union_runner")
+      job.store.rows("q11_window_top_type") should have size 1
+    } finally queries.foreach(_.stop())
   }
 }
