@@ -63,8 +63,9 @@ object MainApp {
   def topicRef(conf: Conf)(topic: String): TopicRef =
     TopicRef(topic, bootstrap = conf.bootstrap, fallbackDir = conf.topicsDir)
 
-  /** Wire the whole app: create the input topics (idempotent, as the
-    * reference runner does at startup), subscribe → 13 queries → one
+  /** Wire the whole app: create the input and the 13 result topics
+    * (idempotent, as the reference runner does at startup, and once, not
+    * per publish), subscribe → 13 queries → one
     * periodic-publish step that writes only the tables changed since the
     * last publish.
     * Returns the job, its queries, and the publish step (testable without
@@ -76,14 +77,14 @@ object MainApp {
         "would resume committed offsets over empty counters (wrong results); " +
         "pass --state, or remove the checkpoint to reprocess from scratch")
     val ref = topicRef(conf) _
-    Seq("Routes_topic", "Trips_topic")
+    (Seq("Routes_topic", "Trips_topic") ++ ResultPublisher.egressTopics)
       .foreach(t => StreamAdapters.createTopicIfNotExists(ref(t)))
     val job = TransitStreamingJob.fromTopics(
       spark, ref("Routes_topic"), ref("Trips_topic"), conf.stateDir)
     val queries = job.startAll(conf.checkpoint)
     // serialised: the periodic publisher and the final flush may overlap,
-    // and two concurrent publishes would append the same generation twice
-    // into topic directories that share one `_temporary` commit dir
+    // and two publishes that both read `sent` before either stored its
+    // result would each append the same generation of a table
     val lock = new Object
     var sent = Map.empty[String, Long]
     val publish = () => lock.synchronized {
@@ -104,7 +105,7 @@ object MainApp {
     graft.engine.Tuning.ensureWideStart(spark)
     val (_, queries, publish) = wire(spark, conf)
     // woken by a latch, not Thread.interrupt: an interrupt landing inside
-    // a publish would abort its Spark write halfway
+    // a publish would abort its topic writes halfway
     val stop = new CountDownLatch(1)
     val publisher = new Thread(() => {
       while (!stop.await(conf.publishEverySec, TimeUnit.SECONDS) &&

@@ -1,13 +1,17 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.io.BufferedOutputStream
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
 
 import scala.util.Try
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Topic source/sink adapter — the reference's Kafka ingress/egress
   * re-expressed as a transport-agnostic layer (SURVEY.md §7: "design the
@@ -20,7 +24,10 @@ import org.apache.spark.sql.types._
   *     [[readStreamRaw]] + [[graft.engine.Decode]];
   *   - sink `.to(topic, Produced.with(...))` (every query's tail) →
   *     [[writeStreamRaw]]/[[writeBatchRaw]] over
-  *     [[graft.engine.Envelope.wrap]] output;
+  *     [[graft.engine.Envelope.wrap]] output; over file topics
+  *     [[writeBatchRaw]] writes a frame that is already on the driver (the
+  *     published result tables) from the driver, one part file per call
+  *     and no Spark job;
   *   - DDL `createTopicIfNotExists(topic, 3, 1)`
   *     (`utils/KafkaTopicUtils.java:25-38`) → [[createTopicIfNotExists]].
   *
@@ -113,11 +120,47 @@ object StreamAdapters {
   }
 
   /** Produce a batch (key, value[, ts]) frame to a topic (append, like a
-    * producer). */
+    * producer).
+    *
+    * Over file topics, a frame that is already on the driver (its
+    * optimized plan is a local relation, as for a result table read from
+    * the driver or a frame of local rows) is written by the driver as one
+    * part file, with no Spark job. Any other frame goes through Spark's
+    * JSON writer. */
   def writeBatchRaw(df: DataFrame, ref: TopicRef): Unit =
     if (kafkaConnectorPresent)
       df.write.format("kafka").options(kafkaSinkOptions(ref)).save()
-    else df.write.mode("append").json(dirOf(ref))
+    else localJsonLines(df) match {
+      case Some(lines) => writeLocalPart(Paths.get(dirOf(ref)), lines)
+      case None => df.write.mode("append").json(dirOf(ref))
+    }
+
+  /** The frame's rows as JSON lines, when Catalyst folds them on the
+    * driver. `to_json` of a struct of every column runs the generator and
+    * options Spark's JSON writer runs for each row, so the lines are the
+    * ones that writer would write. */
+  private def localJsonLines(df: DataFrame): Option[Seq[UTF8String]] =
+    df.select(to_json(struct(col("*")))).queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l.data.map(_.getUTF8String(0)))
+      case _ => None
+    }
+
+  /** Write `lines` as one new part file of `dir`: first to a file whose
+    * name starts with `.` (which file listings skip), then renamed
+    * atomically to its `part-` name, so a reader sees all of it or none. */
+  private def writeLocalPart(dir: Path, lines: Seq[UTF8String]): Unit = {
+    Files.createDirectories(dir)
+    val name = s"part-00000-${UUID.randomUUID()}-c000.json"
+    val tmp = dir.resolve(s".$name.tmp")
+    try {
+      val out = new BufferedOutputStream(Files.newOutputStream(tmp))
+      try lines.foreach { l => l.writeTo(out); out.write('\n') }
+      finally out.close()
+      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => Try(Files.deleteIfExists(tmp)); throw e
+    }
+  }
 
   /** Idempotent topic creation (`utils/KafkaTopicUtils.java:25-38`:
     * 3 partitions, RF 1). Kafka branch: AdminClient reflectively (the class

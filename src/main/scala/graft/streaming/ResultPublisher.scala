@@ -82,17 +82,23 @@ object ResultPublisher {
     Envelope.wrap(result.select((e.key.as("_key") +: e.payload): _*), "_key")
   }
 
-  /** Publish every maintained result table to its topic (one batch append
-    * per table — invoke per trigger, or once after a batch run). Topics are
+  /** The 13 egress topic names. */
+  val egressTopics: Seq[String] = egress.values.map(_.topic).toSeq.sorted
+
+  /** Create every egress topic (idempotent), then publish every maintained
+    * result table to its topic — once after a batch run, say. Topics are
     * addressed under `topics`'s transport (Kafka or file fallback). */
   def publishAll(store: TableStore, topics: String => TopicRef): Unit = {
+    egressTopics.foreach(t => StreamAdapters.createTopicIfNotExists(topics(t)))
     publishChanged(store, topics, Map.empty); ()
   }
 
   /** Publish the tables whose version moved since `sent` (table → version
-    * last published), each as a whole table on its topic, writing the
-    * topics concurrently on one thread per core. Returns the versions now
-    * published. The caller serialises calls. */
+    * last published), each as a whole table appended to its topic, writing
+    * the topics concurrently on one thread per core. Over file topics each
+    * table is one part file written from the driver, with no Spark job
+    * ([[StreamAdapters.writeBatchRaw]]). The topics must exist. Returns
+    * the versions now published. The caller serialises calls. */
   def publishChanged(store: TableStore, topics: String => TopicRef,
                      sent: Map[String, Long]): Map[String, Long] = {
     val due = egress.keys.toSeq.sorted.flatMap { name =>
@@ -108,9 +114,7 @@ object ResultPublisher {
       val writes = due.map { case (name, _, df) =>
         pool.submit(new Runnable {
           def run(): Unit = {
-            val ref = topics(egress(name).topic)
-            StreamAdapters.createTopicIfNotExists(ref)
-            StreamAdapters.writeBatchRaw(toWire(name, df), ref)
+            StreamAdapters.writeBatchRaw(toWire(name, df), topics(egress(name).topic))
           }
         })
       }

@@ -10,6 +10,7 @@ import scala.concurrent.duration._
 import graft.TransitFixture
 import graft.engine.Encode
 import graft.sources.StreamAdapters
+import graft.streaming.ResultPublisher
 
 /** The runner's wiring: arg parsing and one subscribe→run→publish cycle
   * over the file transport. */
@@ -71,5 +72,18 @@ class MainAppSpec extends SparkSpec {
         .count() shouldBe 1
     } finally queries.foreach(_.stop())
     job.store.names should contain("q13_most_occupied_operator")
+  }
+
+  test("wire creates the input and the 13 result topics before any publish") {
+    val root = Files.createTempDirectory("graft-main-topics-").toString
+    val (_, queries, _) = MainApp.wire(spark,
+      MainApp.Conf(topicsDir = Some(root), checkpoint = s"$root/ckpt"))
+    try {
+      val dirs = new java.io.File(root).listFiles().filter(_.isDirectory).map(_.getName).toSet
+      dirs.filter(_.startsWith("projeto3_")) shouldBe
+        ResultPublisher.egress.values.map(_.topic).toSet
+      dirs.count(_.startsWith("projeto3_")) shouldBe 13
+      dirs should contain allOf ("Routes_topic", "Trips_topic")
+    } finally queries.foreach(_.stop())
   }
 }

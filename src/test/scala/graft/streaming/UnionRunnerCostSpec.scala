@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -10,7 +11,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSpec
+import graft.{MainApp, SparkSpec, TransitFixture}
 import graft.engine.Encode
 import graft.engine.Schemas.{Route, Trip}
 import graft.sources.StreamAdapters
@@ -23,18 +24,21 @@ import graft.sources.StreamAdapters.TopicRef
   * union runner's state settings do not leak into the session. A trigger
   * over many new topic files lists them on the driver, with no Spark job.
   * The job runs one query, whose state keeps one partition on a session
-  * sized with Spark's default 200 shuffle partitions. */
+  * sized with Spark's default 200 shuffle partitions. Publishing the
+  * result tables to file topics runs no Spark job. */
 class UnionRunnerCostSpec extends SparkSpec {
 
-  /** Spark jobs per (streaming query id, batch id), and a marker job that
-    * tells when the listener bus has delivered every earlier event. */
+  /** Spark jobs per (streaming query id, batch id) and in all, and a
+    * marker job that tells when the listener bus has delivered every
+    * earlier event. */
   private final class JobCounter extends SparkListener {
     val jobs = TrieMap.empty[(String, String), Int]
+    val all = new AtomicInteger
     @volatile var marker = new CountDownLatch(1)
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       val p = Option(e.properties)
       def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
-      if (prop(JobCounter.MarkerKey).nonEmpty) marker.countDown()
+      if (prop(JobCounter.MarkerKey).nonEmpty) marker.countDown() else all.incrementAndGet()
       for (q <- prop("sql.streaming.queryId"); b <- prop("streaming.sql.batchId"))
         jobs.updateWith((q, b))(n => Some(n.getOrElse(0) + 1))
     }
@@ -195,5 +199,50 @@ class UnionRunnerCostSpec extends SparkSpec {
       queries.map(_.name) shouldBe Seq("union_runner")
       job.store.rows("q11_window_top_type") should have size 1
     } finally queries.foreach(_.stop())
+  }
+
+  test("publishing the result tables to file topics runs no Spark job") {
+    val root = Files.createTempDirectory("graft-publish-").toString
+    def refIn(dir: String)(t: String) = TopicRef(t, fallbackDir = Some(s"$root/$dir"))
+    def produceFixture(ref: String => TopicRef): Unit = {
+      StreamAdapters.writeBatchRaw(Encode.routesRaw(routesDf(TransitFixture.routes)), ref("Routes_topic"))
+      StreamAdapters.writeBatchRaw(Encode.tripsRaw(tripsDf(TransitFixture.trips)), ref("Trips_topic"))
+    }
+    def partFiles(ref: String => TopicRef, t: String) =
+      new java.io.File(ref(t).fallbackDir.get, t).list().count(_.startsWith("part-"))
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    /** Spark jobs `f` runs. */
+    def jobsOf(f: => Unit): Int = {
+      drain(counter)
+      val before = counter.all.get
+      f
+      drain(counter)
+      counter.all.get - before
+    }
+    val topics = ResultPublisher.egress.values.map(_.topic).toSeq
+    try {
+      val ref = refIn("job") _
+      produceFixture(ref)
+      val job = TransitStreamingJob.fromTopics(spark, ref("Routes_topic"), ref("Trips_topic"))
+      val queries = job.startAll(s"$root/job-ckpt")
+      try queries.foreach(_.processAllAvailable()) finally queries.foreach(_.stop())
+      val publishAll = jobsOf(ResultPublisher.publishAll(job.store, ref))
+      val publishAllParts = topics.map(partFiles(ref, _))
+
+      val conf = MainApp.Conf(topicsDir = Some(s"$root/app"), checkpoint = s"$root/app-ckpt")
+      val appRef = MainApp.topicRef(conf) _
+      produceFixture(appRef)
+      val (_, appQueries, publish) = MainApp.wire(spark, conf)
+      try appQueries.foreach(_.processAllAvailable()) finally appQueries.foreach(_.stop())
+      val wired = jobsOf(publish())
+
+      info(s"Spark jobs: $publishAll in publishAll, $wired in MainApp's publish")
+      publishAll shouldBe 0
+      wired shouldBe 0
+      // each topic got its table as one part file
+      publishAllParts shouldBe Seq.fill(13)(1)
+      topics.map(partFiles(appRef, _)) shouldBe Seq.fill(13)(1)
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 }
