@@ -26,6 +26,8 @@ import graft.streaming.{ResultPublisher, TransitStreamingJob}
   * sbt "runMain graft.MainApp --topics /data/topics \
   *      --checkpoint /data/ckpt --state /data/state --publish-every 10"
   * }}}
+  * Under a plain JVM the session is `local` on every core; under
+  * spark-submit it keeps the launcher's master ([[graft.engine.Tuning]]).
   * `--state` enables durable restart-safe state; restarting over an
   * existing checkpoint WITHOUT it is refused (sources would resume their
   * committed offsets while every counter restarts empty — silently wrong
@@ -95,14 +97,7 @@ object MainApp {
 
   def main(args: Array[String]): Unit = {
     val conf = parse(args)
-    val spark = SparkSession.builder()
-      .appName("graft-transit") // master comes from spark-submit / default
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // wide-start AQE sizing unless the deployment set one (engine.Tuning)
-    graft.engine.Tuning.ensureWideStart(spark)
+    val spark = graft.engine.Tuning.session("graft-transit")
     val (_, queries, publish) = wire(spark, conf)
     // woken by a latch, not Thread.interrupt: an interrupt landing inside
     // a publish would abort its topic writes halfway

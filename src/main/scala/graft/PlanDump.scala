@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture utility for the optimization rounds: writes
   * `.explain("formatted")` for named queries to `<outDir>/<name>_<tag>.txt`
   * so plan claims in OPTIMIZATION_r*.md are checkable against committed
-  * files. Mirrors Bench's session configuration (same Tuning defaults,
-  * same extensions) so the captured plan is the one the bench runs.
+  * files.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> [query1,query2,...]
   * (no query list = all registered queries).
@@ -16,21 +13,7 @@ object PlanDump {
     val outDir = args.headOption.getOrElse("plans/r17")
     val tag = if (args.length > 1) args(1) else "before"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "200")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(graft.engine.Staging.PolicyKey,
-        sys.env.getOrElse("SPARK_GRAFT_STAGING", graft.engine.Staging.LocalCheckpoint))
-      .config(graft.engine.Artifacts.DirKey,
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS_DIR",
-          graft.engine.Artifacts.ephemeralRoot()))
-      .config("spark.ui.enabled", "false")
-    graft.engine.Tuning.applyShuffleDefaults(builder, cpus.toInt)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Tuning.session("graft-plandump")
 
     val names: Seq[String] =
       if (args.length > 2) args(2).split(",").toSeq

@@ -280,31 +280,13 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    // box weather BEFORE the bench's own 32-thread load pollutes the
+    // box weather BEFORE the bench's own load pollutes the
     // 1-min average — the quietness evidence (VERDICT r16 #4); the
     // mid-run `loadavg` below stays as the at-measure-time sample
     val loadAvgStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-streambench")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // fresh artifacts root per run unless explicitly shared (see Bench)
-      .config(graft.engine.Artifacts.DirKey,
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS_DIR",
-          graft.engine.Artifacts.ephemeralRoot()))
-      .config("spark.ui.enabled", "false")
-    // engine shuffle-sizing defaults (engine.Tuning): streaming plans keep
-    // the static cores-wide state-store layout (AQE does not re-plan
-    // micro-batch shuffles); the wide start applies to the batch fixture
-    // prep only.
-    val spark =
-      graft.engine.Tuning.applyShuffleDefaults(builder, cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Tuning.session("graft-streambench")
 
     val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,44 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — local subset runs
     // (the driver always passes exactly two args → full suite)
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      // master override: tools/verify_lc.sh proves the suite under
-      // local-cluster[2,4,…] — separate executor JVMs, real closure
-      // serialization / netty shuffle / broadcast transfer
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "200") // see Bench.scala
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // staging policy override (engine.Staging), so the whole oracle
-      // suite can be proven green under reliable-checkpoint/persist too
-      .config(graft.engine.Staging.PolicyKey,
-        sys.env.getOrElse("SPARK_GRAFT_STAGING", graft.engine.Staging.LocalCheckpoint))
-      // artifacts root: fresh per run (cold, measures HEAD) unless the
-      // caller opts into a shared durable root — the cross-session warm
-      // path (engine.Artifacts.durable, VERDICT r16 #1)
-      .config(graft.engine.Artifacts.DirKey,
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACTS_DIR",
-          graft.engine.Artifacts.ephemeralRoot()))
-      .config("spark.ui.enabled", "false")
-    // engine shuffle-sizing defaults (engine.Tuning): static = cores,
-    // AQE initial width = 8× cores. Before SPARK_GRAFT_CONF → overridable.
-    graft.engine.Tuning.applyShuffleDefaults(builder, cpus.toInt)
-    // extra confs for alternative topologies (';'-separated k=v pairs:
-    // spark.jars / executor memory / executor JVM opts for verify_lc)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      if (kv.contains("=")) {
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      } else if (kv.trim.nonEmpty)
-        // a typo'd LC invocation must not silently run with default
-        // memory — the topology-parity evidence depends on these confs
-        System.err.println(
-          s"[verify] WARNING: ignoring malformed SPARK_GRAFT_CONF token " +
-            s"'$kv' (expected key=value)")
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Tuning.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

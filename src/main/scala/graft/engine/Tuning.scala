@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
 /** Engine-default shuffle sizing (VERDICT r15 #1): shuffles start WIDE,
@@ -52,27 +53,96 @@ object Tuning {
   /** The engine-default initial shuffle width for a core count. */
   def initialPartitions(cores: Int): Int = math.max(64, cores * InitialFactor)
 
-  /** Apply the engine's shuffle-sizing defaults to a session builder:
-    * static `spark.sql.shuffle.partitions` = cores (the non-AQE floor and
-    * the width of non-coalescible exchanges) and the wide AQE starting
-    * width above. Called BEFORE user-supplied conf overrides
-    * (SPARK_GRAFT_CONF in the entry points), so an explicit
+  /** The engine's shuffle-sizing defaults for a core count: static
+    * `spark.sql.shuffle.partitions` = cores (the non-AQE floor and the
+    * width of non-coalescible exchanges) and the wide AQE starting width
+    * above. Set BEFORE user-supplied conf overrides (`SPARK_GRAFT_CONF` in
+    * [[session]]), so an explicit
     * `spark.sql.adaptive.coalescePartitions.initialPartitionNum` or
-    * `spark.sql.shuffle.partitions` setting wins. */
+    * `spark.sql.shuffle.partitions` setting wins.
+    * `adaptive.coalescePartitions.parallelismFirst` stays at its default
+    * (true): the dedup pipelines are CPU-dense per row, so coalescing their
+    * small shuffles to few tasks serializes real work (20.6 s → 31.3 s on
+    * the fuzzy-dedup subset at sf0.1). */
+  def shuffleDefaults(cores: Int): Map[String, String] =
+    Map(StaticNumKey -> cores.toString,
+      InitialNumKey -> initialPartitions(cores).toString)
+
+  /** [[shuffleDefaults]] applied to a session builder. */
   def applyShuffleDefaults(builder: SparkSession.Builder,
                            cores: Int): SparkSession.Builder =
-    builder
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitions(cores))
+    builder.config(shuffleDefaults(cores))
 
   private val InitialNumKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
   private val StaticNumKey = "spark.sql.shuffle.partitions"
 
-  /** Runtime variant for sessions the engine did not build (the
-    * spark-submit production runner): set the wide starting width only
+  /** The one session every entry point runs on. The master is
+    * `SPARK_GRAFT_MASTER` if set, else the launcher's `spark.master`
+    * (spark-submit), else `local[cores]`; see [[resolve]] for the confs.
+    * When the launcher chose the master, the wide start is applied after
+    * start ([[ensureWideStart]]), so the deployment's own sizing wins. */
+  def session(appName: String): SparkSession = {
+    val (master, confs) = resolve(sys.env, new SparkConf().getAll.toMap,
+      Runtime.getRuntime.availableProcessors, Artifacts.ephemeralRoot())
+    val builder = SparkSession.builder().appName(appName).config(confs)
+    master.foreach(builder.master)
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    if (master.isEmpty) ensureWideStart(spark)
+    spark
+  }
+
+  /** The master (None: the launcher's) and the confs of [[session]], from
+    * the environment and the launcher's conf, without starting anything.
+    *   - Every session: UTC, the graft extensions, and `codegen.maxFields`
+    *     200, which keeps the 128-column MinHash signature aggregate inside
+    *     whole-stage codegen.
+    *   - A master chosen here (`SPARK_GRAFT_MASTER` or `local[cores]`, cores
+    *     from `SPARK_GRAFT_CPUS`, else `processors`) also gets the shuffle
+    *     defaults, no UI, and the harness defaults for the staging policy
+    *     (local-checkpoint) and the artifacts root (a fresh one per run, so
+    *     a measurement never reopens an earlier build's artifacts).
+    *   - `SPARK_GRAFT_STAGING` and `SPARK_GRAFT_ARTIFACTS_DIR` set those two
+    *     under any master; `SPARK_GRAFT_CONF` (`k=v;k=v`) is applied last.
+    * A malformed `SPARK_GRAFT_CPUS` or `SPARK_GRAFT_CONF` token throws: a
+    * typo must not run silently on other confs than the ones asked for. */
+  private[graft] def resolve(env: Map[String, String],
+                             launcher: Map[String, String],
+                             processors: Int,
+                             freshArtifactsRoot: => String)
+      : (Option[String], Map[String, String]) = {
+    def malformed(name: String, value: String, expected: String) =
+      throw new IllegalArgumentException(s"$name: '$value' is not $expected")
+    val cores = env.get("SPARK_GRAFT_CPUS").fold(processors) { v =>
+      v.trim.toIntOption.filter(_ > 0)
+        .getOrElse(malformed("SPARK_GRAFT_CPUS", v, "a positive integer"))
+    }
+    val overrides = env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.trim.nonEmpty).map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+          case _ => malformed("SPARK_GRAFT_CONF", kv, "a key=value token")
+        }
+      }
+    val master = env.get("SPARK_GRAFT_MASTER")
+      .orElse(if (launcher.contains("spark.master")) None else Some(s"local[$cores]"))
+    val chosenHere = if (master.isEmpty) Map.empty[String, String]
+      else shuffleDefaults(cores) ++ Map("spark.ui.enabled" -> "false",
+        Staging.PolicyKey -> Staging.LocalCheckpoint,
+        Artifacts.DirKey -> freshArtifactsRoot)
+    (master, Map(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.extensions" -> "graft.GraftExtensions",
+      "spark.sql.codegen.maxFields" -> "200") ++ chosenHere ++
+      env.get("SPARK_GRAFT_STAGING").map(Staging.PolicyKey -> _) ++
+      env.get("SPARK_GRAFT_ARTIFACTS_DIR").map(Artifacts.DirKey -> _) ++
+      overrides)
+  }
+
+  /** Runtime variant for sessions whose master the launcher chose
+    * ([[session]] under spark-submit): set the wide starting width only
     * when the deployment has not chosen one — a `--conf` from
     * spark-submit, spark-defaults, or the builder always wins. A
     * deployment that explicitly pinned the STATIC width

@@ -107,9 +107,10 @@ object ResultPublisher {
       val v = store.version(name)
       store.get(name).filter(_ => !sent.get(name).contains(v)).map(df => (name, v, df))
     }
+    if (due.isEmpty) return sent
     // threads are made here, so their jobs carry the caller's local properties
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(due.size, Runtime.getRuntime.availableProcessors())))
+      math.min(due.size, Runtime.getRuntime.availableProcessors()))
     try {
       val writes = due.map { case (name, _, df) =>
         pool.submit(new Runnable {

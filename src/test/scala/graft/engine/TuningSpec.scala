@@ -71,4 +71,75 @@ class TuningSpec extends SparkSpec {
       }
     }
   }
+
+  private def resolve(env: Map[String, String],
+                      launcher: Map[String, String] = Map.empty) =
+    Tuning.resolve(env, launcher, processors = 6, freshArtifactsRoot = "/fresh")
+
+  test("session without a launcher master: local[cores] with the engine's " +
+    "sizing, cores from SPARK_GRAFT_CPUS else the processors") {
+    val (master, confs) = resolve(Map.empty)
+    master shouldBe Some("local[6]")
+    confs("spark.sql.shuffle.partitions") shouldBe "6"
+    confs(Key) shouldBe Tuning.initialPartitions(6).toString
+    confs("spark.sql.codegen.maxFields") shouldBe "200"
+    confs("spark.sql.extensions") shouldBe "graft.GraftExtensions"
+    confs(Staging.PolicyKey) shouldBe Staging.LocalCheckpoint
+    confs(Artifacts.DirKey) shouldBe "/fresh"
+    val (m8, c8) = resolve(Map("SPARK_GRAFT_CPUS" -> "8", "SPARK_GRAFT_STAGING" -> "persist"))
+    m8 shouldBe Some("local[8]")
+    c8("spark.sql.shuffle.partitions") shouldBe "8"
+    c8(Staging.PolicyKey) shouldBe "persist"
+    resolve(Map("SPARK_GRAFT_MASTER" -> "local-cluster[2,4,6144]"))._1 shouldBe
+      Some("local-cluster[2,4,6144]")
+  }
+
+  test("session under spark-submit keeps the launcher's master and sizing") {
+    val launcher = Map("spark.master" -> "yarn")
+    val (master, confs) = resolve(Map.empty, launcher)
+    master shouldBe None
+    confs.keySet should contain noneOf ("spark.sql.shuffle.partitions", Key,
+      "spark.ui.enabled", Staging.PolicyKey, Artifacts.DirKey)
+    confs("spark.sql.session.timeZone") shouldBe "UTC"
+    confs("spark.sql.codegen.maxFields") shouldBe "200"
+    resolve(Map("SPARK_GRAFT_ARTIFACTS_DIR" -> "/shared"), launcher)._2(
+      Artifacts.DirKey) shouldBe "/shared"
+    resolve(Map("SPARK_GRAFT_MASTER" -> "local[2]"), launcher)._1 shouldBe
+      Some("local[2]")
+  }
+
+  test("SPARK_GRAFT_CONF wins over the shuffle defaults") {
+    val (_, confs) = resolve(Map("SPARK_GRAFT_CPUS" -> "4", "SPARK_GRAFT_CONF" ->
+      s"spark.sql.shuffle.partitions=3; $Key=7;;spark.executor.extraJavaOptions=-Da=b -Dc=d"))
+    confs("spark.sql.shuffle.partitions") shouldBe "3"
+    confs(Key) shouldBe "7"
+    confs("spark.executor.extraJavaOptions") shouldBe "-Da=b -Dc=d"
+  }
+
+  test("a malformed SPARK_GRAFT_CONF token or SPARK_GRAFT_CPUS fails loudly") {
+    def failure(env: (String, String)) =
+      intercept[IllegalArgumentException](resolve(Map(env))).getMessage
+    val noEquals = failure("SPARK_GRAFT_CONF" -> "spark.a=1;spark.executor.memory4g")
+    noEquals should (include("SPARK_GRAFT_CONF") and include("spark.executor.memory4g"))
+    val emptyKey = failure("SPARK_GRAFT_CONF" -> " =4g")
+    emptyKey should (include("SPARK_GRAFT_CONF") and include(" =4g"))
+    Seq("0", "-2", "four", "").foreach { v =>
+      failure("SPARK_GRAFT_CPUS" -> v) should
+        (include("SPARK_GRAFT_CPUS") and include(s"'$v'"))
+    }
+  }
+
+  test("src/main builds a SparkSession in one place, engine.Tuning") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val calls = for {
+      f <- files
+      line <- java.nio.file.Files.readAllLines(f).asScala
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") &&
+        code.contains("SparkSession.builder")
+    } yield f.toString
+    calls shouldBe Seq("src/main/scala/graft/engine/Tuning.scala")
+  }
 }
