@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.StreamAdapters
 import graft.sources.StreamAdapters.TopicRef
-import graft.streaming.{ResultPublisher, TransitStreamingJob}
+import graft.streaming.{LocalCheckpointFileManager, ResultPublisher, TransitStreamingJob}
 
 /** The production runner — `MainStreamApp.java:12-44` re-expressed: one
   * Spark application subscribing to `Routes_topic`/`Trips_topic`, running
@@ -67,9 +67,10 @@ object MainApp {
 
   /** Wire the whole app: create the input and the 13 result topics
     * (idempotent, as the reference runner does at startup, and once, not
-    * per publish), subscribe → 13 queries → one
-    * periodic-publish step that writes only the tables changed since the
-    * last publish.
+    * per publish), subscribe, start the job's one query (`union_runner`,
+    * all 13 queries), and build one periodic-publish step that writes only
+    * the tables changed since the last publish. The session writes its
+    * checkpoints through [[LocalCheckpointFileManager]] from here on.
     * Returns the job, its queries, and the publish step (testable without
     * blocking). */
   def wire(spark: SparkSession, conf: Conf): (TransitStreamingJob, Seq[StreamingQuery], () => Unit) = {
@@ -81,6 +82,7 @@ object MainApp {
     val ref = topicRef(conf) _
     (Seq("Routes_topic", "Trips_topic") ++ ResultPublisher.egressTopics)
       .foreach(t => StreamAdapters.createTopicIfNotExists(ref(t)))
+    LocalCheckpointFileManager.install(spark)
     val job = TransitStreamingJob.fromTopics(
       spark, ref("Routes_topic"), ref("Trips_topic"), conf.stateDir)
     val queries = job.startAll(conf.checkpoint)

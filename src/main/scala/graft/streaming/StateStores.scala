@@ -25,7 +25,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * bytes, it does not change semantics (`RocksDbStateSpec` pins a keyed
   * face bit-equal across providers, restart included). The conf is read
   * at query START and recorded in the checkpoint, so set it before
-  * `.start()`; a restarted query keeps the provider it started with. */
+  * `.start()`; a restarted query keeps the provider it started with.
+  *
+  * The provider's changelog and snapshot files go through the session's
+  * checkpoint file manager, as the offset and commit logs do. `MainApp`
+  * installs [[LocalCheckpointFileManager]] on its session for good, not
+  * here around `start()`: the file source creates its log on the stream
+  * thread after `start()` returns. That manager fsyncs no more than
+  * Hadoop's local file system did: neither fsyncs a file on close. */
 object StateStores {
 
   /** Spark's bundled RocksDB provider (spark-sql, not an extra dep). */

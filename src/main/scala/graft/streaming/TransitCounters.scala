@@ -99,15 +99,14 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     val h = getHandle
     def map[V](name: String, enc: Encoder[V]) =
       h.getMapState(name, Encoders.STRING, enc, TTLConfig.NONE)
-    routes = map("routes", Encoders.product[RouteCounters])
-    types = map("types", Encoders.product[TypeCounters])
+    routes = map("routes", RouteEncoder)
+    types = map("types", TypeEncoder)
     passengers = map("passengers", Encoders.scalaLong)
-    operators = map("operators", Encoders.product[OperatorCounters])
-    q3 = h.getValueState("q3", Encoders.product[Champion], TTLConfig.NONE)
-    q10 = h.getValueState("q10", Encoders.product[Champion], TTLConfig.NONE)
-    totals = h.getValueState("totals", Encoders.product[Totals], TTLConfig.NONE)
-    windows = h.getMapState("windows", Encoders.scalaLong, Encoders.product[WindowCounts],
-      TTLConfig.NONE)
+    operators = map("operators", OperatorEncoder)
+    q3 = h.getValueState("q3", ChampionEncoder, TTLConfig.NONE)
+    q10 = h.getValueState("q10", ChampionEncoder, TTLConfig.NONE)
+    totals = h.getValueState("totals", TotalsEncoder, TTLConfig.NONE)
+    windows = h.getMapState("windows", Encoders.scalaLong, WindowEncoder, TTLConfig.NONE)
     watermark = h.getValueState("watermark", Encoders.scalaLong, TTLConfig.NONE)
   }
 
@@ -253,6 +252,15 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
 }
 
 object TransitCounters {
+
+  // the state encoders, derived once per JVM: `init` runs on every trigger,
+  // and `Encoders.product` runs Scala reflection each time
+  private val RouteEncoder = Encoders.product[RouteCounters]
+  private val TypeEncoder = Encoders.product[TypeCounters]
+  private val OperatorEncoder = Encoders.product[OperatorCounters]
+  private val ChampionEncoder = Encoders.product[Champion]
+  private val TotalsEncoder = Encoders.product[Totals]
+  private val WindowEncoder = Encoders.product[WindowCounts]
 
   /** One trigger's view of a map state: each key is read once, and only
     * the keys whose value changed are written back (a key back at `zero`

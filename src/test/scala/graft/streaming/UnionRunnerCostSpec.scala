@@ -24,7 +24,9 @@ import graft.sources.StreamAdapters.TopicRef
   * union runner's state settings do not leak into the session. A trigger
   * over many new topic files lists them on the driver, with no Spark job.
   * The job runs one query, whose state keeps one partition on a session
-  * sized with Spark's default 200 shuffle partitions. Publishing the
+  * sized with Spark's default 200 shuffle partitions. A trigger of the job
+  * `MainApp.wire` starts writes its offset, commit and source logs and its
+  * state changelog without Hadoop's local file system. Publishing the
   * result tables to file topics runs no Spark job. */
 class UnionRunnerCostSpec extends SparkSpec {
 
@@ -199,6 +201,29 @@ class UnionRunnerCostSpec extends SparkSpec {
       queries.map(_.name) shouldBe Seq("union_runner")
       job.store.rows("q11_window_top_type") should have size 1
     } finally queries.foreach(_.stop())
+  }
+
+  test("a trigger of the wired job writes its checkpoint logs and changelog without Hadoop's FS") {
+    val root = Files.createTempDirectory("graft-ckpt-files-").toString
+    val conf = MainApp.Conf(topicsDir = Some(root), checkpoint = s"$root/ckpt")
+    val ref = MainApp.topicRef(conf) _
+    Seq("Routes_topic", "Trips_topic").foreach(t => StreamAdapters.createTopicIfNotExists(ref(t)))
+    StreamAdapters.writeBatchRaw(Encode.routesRaw(routesDf(TransitFixture.routes)),
+      ref("Routes_topic"))
+    StreamAdapters.writeBatchRaw(Encode.tripsRaw(tripsDf(TransitFixture.trips)), ref("Trips_topic"))
+    val (job, queries, _) = MainApp.wire(spark, conf)
+    try queries.foreach(_.processAllAvailable()) finally queries.foreach(_.stop())
+    job.store.rows("q9_total_passengers") should not be empty
+    val union = s"${conf.checkpoint}/union"
+    def names(d: String) = new java.io.File(s"$union/$d").list().toSeq
+    Seq("offsets", "commits", "sources/0", "sources/1")
+      .foreach(d => withClue(d)(names(d) should contain("0")))
+    names("state/0/0").filter(_.endsWith(".changelog")) should not be empty
+    // each `.<name>.crc` marks a write through Hadoop's local file system
+    val hadoopWrites = LocalCheckpointFileManagerSpec.hadoopChecksums(union)
+    info(s"files Hadoop's local file system wrote: ${hadoopWrites.toSeq.sorted.mkString(" ")}")
+    hadoopWrites.filter(p => p.contains(".changelog") ||
+      Seq("offsets/", "commits/", "sources/").exists(p.startsWith)) shouldBe empty
   }
 
   test("publishing the result tables to file topics runs no Spark job") {
