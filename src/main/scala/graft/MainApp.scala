@@ -24,15 +24,16 @@ import graft.streaming.{LocalCheckpointFileManager, ResultPublisher, TransitStre
   * Usage:
   * {{{
   * sbt "runMain graft.MainApp --topics /data/topics \
-  *      --checkpoint /data/ckpt --state /data/state --publish-every 10"
+  *      --checkpoint /data/ckpt --publish-every 10"
   * }}}
   * Under a plain JVM the session is `local` on every core; under
   * spark-submit it keeps the launcher's master ([[graft.engine.Tuning]]).
-  * `--state` enables durable restart-safe state; restarting over an
-  * existing checkpoint WITHOUT it is refused (sources would resume their
-  * committed offsets while every counter restarts empty — silently wrong
-  * results forever). A checkpoint written by the earlier two-query job is
-  * not resumable: its open windows live in `windowed/`.
+  * The checkpoint is the only durable state: restarted over it, the job
+  * rebuilds its result tables from the processor's state, resumes the
+  * committed offsets, and its first publish sends every table. A
+  * checkpoint written by the earlier two-query job is not resumable (its
+  * open windows live in `windowed/`), nor is one written before the
+  * processor kept its closed windows (no `closed` state variable).
   */
 object MainApp {
 
@@ -40,7 +41,6 @@ object MainApp {
       topicsDir: Option[String] = None,
       bootstrap: String = "localhost:9092",
       checkpoint: String = "/tmp/graft-ckpt",
-      stateDir: Option[String] = None,
       publishEverySec: Long = 10L)
 
   def parse(args: Array[String]): Conf = {
@@ -52,7 +52,6 @@ object MainApp {
       case (c, Array("--topics", v))        => c.copy(topicsDir = Some(v))
       case (c, Array("--bootstrap", v))     => c.copy(bootstrap = v)
       case (c, Array("--checkpoint", v))    => c.copy(checkpoint = v)
-      case (c, Array("--state", v))         => c.copy(stateDir = Some(v))
       case (c, Array("--publish-every", v)) => c.copy(publishEverySec = v.toLong)
       case (_, other) =>
         throw new IllegalArgumentException(s"unknown arguments: ${other.mkString(" ")}")
@@ -69,22 +68,18 @@ object MainApp {
     * (idempotent, as the reference runner does at startup, and once, not
     * per publish), subscribe, start the job's one query (`union_runner`,
     * all 13 queries), and build one periodic-publish step that writes only
-    * the tables changed since the last publish. The session writes its
-    * checkpoints through [[LocalCheckpointFileManager]] from here on.
+    * the tables changed since the last publish: the first publish writes
+    * every table, the rebuilt ones of a restart included. The session
+    * writes its checkpoints through [[LocalCheckpointFileManager]] from
+    * here on.
     * Returns the job, its queries, and the publish step (testable without
     * blocking). */
   def wire(spark: SparkSession, conf: Conf): (TransitStreamingJob, Seq[StreamingQuery], () => Unit) = {
-    val ckptExists = new java.io.File(conf.checkpoint).exists()
-    require(conf.stateDir.nonEmpty || !ckptExists,
-      s"checkpoint ${conf.checkpoint} exists but no --state was given: sources " +
-        "would resume committed offsets over empty counters (wrong results); " +
-        "pass --state, or remove the checkpoint to reprocess from scratch")
     val ref = topicRef(conf) _
     (Seq("Routes_topic", "Trips_topic") ++ ResultPublisher.egressTopics)
       .foreach(t => StreamAdapters.createTopicIfNotExists(ref(t)))
     LocalCheckpointFileManager.install(spark)
-    val job = TransitStreamingJob.fromTopics(
-      spark, ref("Routes_topic"), ref("Trips_topic"), conf.stateDir)
+    val job = TransitStreamingJob.fromTopics(spark, ref("Routes_topic"), ref("Trips_topic"))
     val queries = job.startAll(conf.checkpoint)
     // serialised: the periodic publisher and the final flush may overlap,
     // and two publishes that both read `sent` before either stored its

@@ -4,7 +4,9 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{MapState, OutputMode, StatefulProcessor, TTLConfig,
   TimeMode, TimerValues, ValueState}
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,7 +45,8 @@ final case class Changed(table: String, k1: String, k2: String = null,
 // carried (q2's distinct routes). Per type: q10's trips, q12's capacity,
 // q2's keyed trips and routes. Per operator, over its routes' latest
 // emissions (q13): `capped` counts the non-null capacities, so a sum over
-// none is null. Per open window (q11/q12), its trips per type.
+// none is null. Per open window (q11/q12), its trips per type; per closed
+// window, its trips and capacity per type when it closed.
 final case class LatestRoute(transport_type: String, capacity: Option[Int], operator: String,
     ts: Timestamp)
 final case class TypeCap(transport_type: String, cap: Option[Long])
@@ -54,6 +57,8 @@ final case class OperatorCounters(routes: Long, trips: Long, cap: Long, capped: 
 final case class Champion(key: String, cnt: Long)
 final case class Totals(trips: Long, cap: Long)
 final case class WindowCounts(types: Map[String, Long])
+final case class WindowType(transport_type: String, cnt: Long, cap: Option[Long])
+final case class ClosedWindow(types: Seq[WindowType])
 
 /** The union runner's counters on Spark's keyed state store: the Kafka
   * Streams KTable/RocksDB analog. All state lives under one grouping key,
@@ -79,9 +84,14 @@ final case class WindowCounts(types: Map[String, Long])
   * watermark is the greatest trip `ts` seen; a typed trip is counted unless
   * its window's end is at or before the watermark held before the trigger;
   * and a window whose end the raised watermark reaches is emitted whole,
-  * once, with its types' capacities, then dropped. Lateness is judged by
-  * the window's end, not the trip's `ts`. Every open window ends after the
-  * watermark, so at most the watermark's own window stays open. */
+  * once, with its types' capacities, then moved to `closed`, which no
+  * trigger reads again. Lateness is judged by the window's end, not the
+  * trip's `ts`. Every open window ends after the watermark, so at most the
+  * watermark's own window stays open.
+  *
+  * The state rebuilds every result table: [[TransitCounters.restore]]
+  * emits, for each key the last committed batch holds, the rows a trigger
+  * emits when it sees that key for the first time. */
 final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed] {
   import TransitCounters._
 
@@ -94,6 +104,7 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
   @transient private var totals: ValueState[Totals] = _
   @transient private var windows: MapState[Long, WindowCounts] = _
   @transient private var watermark: ValueState[Long] = _
+  @transient private var closed: MapState[Long, ClosedWindow] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     val h = getHandle
@@ -108,17 +119,18 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     totals = h.getValueState("totals", TotalsEncoder, TTLConfig.NONE)
     windows = h.getMapState("windows", Encoders.scalaLong, WindowEncoder, TTLConfig.NONE)
     watermark = h.getValueState("watermark", Encoders.scalaLong, TTLConfig.NONE)
+    closed = h.getMapState("closed", Encoders.scalaLong, ClosedEncoder, TTLConfig.NONE)
   }
 
   override def handleInputRows(key: Int, rows: Iterator[TransitEvent],
                                timerValues: TimerValues): Iterator[Changed] = {
     val (rs, ts) = rows.toSeq.partition(_.kind == "route")
     val out = mutable.ArrayBuffer.empty[Changed]
-    val route = new Touched(routes, RouteCounters(None, Nil, 0L, Nil))
-    val typ = new Touched(types, TypeCounters(0L, None, 0L, 0L))
+    val route = new Touched(routes, NoRoute)
+    val typ = new Touched(types, NoType)
     val passenger = new Touched(passengers, 0L)
     val operator = new Touched(operators, OperatorCounters(0L, 0L, 0L, 0L))
-    val q2Types, countedTypes = mutable.LinkedHashSet.empty[String]
+    val countedTypes = mutable.LinkedHashSet.empty[String]
 
     rs.filter(_.transport_type != null).foreach { e =>
       val t = typ(e.transport_type)
@@ -148,7 +160,6 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
         if (ty != null) {
           typ(ty) = typ(ty).copy(q2Trips = typ(ty).q2Trips + 1,
             q2Routes = typ(ty).q2Routes + (if (newPair) 1 else 0))
-          q2Types += ty
         }
       }
       if (ty != null) { typ(ty) = typ(ty).copy(trips = typ(ty).trips + 1); countedTypes += ty }
@@ -168,22 +179,8 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
       }
     }
 
-    route.now.foreach { case (id, now) =>
-      val was = route.before(id)
-      if (now.latest != was.latest) now.latest.foreach { l =>
-        out += Changed("routes_latest", id, l.transport_type, capacity = l.capacity,
-          operator = l.operator, ts = l.ts)
-      }
-      // q1 has a row once the route emitted, q5 once it has a trip
-      if (now.caps != was.caps) out += Changed("q1", id,
-        cap = now.caps.flatMap(_.cap).reduceOption(Math.addExact(_: Long, _: Long)))
-      if (now.trips != was.trips) out += Changed("q5", id, cnt = Some(now.trips))
-      val trips = Some(now.trips).filter(_ > 0)
-      now.caps.foreach(c =>
-        out += Changed("route_occupancy", id, c.transport_type, cnt = trips, cap = c.cap))
-    }
-    q2Types.foreach(t =>
-      out += Changed("q2", t, cnt = Some(typ(t).q2Trips), routes = Some(typ(t).q2Routes)))
+    route.now.foreach { case (id, now) => out ++= routeRows(id, route.before(id), now) }
+    typ.now.foreach { case (t, now) => out ++= typeRows(t, typ.before(t), now) }
     crown(q3, "q3", passenger.now.toSeq, out)
     crown(q10, "q10", countedTypes.toSeq.map(t => t -> typ(t).trips), out)
     val was = if (totals.exists()) Some(totals.get()) else None
@@ -191,26 +188,17 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
       case Totals(n, c) => Totals(n + ts.size,
         keyed.flatMap(_.capacity).foldLeft(c)((s, x) => Math.addExact(s, x.toLong)))
     }
-    if (!was.contains(now)) {
-      totals.update(now)
-      out += Changed("totals", null, cnt = Some(now.trips), cap = Some(now.cap))
-    }
+    if (!was.contains(now)) totals.update(now)
+    out ++= totalsRows(was, Some(now))
     advanceWindows(ts, typ, out)
     Seq(route, typ, passenger).foreach(_.write())
-    if (operator.write()) {
-      val all = operators.iterator().toSeq
-      all.foreach { case (op, v) =>
-        out += Changed("operator", op, cnt = Some(v.trips),
-          cap = Some(v.cap).filter(_ => v.capped > 0))
-      }
-      if (all.isEmpty) out += Changed("operator", null)
-    }
+    if (operator.write()) out ++= operatorRows(operators.iterator().toSeq)
     out.iterator
   }
 
   /** Count the trips into their open windows, raise the watermark, then
-    * emit and drop every window it closed, with the types' capacities after
-    * this trigger's routes. */
+    * emit every window it closed, with the types' capacities after this
+    * trigger's routes, and move it from the open windows to `closed`. */
   private def advanceWindows(trips: Seq[TransitEvent], typ: Touched[TypeCounters],
                              out: mutable.ArrayBuffer[Changed]): Unit = {
     val before = if (watermark.exists()) watermark.get() else 0L
@@ -229,9 +217,9 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     if (after != before) watermark.update(after)
     open.foreach { case (start, w) =>
       if (start + HourMs <= after) {
-        w.types.foreach { case (t, n) =>
-          out += Changed("window", t, cnt = Some(n), cap = typ(t).cap, ts = new Timestamp(start))
-        }
+        val c = ClosedWindow(w.types.toSeq.map { case (t, n) => WindowType(t, n, typ(t).cap) })
+        closed.updateValue(start, c)
+        out ++= windowRows(start, c)
         if (held.contains(start)) windows.removeKey(start)
       } else if (!held.get(start).contains(w)) windows.updateValue(start, w)
     }
@@ -244,10 +232,8 @@ final class TransitCounters extends StatefulProcessor[Int, TransitEvent, Changed
     val old = if (state.exists()) Some(state.get()) else None
     val best = (old.toSeq ++ touched.map { case (k, n) => Champion(k, n) })
       .reduceOption((a, b) => if (beats(b, a)) b else a)
-    if (best != old) best.foreach { c =>
-      state.update(c)
-      out += Changed(table, c.key, cnt = Some(c.cnt))
-    }
+    if (best != old) best.foreach(state.update)
+    out ++= championRows(table, old, best)
   }
 }
 
@@ -261,6 +247,81 @@ object TransitCounters {
   private val ChampionEncoder = Encoders.product[Champion]
   private val TotalsEncoder = Encoders.product[Totals]
   private val WindowEncoder = Encoders.product[WindowCounts]
+  private val ClosedEncoder = Encoders.product[ClosedWindow]
+
+  private val NoRoute = RouteCounters(None, Nil, 0L, Nil)
+  private val NoType = TypeCounters(0L, None, 0L, 0L)
+
+  // The rows a trigger emits, from a key's value before (`was`) and after
+  // (`now`) it; a key seen for the first time was the zero value.
+
+  private def routeRows(id: String, was: RouteCounters, now: RouteCounters): Seq[Changed] = {
+    val latest = now.latest.filter(_ => now.latest != was.latest).map(l =>
+      Changed("routes_latest", id, l.transport_type, capacity = l.capacity,
+        operator = l.operator, ts = l.ts))
+    // q1 has a row once the route emitted, q5 once it has a trip
+    val q1 = Option.when(now.caps != was.caps)(Changed("q1", id,
+      cap = now.caps.flatMap(_.cap).reduceOption(Math.addExact(_: Long, _: Long))))
+    val q5 = Option.when(now.trips != was.trips)(Changed("q5", id, cnt = Some(now.trips)))
+    val trips = Some(now.trips).filter(_ > 0)
+    latest.toSeq ++ q1 ++ q5 ++ now.caps.map(c =>
+      Changed("route_occupancy", id, c.transport_type, cnt = trips, cap = c.cap))
+  }
+
+  /** q2's row, once a keyed trip carried the type. */
+  private def typeRows(t: String, was: TypeCounters, now: TypeCounters): Seq[Changed] =
+    Option.when(now.q2Trips != was.q2Trips)(
+      Changed("q2", t, cnt = Some(now.q2Trips), routes = Some(now.q2Routes))).toSeq
+
+  private def championRows(table: String, was: Option[Champion],
+                           now: Option[Champion]): Seq[Changed] =
+    now.filter(_ => now != was).map(c => Changed(table, c.key, cnt = Some(c.cnt))).toSeq
+
+  private def totalsRows(was: Option[Totals], now: Option[Totals]): Seq[Changed] =
+    now.filter(_ => now != was)
+      .map(t => Changed("totals", null, cnt = Some(t.trips), cap = Some(t.cap))).toSeq
+
+  /** Every operator, when one changed; a null operator when none is left. */
+  private def operatorRows(all: Seq[(String, OperatorCounters)]): Seq[Changed] =
+    if (all.isEmpty) Seq(Changed("operator", null))
+    else all.map { case (op, v) =>
+      Changed("operator", op, cnt = Some(v.trips), cap = Some(v.cap).filter(_ => v.capped > 0))
+    }
+
+  private def windowRows(start: Long, c: ClosedWindow): Seq[Changed] = c.types.map(w =>
+    Changed("window", w.transport_type, cnt = Some(w.cnt), cap = w.cap, ts = new Timestamp(start)))
+
+  /** The rows that rebuild every result table from the state of the last
+    * committed batch of the query checkpointed at `dir`: for each key held,
+    * the rows a trigger emits for it when it was the zero value. Reads the
+    * state through Spark's state data source, one job per variable; over a
+    * checkpoint with no committed batch it returns nothing and runs no job.
+    * A checkpoint with no `closed` variable fails the read. */
+  def restore(spark: SparkSession, dir: String): Seq[Changed] = {
+    val commits = new Path(dir, "commits")
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(commits) || !fs.listStatus(commits).exists(_.getPath.getName.forall(_.isDigit)))
+      return Nil
+    // a state store reports to the session's state store coordinator, which
+    // Spark registers when it builds the session's stream manager: in a new
+    // session (a restarted job) that is only when a query starts
+    spark.streams
+    def read(name: String, cols: Column*) = spark.read.format("statestore")
+      .option("stateVarName", name).load(dir).select(cols: _*)
+    def map[K, V](name: String, k: Encoder[K], v: Encoder[V]): Seq[(K, V)] =
+      read(name, col("user_map_key.value"), col("user_map_value")).as(Encoders.tuple(k, v))
+        .collect().toSeq
+    def value[V](name: String, v: Encoder[V]): Option[V] =
+      read(name, col("value.*")).as(v).collect().headOption
+    val ops = map("operators", Encoders.STRING, OperatorEncoder)
+    map("routes", Encoders.STRING, RouteEncoder).flatMap { case (k, v) => routeRows(k, NoRoute, v) } ++
+      map("types", Encoders.STRING, TypeEncoder).flatMap { case (k, v) => typeRows(k, NoType, v) } ++
+      championRows("q3", None, value("q3", ChampionEncoder)) ++
+      championRows("q10", None, value("q10", ChampionEncoder)) ++
+      totalsRows(None, value("totals", TotalsEncoder)) ++
+      (if (ops.isEmpty) Nil else operatorRows(ops)) ++
+      map("closed", Encoders.scalaLong, ClosedEncoder).flatMap { case (k, v) => windowRows(k, v) }
+  }
 
   /** One trigger's view of a map state: each key is read once, and only
     * the keys whose value changed are written back (a key back at `zero`

@@ -18,13 +18,15 @@ import graft.operators.TransitQueries
   * rows, bounded by its key cardinality, and read as a local DataFrame; at
   * cluster scale each is a Delta/JDBC MERGE target and [[upsert]] is the
   * MERGE ON keys statement. Every table carries a version that moves only when its
-  * content changes, so a publisher can skip the tables it already sent.
+  * content changes, so a publisher can skip the tables it already sent. The
+  * store itself is not durable: a restarted job rebuilds it from the
+  * processor's state ([[TransitCounters.restore]]), and a new store's
+  * versions start over, so its first publish sends every table.
   */
 final class TableStore(spark: SparkSession) {
   /** Rows by key (by position for a table [[put]] whole), and a version
     * that moves each time the content changes. */
-  private final class Table(val schema: StructType) {
-    var keys: Seq[String] = Nil
+  private final class Table(val schema: StructType, keys: Seq[String]) {
     var rows = mutable.LinkedHashMap.empty[Seq[Any], Row]
     var version = 0L
     def key(r: Row, i: Int): Seq[Any] =
@@ -34,16 +36,13 @@ final class TableStore(spark: SparkSession) {
   }
   private val tables = mutable.Map.empty[String, Table]
 
-  /** Mutation hook (set by the owning job to track dirty tables for the
-    * durable-state commits; not fired by [[restore]]). */
-  private[streaming] var onMutate: String => Unit = _ => ()
-
   /** Run `f` on the named table, made empty when new; `f` says whether
     * the content moved. */
-  private def change(name: String, schema: StructType)(f: Table => Boolean): Unit = synchronized {
+  private def change(name: String, schema: StructType, keys: Seq[String] = Nil)(
+      f: Table => Boolean): Unit = synchronized {
     val isNew = !tables.contains(name)
-    val t = tables.getOrElseUpdate(name, new Table(schema))
-    if (f(t) || isNew) { t.version += 1; onMutate(name) }
+    val t = tables.getOrElseUpdate(name, new Table(schema, keys))
+    if (f(t) || isNew) t.version += 1
   }
 
   /** An empty table, unless one exists. */
@@ -52,15 +51,14 @@ final class TableStore(spark: SparkSession) {
   /** Replace the whole table (for tiny global results like argmax rows). */
   def put(name: String, schema: StructType, rows: Seq[Row]): Unit = change(name, schema) { t =>
     val moved = t.rows.values.toSeq != rows
-    if (moved) { t.keys = Nil; t.load(rows) }
+    if (moved) t.load(rows)
     moved
   }
 
   /** MERGE `updates` into the named table on `keys`: new keys insert, known
     * keys take the update's values. */
   def upsert(name: String, schema: StructType, keys: Seq[String], updates: Iterable[Row]): Unit =
-    change(name, schema) { t =>
-      if (t.keys != keys) { t.keys = keys; t.load(t.rows.values.toSeq) } // restored
+    change(name, schema, keys) { t =>
       updates.count(r => !t.rows.put(t.key(r, 0), r).contains(r)) > 0
     }
 
@@ -74,15 +72,6 @@ final class TableStore(spark: SparkSession) {
   def rows(name: String): Seq[Row] = synchronized(tables.get(name).toSeq.flatMap(_.rows.values))
   /** Moves each time the table's content changes; 0 before it exists. */
   def version(name: String): Long = synchronized(tables.get(name).fold(0L)(_.version))
-
-  /** Restore a persisted table. */
-  private[streaming] def restore(name: String, df: DataFrame): Unit = {
-    val rows = df.collect().toSeq
-    val t = new Table(df.schema)
-    t.load(rows)
-    t.version = 1L
-    synchronized { tables(name) = t }
-  }
 }
 
 /** The 13 reference queries as ONE Structured Streaming application —
@@ -119,12 +108,15 @@ final class TableStore(spark: SparkSession) {
   * sums, q12's capacity-per-type, `LeastOccupiedTransportTypeWindow.java:42-46`)
   * stay folds, faithful to the reference's adder-only aggregates.
   *
-  * Durability: Spark's checkpoint holds the processor's keyed state, open
-  * windows and watermark included. A replayed trigger re-runs from the
-  * previous state version and emits the same rows, and applying them again
-  * is idempotent. The result tables are snapshotted under `stateDir`: the
-  * processor emits only the rows that changed, so its state cannot rebuild
-  * them after a restart.
+  * Durability: Spark's checkpoint is the one durable record. It holds the
+  * processor's keyed state, open and closed windows and watermark included.
+  * A replayed trigger re-runs from the previous state version and emits the
+  * same rows, and applying them again is idempotent. A restart rebuilds the
+  * result tables from the state of the last committed batch
+  * ([[TransitCounters.restore]]) before the query resumes; a batch that
+  * had not committed is replayed by the query. A checkpoint written before
+  * the processor kept its closed windows (no `closed` state variable)
+  * fails at that restore.
   */
 object TransitStreamingJob {
   import graft.engine.Decode
@@ -136,12 +128,10 @@ object TransitStreamingJob {
     * JSON wire into the transit views, and assemble the 13-query job.
     * Transport (Kafka vs JSON-lines directory) is resolved by the adapter. */
   def fromTopics(spark: SparkSession, routesTopic: TopicRef,
-                 tripsTopic: TopicRef,
-                 stateDir: Option[String] = None): TransitStreamingJob =
+                 tripsTopic: TopicRef): TransitStreamingJob =
     new TransitStreamingJob(spark,
       Decode.routes(StreamAdapters.readStreamRaw(spark, routesTopic)),
-      Decode.trips(StreamAdapters.readStreamRaw(spark, tripsTopic)),
-      stateDir)
+      Decode.trips(StreamAdapters.readStreamRaw(spark, tripsTopic)))
 
   private val EventEncoder = Encoders.product[TransitEvent]
   private val ChangedEncoder = Encoders.product[Changed]
@@ -183,100 +173,10 @@ object TransitStreamingJob {
   private val mostFirst = Ordering.Tuple2(Ordering.Long, strings.reverse)
 }
 
-final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
-                                trips: DataFrame,
-                                stateDir: Option[String] = None) {
+final class TransitStreamingJob(spark: SparkSession, routes: DataFrame, trips: DataFrame) {
   import TransitStreamingJob._
 
   val store = new TableStore(spark)
-
-  // ---- durable result tables (the changelog-topic analog) -----------------
-  //
-  // With `stateDir` set, every trigger commits a VERSIONED parquet
-  // snapshot of the result tables it changed (`v<seq>/results/<name>` + an
-  // atomically-moved `_committed` marker). The runner upserts absolute
-  // values by key, so replaying a trigger against a restored snapshot is
-  // safe. At cluster scale the same protocol targets object storage /
-  // Delta; the snapshots are compact results (bounded by key cardinality),
-  // never raw events.
-
-  /** Monotone commit version — every trigger commits one. */
-  private var commitSeq: Long = -1L
-  /** path ("results/<n>") → version dir holding its latest data. The
-    * per-version `_manifest` persists this map, so a commit only writes the
-    * tables its trigger changed, while restore still sees the full picture. */
-  private val tableVersions = mutable.Map.empty[String, Long]
-  /** paths changed since the last commit */
-  private val dirty = mutable.Set.empty[String]
-  store.onMutate = n => dirty += s"results/$n"
-
-  private def subDirs(p: java.io.File): Seq[java.io.File] =
-    if (p.isDirectory) Option(p.listFiles).getOrElse(Array.empty).filter(_.isDirectory).toSeq
-    else Nil
-
-  // restore the last committed snapshot, if any
-  stateDir.foreach { d =>
-    val marker = new java.io.File(s"$d/_committed")
-    if (marker.isFile) {
-      val v = java.nio.file.Files.readString(marker.toPath).trim.toLong
-      commitSeq = v
-      val mf = new java.io.File(s"$d/v$v/_manifest")
-      // a committed version without a manifest would restore NOTHING while
-      // the sources resume their committed offsets — silent total loss of
-      // the results; refuse instead
-      require(mf.isFile,
-        s"committed state at $d/v$v has no _manifest — refusing to restore blindly")
-      java.nio.file.Files.readAllLines(mf.toPath).asScala
-        .filter(_.startsWith("results/")).foreach { line =>
-          val Array(p, ver) = line.split("\t")
-          tableVersions(p) = ver.toLong
-        }
-      tableVersions.foreach { case (p, ver) =>
-        store.restore(p.stripPrefix("results/"), spark.read.parquet(s"$d/v$ver/$p"))
-      }
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
-  /** Commit one version: the tables changed since the last commit under
-    * v<seq>, a full `_manifest` (path → owning version), then the marker
-    * (atomic move), then GC of versions no manifest entry references.
-    * Called (under the job monitor) at the end of every trigger.
-    * Crash safety: a version dir left behind by a crashed attempt at this
-    * seq (marker never moved) is cleared before reuse, so stale partial
-    * files can never be marker-committed. */
-  private def commitState(): Unit = stateDir.foreach { d =>
-    commitSeq += 1
-    val base = s"$d/v$commitSeq"
-    deleteRecursively(new java.io.File(base))
-    dirty.toSeq.sorted.foreach { p =>
-      store.get(p.stripPrefix("results/")).foreach { frame =>
-        frame.write.mode("overwrite").parquet(s"$base/$p")
-        tableVersions(p) = commitSeq
-      }
-    }
-    dirty.clear()
-    new java.io.File(base).mkdirs() // exists even if nothing was dirty
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/_manifest"),
-      tableVersions.toSeq.sorted.map { case (p, v) => s"$p\t$v" }.mkString("\n"))
-    val tmp = java.nio.file.Paths.get(s"$d/_committed.tmp")
-    java.nio.file.Files.writeString(tmp, commitSeq.toString)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(s"$d/_committed"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    val referenced = tableVersions.values.toSet + commitSeq
-    subDirs(new java.io.File(d))
-      .filter { f =>
-        val n = f.getName
-        n.startsWith("v") && n.drop(1).forall(_.isDigit) &&
-          n.drop(1).toLong < commitSeq && !referenced(n.drop(1).toLong)
-      }
-      .foreach(deleteRecursively)
-  }
 
   /** Routes and trips as one tagged stream, so a single processor sees both
     * sides of every aggregate⋈aggregate query in the same trigger. */
@@ -370,8 +270,13 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
   }
 
   /** Start the job's one streaming query, `union_runner`; caller owns
-    * awaiting/stopping it. */
+    * awaiting/stopping it. Over a checkpoint with a committed batch, the
+    * result tables are first rebuilt from the processor's state. */
   def startAll(checkpointRoot: String): Seq[StreamingQuery] = {
+    val checkpoint = s"$checkpointRoot/union"
+    val restored = TransitCounters.restore(spark, checkpoint)
+    if (restored.nonEmpty)
+      applyChanged(projected(spark.createDataset(restored)(ChangedEncoder).toDF()).collect().toSeq)
     // observe() is the reference's peek()/debug-tap analog (SURVEY §2.2):
     // per-trigger input metrics surfaced through StreamingQueryProgress
     // instead of side-effect printlns
@@ -387,13 +292,13 @@ final class TransitStreamingJob(spark: SparkSession, routes: DataFrame,
     // all counters sit under one grouping key: one state partition
     val union = StateStores.startOnRocksDb(spark, partitions = 1) {
       changed.writeStream.outputMode("append")
-        .option("checkpointLocation", s"$checkpointRoot/union")
+        .option("checkpointLocation", checkpoint)
         .queryName("union_runner")
         .foreachBatch { (b: DataFrame, _: Long) =>
-          // the trigger's one Spark job; its rows are applied and committed
-          // under the job monitor
+          // the trigger's one Spark job; its rows are applied under the
+          // job monitor
           val rows = projected(b).collect().toSeq
-          synchronized { applyChanged(rows); commitState() }
+          synchronized(applyChanged(rows))
         }
         .start()
     }

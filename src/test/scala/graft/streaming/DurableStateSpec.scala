@@ -14,7 +14,7 @@ import graft.sources.StreamAdapters
 import graft.sources.StreamAdapters.TopicRef
 
 /** Durability: kill the job between chunks, restart from the same
-  * checkpoints + state dir, and the final tables still equal the batch
+  * checkpoint, and the final tables still equal the batch
   * answers over ALL rows — counter state (open windows and watermark
   * included) survives, a replayed trigger (foreachBatch is at-least-once)
   * re-runs from the previous state version and re-applies the same
@@ -25,7 +25,6 @@ class DurableStateSpec extends SparkSpec {
   private lazy val root = Files.createTempDirectory("graft-durable-").toString
   private def ref(topic: String) = TopicRef(topic, fallbackDir = Some(root))
   private lazy val ckptDir = s"$root/ckpt"
-  private lazy val stateDir = s"$root/state"
 
   private val sentinel =
     Trip("t_sentinel", "r1", "z", "z", null, "P1", ts("2024-01-02 09:00:00"))
@@ -36,8 +35,7 @@ class DurableStateSpec extends SparkSpec {
     queries.foreach(_.processAllAvailable())
 
   private def startJob(): (TransitStreamingJob, Seq[StreamingQuery]) = {
-    val job = TransitStreamingJob.fromTopics(
-      spark, ref("Routes_topic"), ref("Trips_topic"), Some(stateDir))
+    val job = TransitStreamingJob.fromTopics(spark, ref("Routes_topic"), ref("Trips_topic"))
     (job, job.startAll(ckptDir))
   }
 
@@ -98,8 +96,8 @@ class DurableStateSpec extends SparkSpec {
           Seq("route_id"), Seq("ts")))
     } finally q2s.foreach(_.stop())
 
-    // -- incarnation 3: restart with NO new data — restore must be
-    // idempotent across the manifest (tables spread over many versions)
+    // -- incarnation 3: restart with NO new data — the tables rebuilt from
+    // the state equal the ones the triggers built
     val (job3, q3s) = startJob()
     try {
       val before = job3.store("q9_total_passengers").collect()(0).getLong(0)

@@ -27,7 +27,9 @@ import graft.sources.StreamAdapters.TopicRef
   * sized with Spark's default 200 shuffle partitions. A trigger of the job
   * `MainApp.wire` starts writes its offset, commit and source logs and its
   * state changelog without Hadoop's local file system. Publishing the
-  * result tables to file topics runs no Spark job. */
+  * result tables to file topics runs no Spark job. Wiring the job over a
+  * fresh checkpoint reads no state: no Spark job runs before its first
+  * trigger. */
 class UnionRunnerCostSpec extends SparkSpec {
 
   /** Spark jobs per (streaming query id, batch id) and in all, and a
@@ -224,6 +226,24 @@ class UnionRunnerCostSpec extends SparkSpec {
     info(s"files Hadoop's local file system wrote: ${hadoopWrites.toSeq.sorted.mkString(" ")}")
     hadoopWrites.filter(p => p.contains(".changelog") ||
       Seq("offsets/", "commits/", "sources/").exists(p.startsWith)) shouldBe empty
+  }
+
+  test("wire over a fresh checkpoint runs no Spark job before the first trigger") {
+    val root = Files.createTempDirectory("graft-fresh-").toString
+    val conf = MainApp.Conf(topicsDir = Some(root), checkpoint = s"$root/ckpt")
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      drain(counter)
+      val before = counter.all.get
+      val (_, queries, _) = MainApp.wire(spark, conf)
+      try {
+        queries.foreach(_.processAllAvailable())
+        queries.flatMap(_.recentProgress).filter(_.numInputRows > 0) shouldBe empty
+      } finally queries.foreach(_.stop())
+      drain(counter)
+      counter.all.get - before shouldBe 0
+    } finally spark.sparkContext.removeSparkListener(counter)
   }
 
   test("publishing the result tables to file topics runs no Spark job") {
